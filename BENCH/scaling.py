@@ -112,17 +112,9 @@ def run_one(cores: int, binlog_dir: str, n_events: int) -> dict:
         # few, large micro-batches: the scaling criterion measures the
         # merge-apply compute, not per-trigger fixed latency
         max_files_per_trigger=max(SHARDS * SEGMENTS // BATCHES, 1),
-        shuffle_partitions=cores * 2,
         # stream-granularity metrics ride the merge's own scan via
         # Observation — zero extra jobs per batch
         metrics_granularity="stream",
-        # SCALING_DICT=1 → role/tool cross the bulk merge's bucket
-        # exchange as int codes (narrower UnsafeRows on the
-        # bandwidth-bound agg+write stage; BENCH/ab_shuffle.py A/B)
-        shuffle_dict_cols=(
-            ("role", "tool")
-            if os.environ.get("SCALING_DICT", "0") == "1" else ()
-        ),
         # bulk batches take the union+aggregate shuffle path (a 1.5M-row
         # broadcast would be ~300MB; the shuffle path is the honest
         # plan for batches this size and scales with cores)

@@ -85,10 +85,6 @@ def merge_apply_throughput(
             LWW_COLS, n_buckets=64, merge_strategy=strategy,
         )
         for i, b in enumerate(batches):
-            # plain shuffle: these 0.8M-row batches sit below the
-            # dictionary lever's 8M-row floor, where the dictionary
-            # scan cannot amortize (measured −26% if forced; the lever
-            # pays on 13M+-row bulk replays — BENCH/ab_shuffle.py)
             table.merge(b, "bench", i, broadcast_threshold=300_000)
         if strategy == "merge-on-read":
             # a MOR replay isn't done until readers are scan-only again

@@ -40,8 +40,6 @@ def parse_args(argv=None):
     ap.add_argument("--n-shards", type=int, default=8)
     ap.add_argument("--max-files-per-trigger", type=int, default=64)
     ap.add_argument("--trigger-interval-ms", type=int, default=1000)
-    ap.add_argument("--salt-buckets", type=int, default=8)
-    ap.add_argument("--shuffle-partitions", type=int, default=64)
     ap.add_argument("--metrics-granularity", default="shard",
                     choices=["shard", "stream", "global"])
     ap.add_argument("--metrics-level", default="summary",
@@ -97,8 +95,6 @@ def main(argv=None) -> None:
         n_shards=args.n_shards,
         max_files_per_trigger=args.max_files_per_trigger,
         trigger_interval_ms=args.trigger_interval_ms,
-        salt_buckets=args.salt_buckets,
-        shuffle_partitions=args.shuffle_partitions,
         metrics_granularity=args.metrics_granularity,
         metrics_level=args.metrics_level,
         metrics_buffer_secs=args.metrics_buffer_secs,

@@ -10,7 +10,7 @@ Processor.java:289-316).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field, fields
+from dataclasses import dataclass, fields
 
 
 class ConfigError(ValueError):
@@ -55,18 +55,11 @@ class EngineConfig:
     # --- target table (≙ producer properties, APP:30-189) ---
     table_path: str = ""
     n_buckets: int = 32  # key-hash buckets ≙ shards on the put side
-    target_file_bytes: int = 128 * 1024 * 1024  # ≙ KPL aggregation APP:40-68
     merge_strategy: str = "copy-on-write"
     # deduped batches at or below this row count merge via the
     # broadcast copy-on-write path (big side never shuffled); larger
     # batches fall back to union+aggregate (one shuffle, AQE-skew-safe)
     merge_broadcast_threshold: int = 2_000_000
-    # low-cardinality string payload columns to dictionary-encode as
-    # int codes across the bulk merge's bucket exchange (decoded after
-    # the LWW agg, before the write) — narrower shuffle rows on the
-    # agg+write stage, the named scaling hotspot (BENCH/BASELINE.md).
-    # Columns above 256 distinct values per batch fall back to plain.
-    shuffle_dict_cols: tuple = ()
     commit_retries: int = 4  # ≙ KCL/KPL retry policy ACP:181-188
     commit_retry_backoff_ms: int = 500  # ≙ task backoff ACP:181-188
 
@@ -75,10 +68,6 @@ class EngineConfig:
     # applied PUT:181): the micro-batch is paced AFTER its commit so
     # downstream consumers see at most this sustained apply rate.
     put_rate_limit_events_per_sec: int = 0
-
-    # --- skew handling (≙ random-key load spreading PUT:264-269) ---
-    salt_buckets: int = 8
-    hot_key_threshold: int = 1_000_000  # events/key/batch before salting
 
     # --- routing / dead letter (≙ REL_FAILURE PUT:307-326) ---
     dead_letter_path: str = ""
@@ -106,10 +95,6 @@ class EngineConfig:
     # DLQ pass: a lost race never fails the already-committed batch.
     maintenance_every_n_batches: int = 64
     maintenance_keep_last: int = 16
-
-    # --- misc ---
-    shuffle_partitions: int = 32
-    extra_spark_conf: dict = field(default_factory=dict)
 
     def validate(self) -> "EngineConfig":
         """Range + cross-field validation; returns self for chaining."""
@@ -142,10 +127,8 @@ class EngineConfig:
             ("max_bytes_per_trigger", 0, 1 << 50),
             ("n_shards", 1, 10_000),
             ("n_buckets", 1, 1_000_000),
-            ("salt_buckets", 1, 65_536),
             ("commit_retries", 0, 100),
             ("put_rate_limit_events_per_sec", 0, 1_000_000_000),
-            ("shuffle_partitions", 1, 1_000_000),
             ("trigger_interval_ms", 0, 86_400_000),
             ("maintenance_every_n_batches", 0, 1_000_000),
             ("maintenance_keep_last", 1, 100_000),
@@ -156,10 +139,6 @@ class EngineConfig:
         # cross-field: dead-letter routing needs a quarantine path,
         # unless the pipeline is configured to fail the batch instead
         # (≙ access-key/secret-key must be set together, ACP:292-298)
-        if not isinstance(self.shuffle_dict_cols, (tuple, list)) or any(
-            not isinstance(c, str) for c in self.shuffle_dict_cols
-        ):
-            raise ConfigError("shuffle_dict_cols must be a tuple of column names")
         if not self.fail_on_dead_letter and not self.dead_letter_path:
             raise ConfigError(
                 "dead_letter_path required when fail_on_dead_letter=False"

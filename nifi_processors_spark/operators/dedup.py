@@ -24,10 +24,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _winner_agg(df: DataFrame, key_cols: list[str], order_cols: list[str]) -> DataFrame:
-    """groupBy(key).max_by(struct(others), struct(order)) — partial-agg
-    friendly (one-pass, map-side combine), unlike a row_number window
-    which needs a full sort per partition."""
+def lww_winners(df: DataFrame, key_cols: list[str], order_cols: list[str]) -> DataFrame:
+    """Per key, the row with max ``order_cols`` — the engine's ONE LWW
+    winner selection (table merge, merge-on-read reads, compaction and
+    migration all call it). One groupBy(key) aggregate of max_by over
+    the struct of the other columns, ordered by the struct of
+    ``order_cols`` — partial-agg friendly (one-pass, map-side combine),
+    unlike a row_number window which needs a full sort per partition.
+    Output columns: ``key_cols``, then every other column of ``df`` in
+    its original order."""
     others = [c for c in df.columns if c not in key_cols]
     out = df.groupBy(*key_cols).agg(
         F.expr(
@@ -46,7 +51,7 @@ def lww_dedup(
 ) -> DataFrame:
     """Keep, per key, the event with max (ts, seq): max-ts last-writer
     wins, per-shard sequence breaks ties (north rule)."""
-    return _winner_agg(df, list(key_cols), list(order_cols))
+    return lww_winners(df, list(key_cols), list(order_cols))
 
 
 def salted_lww_dedup(
@@ -61,8 +66,8 @@ def salted_lww_dedup(
     salted = df.withColumn(
         "_salt", F.pmod(F.xxhash64(F.col(order_cols[-1])), F.lit(salt_buckets))
     )
-    partial = _winner_agg(salted, list(key_cols) + ["_salt"], list(order_cols))
-    return _winner_agg(partial.drop("_salt"), list(key_cols), list(order_cols))
+    partial = lww_winners(salted, list(key_cols) + ["_salt"], list(order_cols))
+    return lww_winners(partial.drop("_salt"), list(key_cols), list(order_cols))
 
 
 def dedup_exact(df: DataFrame, identity_cols: list[str] | None = None) -> DataFrame:

@@ -41,6 +41,27 @@ def _ram_local_dir(min_free_bytes: int = 16 * 1024**3) -> str | None:
     return path
 
 
+def driver_memory(meminfo_path: str = "/proc/meminfo") -> str:
+    """``spark.driver.memory``: ``SPARK_DRIVER_MEMORY`` if set, else
+    half of physical RAM (``MemTotal``) capped at 16g. A fixed 16g heap
+    on a 15 GB host without swap lets the driver JVM grow until the
+    kernel OOM-kills it; half of RAM leaves room for the Python workers
+    and the page cache the parquet scans rely on. 16g when MemTotal
+    cannot be read."""
+    override = os.environ.get("SPARK_DRIVER_MEMORY")
+    if override:
+        return override
+    cap_mb = 16 * 1024
+    try:
+        with open(meminfo_path) as f:
+            total_kb = next(
+                int(line.split()[1]) for line in f if line.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration):
+        return f"{cap_mb}m"
+    return f"{min(cap_mb, total_kb // 2048)}m"
+
+
 def get_spark(
     app_name: str = "nifi_processors_spark",
     cores: int | None = None,
@@ -73,7 +94,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "snappy")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", driver_memory())
         # Parquet row-group size for OUR writes (binlogs, table
         # commits). A parquet row group is the scan-parallelism unit —
         # one row group can only ever be read by one task — and the

@@ -312,7 +312,6 @@ class CdcPipeline:
             retries=cfg.commit_retries,
             backoff_ms=cfg.commit_retry_backoff_ms,
             upper_rows_hint=hint,
-            dict_encode_cols=cfg.shuffle_dict_cols,
         )
 
         # a watermark-skipped merge ran no job over this batch, so the

@@ -44,10 +44,13 @@ import shutil
 import time
 import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from nifi_processors_spark.operators.dedup import lww_winners
 from nifi_processors_spark.schema import (
     LINEAGE_SCHEMA,
     SchemaEvolutionError,
@@ -59,6 +62,19 @@ INTERNAL_COLS = ["_seq", "_deleted"]
 
 class ConcurrentCommitError(RuntimeError):
     pass
+
+
+def _lww_order(manifest: dict) -> list[str]:
+    """LWW ordering columns from the manifest — a table created with
+    custom lww_cols merges by ITS order. The stream's `seq` is stored
+    as the internal `_seq`; `_seq` is always the final tie-break (total
+    order even for identical lww values)."""
+    order = [
+        ("_seq" if c == "seq" else c) for c in (manifest.get("lww_cols") or ["ts"])
+    ]
+    if "_seq" not in order:
+        order.append("_seq")
+    return order
 
 
 class TransactionalTable:
@@ -167,6 +183,61 @@ class TransactionalTable:
         finally:
             os.unlink(tmp)
 
+    def _commit(self, manifest: dict, cleanup: list[str]) -> dict:
+        """The one commit path of every writer: publish ``manifest``
+        atomically, or on a lost version race remove this attempt's
+        staged dirs (``cleanup``, table-relative) and re-raise. Safe:
+        staged dirs are uniquely named per attempt (``_staging_rel``),
+        so only THIS loser's files are removed, never the winner's."""
+        try:
+            self._commit_manifest(manifest)
+        except ConcurrentCommitError:
+            self._discard(cleanup)
+            raise
+        return {"skipped": False, "version": manifest["version"], **manifest["stats"]}
+
+    def _discard(self, rels: list[str]) -> None:
+        for rel in rels:
+            shutil.rmtree(os.path.join(self.path, rel), ignore_errors=True)
+
+    @staticmethod
+    def _staging_rel(sub: str, version: int, kind: str = "commit") -> str:
+        """Unique per-attempt dir: two writers racing the same version
+        never share a data path (errorifexists is check-then-write, not
+        atomic), a writer's os.walk can only see its own files, and a
+        loser's cleanup rmtree cannot touch data the winner's committed
+        manifest references — the manifest link alone decides the
+        winner."""
+        return os.path.join(sub, f"{kind}-{version:012d}-{uuid.uuid4().hex[:8]}")
+
+    @staticmethod
+    def _retrying(attempt_fn, retries: int, backoff_ms: int) -> dict:
+        """Optimistic-concurrency loop shared by ``merge`` and
+        ``append``: after a lost version race, re-run
+        ``attempt_fn(history)`` against the new table state with
+        exponential backoff. ``retries``/``backoff_ms`` come from
+        EngineConfig (commit_retries / commit_retry_backoff_ms ≙ the
+        reference's retry policy, ACP:181-188). Each contended attempt
+        is recorded in ``history``, which the committed stats carry as
+        ``attempt_history`` — the analogue of the producer's
+        per-attempt error attributes (PUT:343-364)."""
+        history: list[dict] = []
+        for attempt in range(retries + 1):
+            try:
+                return attempt_fn(history)
+            except ConcurrentCommitError as e:
+                if attempt == retries:
+                    raise
+                delay_ms = backoff_ms * (2**attempt)
+                history.append({
+                    "attempt": attempt + 1,
+                    "error": type(e).__name__,
+                    "message": str(e),
+                    "backoff_ms": delay_ms,
+                })
+                time.sleep(delay_ms / 1000.0)
+        raise AssertionError("unreachable")
+
     # --------------------------------------------------------- schema
 
     def table_schema(self, version: int | None = None) -> T.StructType:
@@ -212,27 +283,7 @@ class TransactionalTable:
         # Base-only snapshots (copy-on-write, or post-compaction) skip
         # this entirely — reads stay scan-only.
         if any(f.get("delta") for f in m["files"]):
-            key_cols = m["key_cols"]
-            lww_order = [
-                ("_seq" if c == "seq" else c)
-                for c in (m.get("lww_cols") or ["ts"])
-            ]
-            if "_seq" not in lww_order:
-                lww_order.append("_seq")
-            non_key = [c for c in df.columns if c not in key_cols]
-            df = (
-                df.groupBy(*key_cols)
-                .agg(
-                    F.expr(
-                        "max_by(struct({cols}), struct({ord}))".format(
-                            cols=", ".join(non_key), ord=", ".join(lww_order)
-                        )
-                    ).alias("_w")
-                )
-                .select(
-                    *key_cols, *[F.col(f"_w.{c}").alias(c) for c in non_key]
-                )
-            )
+            df = lww_winners(df, m["key_cols"], _lww_order(m))
         if not include_deleted:
             df = df.filter(~F.col("_deleted"))
         if not include_internal:
@@ -318,33 +369,14 @@ class TransactionalTable:
         return F.pmod(F.xxhash64(*exprs), F.lit(n_buckets)).cast("int")
 
     @staticmethod
-    def _read_footer(abs_path: str):
-        """One footer read shared by the per-file stat helpers in the
-        commit loops (they each accept it as ``md``); None on failure —
-        each helper then degrades to its own unavailable-stats path."""
+    def _file_key_stats(md, key_col: str):
+        """(min, max) of ``key_col`` from a written file's parquet footer
+        (``md``: its FileMetaData) statistics — driver-side, a few ms,
+        no Spark job. Returns (None, None) when stats are unavailable
+        (never prune then). At cluster scale these stats would be
+        collected executor-side during the write (as Iceberg does); the
+        manifest format is the same either way."""
         try:
-            import pyarrow.parquet as _pq
-
-            return _pq.read_metadata(abs_path)
-        except Exception:
-            return None
-
-    @staticmethod
-    def _file_key_stats(abs_path: str, key_col: str, md=None):
-        """(min, max) of ``key_col`` from the file's parquet footer
-        statistics — driver-side, a few ms, no Spark job. Returns
-        (None, None) when stats are unavailable (never prune then).
-        At cluster scale these stats would be collected executor-side
-        during the write (as Iceberg does); the manifest format is the
-        same either way. ``md``: a pre-read FileMetaData, so commit
-        loops reading several stats per file open the footer once."""
-        try:
-            import pyarrow.parquet as _pq
-
-            # read_metadata opens and closes the file per call —
-            # ParquetFile would leave the handle to GC
-            if md is None:
-                md = _pq.read_metadata(abs_path)
             idx = {
                 md.schema.column(i).name: i for i in range(md.num_columns)
             }.get(key_col)
@@ -377,7 +409,7 @@ class TransactionalTable:
             return None, None
 
     @staticmethod
-    def _file_tombstone_flag(abs_path: str, md=None) -> bool | None:
+    def _file_tombstone_flag(md) -> bool | None:
         """Whether the file holds any delete tombstone, from the
         parquet footer's ``_deleted`` column statistics (driver-side,
         no job — same pattern as ``_file_key_stats``). False only when
@@ -390,10 +422,6 @@ class TransactionalTable:
         arm rewrote 100%% of the table when 2%% of buckets held
         tombstones)."""
         try:
-            import pyarrow.parquet as _pq
-
-            if md is None:
-                md = _pq.read_metadata(abs_path)
             idx = {
                 md.schema.column(i).name: i for i in range(md.num_columns)
             }.get("_deleted")
@@ -414,6 +442,40 @@ class TransactionalTable:
         except Exception:
             return None
 
+    def _write_bucketed(
+        self, df: DataFrame, version: int, key_col: str, delta: bool = False
+    ) -> tuple[str, list[dict]]:
+        """The one bucketed write: ``df`` (carrying ``_bucket``) lands
+        as ``_bucket=<b>`` parquet dirs under a fresh staging dir, and
+        each written file becomes a manifest entry with its bucket,
+        leading-key range and tombstone flag from ONE footer read.
+        Returns (table-relative staging dir, file entries)."""
+        commit_rel = self._staging_rel("data", version)
+        commit_dir = os.path.join(self.path, commit_rel)
+        df.write.partitionBy("_bucket").mode("errorifexists").parquet(commit_dir)
+        entries = []
+        for root, _dirs, files in os.walk(commit_dir):
+            for fn in files:
+                if fn.endswith(".parquet"):
+                    abs_p = os.path.join(root, fn)
+                    # read_metadata opens and closes the file per call —
+                    # ParquetFile would leave the handle to GC
+                    md = pq.read_metadata(abs_p)
+                    entry = {
+                        "path": os.path.relpath(abs_p, self.path),
+                        "bucket": int(root.rsplit("_bucket=", 1)[1]),
+                    }
+                    kmin, kmax = self._file_key_stats(md, key_col)
+                    if kmin is not None:
+                        entry["min_key"], entry["max_key"] = kmin, kmax
+                    if delta:
+                        entry["delta"] = True
+                    tflag = self._file_tombstone_flag(md)
+                    if tflag is not None:
+                        entry["tombstones"] = tflag
+                    entries.append(entry)
+        return commit_rel, entries
+
     @staticmethod
     def footer_row_estimate(df: DataFrame) -> int | None:
         """Exact row count from parquet footers for bare-scan,
@@ -421,8 +483,6 @@ class TransactionalTable:
         Returns None when the plan filters/expands rows (footer counts
         would overcount) or the inputs aren't parquet."""
         try:
-            import pyarrow.parquet as _pq
-
             paths = [
                 p[7:] if p.startswith("file://") else p for p in df.inputFiles()
             ]
@@ -441,11 +501,11 @@ class TransactionalTable:
                     with ThreadPoolExecutor(max_workers=16) as ex:
                         return sum(
                             ex.map(
-                                lambda p: _pq.read_metadata(p).num_rows,
+                                lambda p: pq.read_metadata(p).num_rows,
                                 paths,
                             )
                         )
-                return sum(_pq.read_metadata(p).num_rows for p in paths)
+                return sum(pq.read_metadata(p).num_rows for p in paths)
         except Exception:
             pass
         return None
@@ -466,70 +526,6 @@ class TransactionalTable:
                 return False
         return True
 
-    def _shuffle_dict_codecs(
-        self, df: DataFrame, cand_cols, lww_order, key_cols, cap: int = 256
-    ):
-        """Per-batch dictionary codecs for low-cardinality STRING
-        payload columns: narrower UnsafeRows across the bulk merge's
-        bucket exchange (the agg+write stage is bandwidth-bound at high
-        core counts — BENCH/BASELINE.md §2). One column-pruned
-        collect_set job builds the dictionaries; sort_array makes codes
-        deterministic. A column exceeding ``cap`` distinct values (or
-        participating in keys / LWW ordering) passes through unchanged.
-        Returns (encode, decode, encoded_col_names)."""
-        strings = {
-            f.name for f in df.schema.fields
-            if isinstance(f.dataType, T.StringType)
-        }
-        cols = [
-            c for c in (cand_cols or [])
-            if c in strings and c not in key_cols and c not in lww_order
-        ]
-        specs: dict[str, list] = {}
-        if cols:
-            row = df.agg(
-                *[
-                    F.slice(
-                        F.sort_array(F.collect_set(F.col(c))), 1, cap + 1
-                    ).alias(c)
-                    for c in cols
-                ]
-            ).collect()[0]
-            for c in cols:
-                vals = row[c]
-                if vals and len(vals) <= cap:
-                    specs[c] = list(vals)
-
-        if not specs:
-            return (lambda d: d), (lambda d: d), []
-
-        def encode(d: DataFrame) -> DataFrame:
-            for c, vals in specs.items():
-                m = F.create_map(
-                    *[x for i, v in enumerate(vals) for x in (F.lit(v), F.lit(i))]
-                )
-                # null value → null code; every non-null value is in
-                # the dict by construction (built from this same frame)
-                d = d.withColumn(c, F.element_at(m, F.col(c)).cast("int"))
-            return d
-
-        def decode(d: DataFrame) -> DataFrame:
-            for c, vals in specs.items():
-                arr = F.array(*[F.lit(v) for v in vals])
-                # explicit null guard: element_at(arr, NULL) does NOT
-                # return NULL (observed returning an arbitrary element
-                # on Spark 4.x) — a null code must decode to null
-                d = d.withColumn(
-                    c,
-                    F.when(
-                        F.col(c).isNotNull(),
-                        F.element_at(arr, F.col(c) + F.lit(1)),
-                    ),
-                )
-            return d
-
-        return encode, decode, sorted(specs)
-
     def merge(
         self,
         batch_df: DataFrame,
@@ -542,8 +538,6 @@ class TransactionalTable:
         retries: int = 4,
         backoff_ms: int = 50,
         upper_rows_hint: int | None = None,
-        dict_encode_cols=None,
-        dict_min_rows: int = 8_000_000,
     ) -> dict:
         """Apply one micro-batch of change events (op/conv_id/turn_idx/
         payload/ts/seq) with LWW semantics. Idempotent per
@@ -551,39 +545,20 @@ class TransactionalTable:
         committed watermark; a replayed-from-scratch stream converges
         anyway because the merge itself is LWW-idempotent.
 
-        ``retries``/``backoff_ms`` come from EngineConfig
-        (commit_retries / commit_retry_backoff_ms ≙ the reference's
-        retry policy, ACP:181-188). Each contended attempt is recorded
-        in the committed stats' ``attempt_history`` — the analogue of
-        the producer's per-attempt error attributes (PUT:343-364).
+        A lost commit race is retried against the new table state
+        (``_retrying``); the committed stats carry ``attempt_history``.
         """
-        history: list[dict] = []
-        for attempt in range(retries + 1):
-            try:
-                return self._merge_once(
-                    batch_df, source_id, batch_id, lineage_df, extra_stats,
-                    broadcast_threshold, lineage_fn, attempt_history=history,
-                    upper_rows_hint=upper_rows_hint,
-                    dict_encode_cols=dict_encode_cols,
-                    dict_min_rows=dict_min_rows,
-                )
-            except ConcurrentCommitError as e:
-                if attempt == retries:
-                    raise
-                delay_ms = backoff_ms * (2**attempt)
-                history.append({
-                    "attempt": attempt + 1,
-                    "error": type(e).__name__,
-                    "message": str(e),
-                    "backoff_ms": delay_ms,
-                })
-                time.sleep(delay_ms / 1000.0)
-        raise AssertionError("unreachable")
+        return self._retrying(
+            lambda history: self._merge_once(
+                batch_df, source_id, batch_id, lineage_df, extra_stats,
+                broadcast_threshold, lineage_fn, history, upper_rows_hint,
+            ),
+            retries, backoff_ms,
+        )
 
     def _merge_once(
         self, batch_df, source_id, batch_id, lineage_df, extra_stats,
-        broadcast_threshold=2_000_000, lineage_fn=None, attempt_history=None,
-        upper_rows_hint=None, dict_encode_cols=None, dict_min_rows=8_000_000,
+        broadcast_threshold, lineage_fn, attempt_history, upper_rows_hint,
     ):
         m = self.manifest()
         wm = m["watermarks"].get(source_id)
@@ -592,15 +567,7 @@ class TransactionalTable:
 
         key_cols = m["key_cols"]
         n_buckets = m["n_buckets"]
-        # LWW ordering columns from the manifest — a table created with
-        # custom lww_cols merges by ITS order. The stream's `seq` is
-        # stored as the internal `_seq`; `_seq` is always the final
-        # tie-break (total order even for identical lww values).
-        lww_order = [
-            ("_seq" if c == "seq" else c) for c in (m.get("lww_cols") or ["ts"])
-        ]
-        if "_seq" not in lww_order:
-            lww_order.append("_seq")
+        lww_order = _lww_order(m)
         cur_schema = T.StructType.fromJson(json.loads(m["schema"]))
 
         # --- schema evolution: union-by-name with the batch's payload
@@ -644,24 +611,9 @@ class TransactionalTable:
         up = up.withColumn("_bucket", self._bucket_expr(n_buckets, bcols))
 
         def _lww_agg(df):
-            """Intra-batch/merge LWW: one winner per key by the
-            manifest's (lww_cols, _seq) order. max_by aggregation
-            (partial/map-side combine) rather than a row_number window
-            — no per-partition sort, skew-tolerant."""
-            return (
-                df.groupBy("_bucket", *key_cols)
-                .agg(
-                    F.expr(
-                        "max_by(struct({cols}), struct({ord}))".format(
-                            cols=", ".join(non_key), ord=", ".join(lww_order)
-                        )
-                    ).alias("_w")
-                )
-                .select(
-                    "_bucket", *key_cols,
-                    *[F.col(f"_w.{c}").alias(c) for c in non_key],
-                )
-            )
+            """Intra-batch/merge LWW: one winner per key (bucket ⊂ key,
+            so grouping on it too keeps the output clustered)."""
+            return lww_winners(df, ["_bucket", *key_cols], lww_order)
 
         # --- size the batch WITHOUT a job when possible: for
         # file-backed batches (the streaming source) the input file
@@ -764,16 +716,6 @@ class TransactionalTable:
             ).withColumn("_bucket", self._bucket_expr(n_buckets, bcols))
 
         version = m["version"] + 1
-        # unique per-attempt dir: two writers racing the same version
-        # never share a data path (errorifexists is check-then-write,
-        # not atomic), this writer's os.walk can only see its own
-        # files, and a loser's cleanup rmtree cannot touch data the
-        # winner's committed manifest references — the manifest link
-        # alone decides the winner.
-        commit_rel = os.path.join(
-            "data", f"commit-{version:012d}-{uuid.uuid4().hex[:8]}"
-        )
-        commit_dir = os.path.join(self.path, commit_rel)
         out_cols = ["_bucket", *payload_cols, *INTERNAL_COLS]
 
         # self-heal file fragmentation: once the affected buckets
@@ -781,21 +723,6 @@ class TransactionalTable:
         # emits exactly one file chain per bucket) instead of
         # stacking more copy-on-write generations
         fragmented = touched and len(touched) > 3 * len(affected)
-
-        # dictionary-encode configured low-cardinality payload columns
-        # across the bucket exchange (both exchange-bearing paths);
-        # identity codecs when unconfigured / high-cardinality. The
-        # lever pays only on clearly-bulk replays whose exchange is
-        # bandwidth-bound: measured +3% at 13.4M-row batches on 2-8
-        # pinned cores, but −26% at 0.8M-row batches on 32 cores where
-        # the dictionary scan can't amortize (BENCH/ab_shuffle.py vs
-        # the bench merge A/B) — hence the explicit row floor on top
-        # of the bulk-path threshold. broadcast-cow has no exchange at
-        # all and never encodes.
-        dict_active = bool(dict_encode_cols) and n_batch > max(
-            broadcast_threshold, dict_min_rows
-        )
-        enc_cols: list[str] = []
 
         if strategy == "merge-on-read":
             # --- delta-append (write-optimized): LWW-dedupe the batch
@@ -806,22 +733,7 @@ class TransactionalTable:
             parts = max(len(affected), 1)
             if n_batch <= broadcast_threshold:
                 parts = max(1, min(parts, -(-n_batch // 500_000)))
-            src = up
-            dec = None
-            if dict_active:
-                enc, dec, enc_cols = self._shuffle_dict_codecs(
-                    up, dict_encode_cols, lww_order, key_cols
-                )
-                src = enc(up)
-            merged = _lww_agg(src.repartition(parts, "_bucket"))
-            if dec is not None:
-                merged = dec(merged)
-            (
-                merged.select(*out_cols)
-                .write.partitionBy("_bucket")
-                .mode("errorifexists")
-                .parquet(commit_dir)
-            )
+            out = _lww_agg(up.repartition(parts, "_bucket")).select(*out_cols)
         elif existing is not None and n_batch <= broadcast_threshold and not fragmented:
             # --- small-batch path (the steady-state CDC case):
             # broadcast the deduped batch against the affected
@@ -888,10 +800,8 @@ class TransactionalTable:
             # less fragmentation per commit.
             out = cow.unionByName(inserts)
             try:
-                import pyarrow.parquet as _pq2
-
                 touched_rows = sum(
-                    _pq2.read_metadata(
+                    pq.read_metadata(
                         os.path.join(self.path, f["path"])
                     ).num_rows
                     for f in touched
@@ -902,9 +812,6 @@ class TransactionalTable:
                 total = touched_rows + n_batch
                 if total <= 4_000_000:
                     out = out.coalesce(max(1, -(-total // 500_000)))
-            out.write.partitionBy("_bucket").mode("errorifexists").parquet(
-                commit_dir
-            )
         else:
             # --- big-batch path (backfill / bulk replay): union the
             # deduped batch with the affected buckets and take the
@@ -930,41 +837,10 @@ class TransactionalTable:
             parts = max(len(affected), 1)
             if n_batch <= broadcast_threshold:
                 parts = max(1, min(parts, -(-n_batch // 500_000)))
-            dec = None
-            if dict_active:
-                # dictionaries build over the UNION (batch ∪ touched
-                # table rows) so every value on either side encodes
-                enc, dec, enc_cols = self._shuffle_dict_codecs(
-                    unioned, dict_encode_cols, lww_order, key_cols
-                )
-                unioned = enc(unioned)
-            merged = _lww_agg(unioned.repartition(parts, "_bucket"))
-            if dec is not None:
-                merged = dec(merged)
-            merged = merged.select(*out_cols)
-            (
-                merged.write.partitionBy("_bucket")
-                .mode("errorifexists")
-                .parquet(commit_dir)
-            )
-        new_files = []
-        for root, _dirs, files in os.walk(commit_dir):
-            for fn in files:
-                if fn.endswith(".parquet"):
-                    abs_p = os.path.join(root, fn)
-                    rel = os.path.relpath(abs_p, self.path)
-                    bucket = int(root.rsplit("_bucket=", 1)[1])
-                    md = self._read_footer(abs_p)
-                    kmin, kmax = self._file_key_stats(abs_p, key0, md=md)
-                    entry = {"path": rel, "bucket": bucket}
-                    if kmin is not None:
-                        entry["min_key"], entry["max_key"] = kmin, kmax
-                    if strategy == "merge-on-read":
-                        entry["delta"] = True
-                    tflag = self._file_tombstone_flag(abs_p, md=md)
-                    if tflag is not None:
-                        entry["tombstones"] = tflag
-                    new_files.append(entry)
+            out = _lww_agg(unioned.repartition(parts, "_bucket")).select(*out_cols)
+        commit_rel, new_files = self._write_bucketed(
+            out, version, key0, delta=strategy == "merge-on-read"
+        )
 
         # --- lineage files (atomic with the data commit). lineage_fn
         # runs AFTER the data write (so Observation metrics that piggy-
@@ -973,28 +849,22 @@ class TransactionalTable:
         # raises (e.g. fail-on-dead-letter) aborts the commit with
         # nothing made visible; this attempt's data dir is removed.
         lineage_files = list(m.get("lineage_files", []))
-        lin_rel = None
+        staged = [commit_rel]
         try:
             if lineage_fn is not None and lineage_df is None:
                 lineage_df = lineage_fn()
             if lineage_df is not None:
-                lin_rel = os.path.join(
-                    "lineage", f"commit-{version:012d}-{uuid.uuid4().hex[:8]}"
-                )
+                lin_rel = self._staging_rel("lineage", version)
+                staged.append(lin_rel)
                 if isinstance(lineage_df, DataFrame):
                     lineage_df.coalesce(1).write.mode("errorifexists").parquet(
                         os.path.join(self.path, lin_rel)
                     )
-                    for root, _dirs, files in os.walk(
-                        os.path.join(self.path, lin_rel)
-                    ):
-                        for fn in files:
-                            if fn.endswith(".parquet"):
-                                lineage_files.append(
-                                    os.path.relpath(
-                                        os.path.join(root, fn), self.path
-                                    )
-                                )
+                    lineage_files += [
+                        os.path.join(lin_rel, fn)
+                        for fn in sorted(os.listdir(os.path.join(self.path, lin_rel)))
+                        if fn.endswith(".parquet")
+                    ]
                 else:
                     # plain rows (list[dict]) from driver-side metrics:
                     # write the handful of lineage rows with pyarrow
@@ -1002,12 +872,8 @@ class TransactionalTable:
                     rel = self._write_lineage_rows(lineage_df, lin_rel)
                     if rel is not None:
                         lineage_files.append(rel)
-                    else:
-                        lin_rel = None
         except Exception:
-            shutil.rmtree(commit_dir, ignore_errors=True)
-            if lin_rel is not None:
-                shutil.rmtree(os.path.join(self.path, lin_rel), ignore_errors=True)
+            self._discard(staged)
             raise
 
         watermarks = dict(m["watermarks"])
@@ -1021,38 +887,30 @@ class TransactionalTable:
             "files_added": len(new_files),
             # per-attempt commit-retry history (≙ the producer's
             # flattened attempt attributes, PUT:343-364)
-            "commit_attempts": len(attempt_history or []) + 1,
-            "attempt_history": list(attempt_history or []),
-            "dict_encoded_cols": enc_cols,
+            "commit_attempts": len(attempt_history) + 1,
+            "attempt_history": list(attempt_history),
             **(extra_stats or {}),
         }
-        manifest = {
-            "version": version,
-            "schema": new_schema.json(),
-            "key_cols": key_cols,
-            "lww_cols": m["lww_cols"],
-            "n_buckets": n_buckets,
-            # MUST carry through every commit: files are placed by this
-            # hash — losing either key would silently re-bucket the table
-            "bucket_cols": bcols,
-            "bucket_hash": m.get("bucket_hash", "legacy"),
-            "merge_strategy": strategy,
-            "files": kept + new_files,
-            "lineage_files": lineage_files,
-            "watermarks": watermarks,
-            "parent": m["version"],
-            "stats": stats,
-        }
-        try:
-            self._commit_manifest(manifest)
-        except ConcurrentCommitError:
-            # safe: this attempt's dirs are uniquely named, so only
-            # THIS loser's files are removed, never the winner's
-            shutil.rmtree(commit_dir, ignore_errors=True)
-            if lin_rel is not None:
-                shutil.rmtree(os.path.join(self.path, lin_rel), ignore_errors=True)
-            raise
-        return {"skipped": False, "version": version, **stats}
+        return self._commit(
+            {
+                # carry every other manifest key (retired_cols too)
+                **m,
+                "version": version,
+                "schema": new_schema.json(),
+                # MUST carry through every commit: files are placed by
+                # this hash — losing either key would silently
+                # re-bucket the table
+                "bucket_cols": bcols,
+                "bucket_hash": m.get("bucket_hash", "legacy"),
+                "merge_strategy": strategy,
+                "files": kept + new_files,
+                "lineage_files": lineage_files,
+                "watermarks": watermarks,
+                "parent": m["version"],
+                "stats": stats,
+            },
+            staged,
+        )
 
     def _write_lineage_rows(self, rows: list[dict], lin_rel: str) -> str | None:
         """Driver-side parquet write of a handful of lineage rows
@@ -1061,9 +919,6 @@ class TransactionalTable:
         table-relative path, or None for empty input."""
         if not rows:
             return None
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
         pa_schema = pa.schema(
             [
                 ("source_id", pa.string()),
@@ -1118,6 +973,8 @@ class TransactionalTable:
                 and any(f.get("tombstones", True) for f in fs)
             )
         }
+        version = m["version"] + 1
+        lineage_files = list(m.get("lineage_files", []))
         if not frag:
             # endurance gap (round 5): a copy-on-write stream keeps its
             # data files tight (one rewrite per merge) so no bucket is
@@ -1125,36 +982,26 @@ class TransactionalTable:
             # accumulate one file per micro-batch. Fold them in a
             # metadata-only commit so lineage file count stays bounded
             # even when there is nothing to compact on the data side.
-            lineage_files = list(m.get("lineage_files", []))
-            if len(lineage_files) > 16:
-                version = m["version"] + 1
-                folded = self._fold_lineage(lineage_files, version)
-                if folded is not None:
-                    manifest = {
-                        **m,
-                        "version": version,
-                        "lineage_files": [folded],
-                        "parent": m["version"],
-                        "stats": {
-                            "compacted_buckets": 0,
-                            "lineage_folded": True,
-                            "lineage_files_before": len(lineage_files),
-                        },
-                    }
-                    try:
-                        self._commit_manifest(manifest)
-                    except ConcurrentCommitError:
-                        try:
-                            os.remove(os.path.join(self.path, folded))
-                        except OSError:
-                            pass
-                        raise
-                    return {
-                        "skipped": False,
-                        "version": version,
-                        **manifest["stats"],
-                    }
-            return {"skipped": True, "reason": "nothing to compact"}
+            folded = (
+                self._fold_lineage(lineage_files, version)
+                if len(lineage_files) > 16 else None
+            )
+            if folded is None:
+                return {"skipped": True, "reason": "nothing to compact"}
+            return self._commit(
+                {
+                    **m,
+                    "version": version,
+                    "lineage_files": [folded],
+                    "parent": m["version"],
+                    "stats": {
+                        "compacted_buckets": 0,
+                        "lineage_folded": True,
+                        "lineage_files_before": len(lineage_files),
+                    },
+                },
+                [os.path.dirname(folded)],
+            )
         internal = self._internal_schema()
         paths = [
             os.path.join(self.path, f["path"]) for fs in frag.values() for f in fs
@@ -1167,120 +1014,59 @@ class TransactionalTable:
             # tombstones first would resurrect the older rows they
             # shadow. Keys never span buckets (bucket = key hash), so
             # per-bucket compaction sees every version of its keys.
-            key_cols = m["key_cols"]
-            lww_order = [
-                ("_seq" if c == "seq" else c)
-                for c in (m.get("lww_cols") or ["ts"])
-            ]
-            if "_seq" not in lww_order:
-                lww_order.append("_seq")
-            non_key = [c for c in df.columns if c not in key_cols]
-            df = (
-                df.groupBy(*key_cols)
-                .agg(
-                    F.expr(
-                        "max_by(struct({cols}), struct({ord}))".format(
-                            cols=", ".join(non_key), ord=", ".join(lww_order)
-                        )
-                    ).alias("_w")
-                )
-                .select(
-                    *key_cols, *[F.col(f"_w.{c}").alias(c) for c in non_key]
-                )
-            )
+            df = lww_winners(df, m["key_cols"], _lww_order(m))
         if drop_tombstones:
             df = df.filter(~F.col("_deleted"))
         df = df.withColumn(
             "_bucket",
             self._bucket_expr(m["n_buckets"], m.get("bucket_cols") or ["conv_id", "turn_idx"]),
         )
-        version = m["version"] + 1
-        commit_rel = os.path.join(
-            "data", f"commit-{version:012d}-{uuid.uuid4().hex[:8]}"
+        # the footer-derived tombstone flag of each rewritten file is
+        # provably false after a drop_tombstones compaction
+        commit_rel, new_files = self._write_bucketed(
+            df.repartition(max(len(frag), 1), "_bucket"), version, m["key_cols"][0]
         )
-        commit_dir = os.path.join(self.path, commit_rel)
-        (
-            df.repartition(max(len(frag), 1), "_bucket")
-            .write.partitionBy("_bucket")
-            .mode("errorifexists")
-            .parquet(commit_dir)
-        )
-        new_files = []
-        for root, _dirs, files in os.walk(commit_dir):
-            for fn in files:
-                if fn.endswith(".parquet"):
-                    abs_p = os.path.join(root, fn)
-                    rel = os.path.relpath(abs_p, self.path)
-                    md = self._read_footer(abs_p)
-                    kmin, kmax = self._file_key_stats(
-                        abs_p, m["key_cols"][0], md=md
-                    )
-                    entry = {"path": rel, "bucket": int(root.rsplit("_bucket=", 1)[1])}
-                    if kmin is not None:
-                        entry["min_key"], entry["max_key"] = kmin, kmax
-                    # a drop_tombstones compaction provably leaves none;
-                    # otherwise read the footer like the merge path does
-                    tflag = (
-                        False if drop_tombstones
-                        else self._file_tombstone_flag(abs_p, md=md)
-                    )
-                    if tflag is not None:
-                        entry["tombstones"] = tflag
-                    new_files.append(entry)
         kept = [f for f in m["files"] if f["bucket"] not in frag]
         # fold lineage: streaming deployments add one tiny lineage file
         # per micro-batch — left alone the manifest's lineage_files list
         # (and the file count) grows linearly forever. Compaction
         # rewrites them as ONE file (driver-side pyarrow: a few rows per
         # batch, no Spark job).
-        lineage_files = list(m.get("lineage_files", []))
+        staged = [commit_rel]
         folded_lineage = None
         if len(lineage_files) > 1:
             folded_lineage = self._fold_lineage(lineage_files, version)
             if folded_lineage is not None:
                 lineage_files = [folded_lineage]
-        manifest = {
-            **m,
-            "version": version,
-            "files": kept + new_files,
-            "lineage_files": lineage_files,
-            "parent": m["version"],
-            "stats": {
-                "compacted_buckets": len(frag),
-                "files_before": sum(len(v) for v in frag.values()),
-                "files_after": len(new_files),
-                "lineage_folded": folded_lineage is not None,
+                staged.append(os.path.dirname(folded_lineage))
+        return self._commit(
+            {
+                **m,
+                "version": version,
+                "files": kept + new_files,
+                "lineage_files": lineage_files,
+                "parent": m["version"],
+                "stats": {
+                    "compacted_buckets": len(frag),
+                    "files_before": sum(len(v) for v in frag.values()),
+                    "files_after": len(new_files),
+                    "lineage_folded": folded_lineage is not None,
+                },
             },
-        }
-        try:
-            self._commit_manifest(manifest)
-        except ConcurrentCommitError:
-            shutil.rmtree(commit_dir, ignore_errors=True)
-            if folded_lineage is not None:
-                try:
-                    os.remove(os.path.join(self.path, folded_lineage))
-                except OSError:
-                    pass
-            raise
-        return {"skipped": False, "version": version, **manifest["stats"]}
+            staged,
+        )
 
     def _fold_lineage(self, lineage_files: list[str], version: int) -> str | None:
         """Concatenate all lineage parquet files into one (driver-side
         pyarrow). Returns the new file's table-relative path, or None
         when any input is unreadable (keep the originals then)."""
         try:
-            import pyarrow.parquet as pq
-
             tables = [
                 pq.read_table(os.path.join(self.path, rel))
                 for rel in lineage_files
             ]
-            import pyarrow as pa
-
             folded = pa.concat_tables(tables, promote_options="default")
-            rel_dir = os.path.join(
-                "lineage", f"compact-{version:012d}-{uuid.uuid4().hex[:8]}"
-            )
+            rel_dir = self._staging_rel("lineage", version, kind="compact")
             os.makedirs(os.path.join(self.path, rel_dir), exist_ok=True)
             rel = os.path.join(rel_dir, "part-00000.parquet")
             pq.write_table(folded, os.path.join(self.path, rel))
@@ -1364,29 +1150,7 @@ class TransactionalTable:
             # tombstones on every subsequent read (round-5 ADVICE
             # high). Resolution runs on the OLD names, before the
             # rename touches any column.
-            mig_keys = m["key_cols"]
-            lww_order = [
-                ("_seq" if c == "seq" else c)
-                for c in (m.get("lww_cols") or ["ts"])
-            ]
-            if "_seq" not in lww_order:
-                lww_order.append("_seq")
-            mig_non_key = [c for c in df.columns if c not in mig_keys]
-            df = (
-                df.groupBy(*mig_keys)
-                .agg(
-                    F.expr(
-                        "max_by(struct({cols}), struct({ord}))".format(
-                            cols=", ".join(mig_non_key),
-                            ord=", ".join(lww_order),
-                        )
-                    ).alias("_w")
-                )
-                .select(
-                    *mig_keys,
-                    *[F.col(f"_w.{c}").alias(c) for c in mig_non_key],
-                )
-            )
+            df = lww_winners(df, m["key_cols"], _lww_order(m))
         bcols = m.get("bucket_cols") or ["conv_id", "turn_idx"]
         df = df.withColumn(
             "_bucket", self._bucket_expr(m["n_buckets"], bcols)
@@ -1407,36 +1171,12 @@ class TransactionalTable:
         new_schema = T.StructType(new_fields)
         key_cols = [_ren(c) for c in m["key_cols"]]
         version = m["version"] + 1
-        commit_rel = os.path.join(
-            "data", f"commit-{version:012d}-{uuid.uuid4().hex[:8]}"
+        # migration keeps tombstones (LWW-resolved above for MOR
+        # sources) — their footer-derived flag lets a later
+        # drop_tombstones compact prune correctly
+        commit_rel, new_files = self._write_bucketed(
+            df.repartition(m["n_buckets"], "_bucket"), version, key_cols[0]
         )
-        commit_dir = os.path.join(self.path, commit_rel)
-        (
-            df.repartition(m["n_buckets"], "_bucket")
-            .write.partitionBy("_bucket")
-            .mode("errorifexists")
-            .parquet(commit_dir)
-        )
-        new_files = []
-        for root, _dirs, files in os.walk(commit_dir):
-            for fn in files:
-                if fn.endswith(".parquet"):
-                    abs_p = os.path.join(root, fn)
-                    md = self._read_footer(abs_p)
-                    kmin, kmax = self._file_key_stats(abs_p, key_cols[0], md=md)
-                    entry = {
-                        "path": os.path.relpath(abs_p, self.path),
-                        "bucket": int(root.rsplit("_bucket=", 1)[1]),
-                    }
-                    if kmin is not None:
-                        entry["min_key"], entry["max_key"] = kmin, kmax
-                    # migration keeps tombstones (LWW-resolved above
-                    # for MOR sources) — record their presence so a
-                    # later drop_tombstones compact prunes correctly
-                    tflag = self._file_tombstone_flag(abs_p, md=md)
-                    if tflag is not None:
-                        entry["tombstones"] = tflag
-                    new_files.append(entry)
         manifest = {
             **m,
             "version": version,
@@ -1461,12 +1201,7 @@ class TransactionalTable:
                 "files_rewritten": len(paths),
             },
         }
-        try:
-            self._commit_manifest(manifest)
-        except ConcurrentCommitError:
-            shutil.rmtree(commit_dir, ignore_errors=True)
-            raise
-        return {"skipped": False, "version": version, **manifest["stats"]}
+        return self._commit(manifest, [commit_rel])
 
     def expire_snapshots(
         self, keep_last: int = 10, grace_secs: float = 600.0
@@ -1558,60 +1293,54 @@ class TransactionalTable:
         """Append-only commit (dead-letter / metrics tables). Optional
         (source_id, batch_id) watermark makes re-appends of a
         redelivered micro-batch no-ops."""
-        for attempt in range(retries + 1):
-            m = self.manifest()
-            if source_id is not None and batch_id is not None:
-                wm = m["watermarks"].get(source_id)
-                if wm is not None and batch_id <= int(wm):
-                    return {"skipped": True, "reason": "watermark"}
-            version = m["version"] + 1
-            cur_schema = T.StructType.fromJson(json.loads(m["schema"]))
-            new_schema = schema_union(cur_schema, df.schema)
-            proj = [
-                (F.col(f.name).cast(f.dataType) if f.name in df.columns else F.lit(None).cast(f.dataType)).alias(f.name)
-                for f in new_schema.fields
-            ]
-            out = df.select(
-                *proj,
-                F.lit(None).cast("long").alias("_seq"),
-                F.lit(False).alias("_deleted"),
-            )
-            commit_rel = os.path.join(
-                "data",
-                f"commit-{version:012d}-{uuid.uuid4().hex[:8]}",
-                "_bucket=-1",
-            )
-            out.write.mode("errorifexists").parquet(os.path.join(self.path, commit_rel))
-            new_files = [
-                {"path": os.path.join(commit_rel, fn), "bucket": -1}
-                for fn in os.listdir(os.path.join(self.path, commit_rel))
-                if fn.endswith(".parquet")
-            ]
-            watermarks = dict(m["watermarks"])
-            if source_id is not None and batch_id is not None:
-                watermarks[source_id] = batch_id
-            manifest = {
+        return self._retrying(
+            lambda history: self._append_once(df, source_id, batch_id, history),
+            retries, backoff_ms,
+        )
+
+    def _append_once(self, df, source_id, batch_id, attempt_history) -> dict:
+        m = self.manifest()
+        if source_id is not None and batch_id is not None:
+            wm = m["watermarks"].get(source_id)
+            if wm is not None and batch_id <= int(wm):
+                return {"skipped": True, "reason": "watermark"}
+        version = m["version"] + 1
+        cur_schema = T.StructType.fromJson(json.loads(m["schema"]))
+        new_schema = schema_union(cur_schema, df.schema)
+        proj = [
+            (F.col(f.name).cast(f.dataType) if f.name in df.columns else F.lit(None).cast(f.dataType)).alias(f.name)
+            for f in new_schema.fields
+        ]
+        out = df.select(
+            *proj,
+            F.lit(None).cast("long").alias("_seq"),
+            F.lit(False).alias("_deleted"),
+        )
+        # unbucketed: every file lands in the bucket -1 dir
+        stage_rel = self._staging_rel("data", version)
+        commit_rel = os.path.join(stage_rel, "_bucket=-1")
+        out.write.mode("errorifexists").parquet(os.path.join(self.path, commit_rel))
+        new_files = [
+            {"path": os.path.join(commit_rel, fn), "bucket": -1}
+            for fn in os.listdir(os.path.join(self.path, commit_rel))
+            if fn.endswith(".parquet")
+        ]
+        watermarks = dict(m["watermarks"])
+        if source_id is not None and batch_id is not None:
+            watermarks[source_id] = batch_id
+        return self._commit(
+            {
                 **m,
                 "version": version,
                 "schema": new_schema.json(),
                 "files": m["files"] + new_files,
                 "watermarks": watermarks,
                 "parent": m["version"],
-            }
-            try:
-                self._commit_manifest(manifest)
-                return {
-                    "skipped": False,
-                    "version": version,
+                "stats": {
                     "files_added": len(new_files),
-                    "commit_attempts": attempt + 1,
-                }
-            except ConcurrentCommitError:
-                shutil.rmtree(
-                    os.path.join(self.path, os.path.dirname(commit_rel)),
-                    ignore_errors=True,
-                )
-                if attempt == retries:
-                    raise
-                time.sleep(backoff_ms / 1000.0 * (2**attempt))
-        raise AssertionError("unreachable")
+                    "commit_attempts": len(attempt_history) + 1,
+                    "attempt_history": list(attempt_history),
+                },
+            },
+            [stage_rel],
+        )

@@ -20,11 +20,12 @@ def valid_cfg(**over):
 
 def test_property_surface_exact():
     # ≙ GT:169-191 asserting exactly 18 consumer properties
-    # (round 5 adds maintenance_every_n_batches / maintenance_keep_last)
-    assert len(EngineConfig.property_names()) == 34
+    # (round 5 adds maintenance_every_n_batches / maintenance_keep_last;
+    # knobs no engine code read were removed, 34 → 28)
+    assert len(EngineConfig.property_names()) == 28
     for must in [
         "binlog_dir", "initial_position", "max_files_per_trigger",
-        "n_shards", "table_path", "n_buckets", "salt_buckets",
+        "n_shards", "table_path", "n_buckets",
         "dead_letter_path", "checkpoint_dir", "source_id",
         "metrics_granularity", "merge_strategy",
     ]:

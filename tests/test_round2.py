@@ -3,6 +3,8 @@ history, manifest-driven LWW ordering, DLQ durability across the
 merge-commit/DLQ-append crash window, and the footer-estimate gate
 for filtered batches."""
 
+import os
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -12,7 +14,7 @@ from nifi_processors_spark.config import EngineConfig
 from nifi_processors_spark.schema import KEY_COLS, LWW_COLS, TRANSCRIPTS_SCHEMA
 from nifi_processors_spark.streaming.pipeline import CdcPipeline
 from nifi_processors_spark.synth import SynthSpec, generate_events, oracle_apply
-from nifi_processors_spark.table import TransactionalTable
+from nifi_processors_spark.table import ConcurrentCommitError, TransactionalTable
 
 SPEC = SynthSpec(n_conversations=60, turns_per_conv=6, n_shards=4, seed=17)
 
@@ -65,6 +67,89 @@ def test_contended_commit_retries_and_records_attempt_history(
     )
     exp = oracle_apply(ev.iloc[:120]).reset_index(drop=True)
     pd.testing.assert_frame_equal(got, exp, check_dtype=False)
+
+
+def _unreferenced_files(table):
+    """Parquet files under data/ and lineage/ that no manifest names."""
+    referenced = set()
+    for fn in os.listdir(table._log_dir):
+        if fn.startswith("v") and fn.endswith(".json"):
+            mv = table.manifest(int(fn[1:-5]))
+            referenced.update(f["path"] for f in mv["files"])
+            referenced.update(mv.get("lineage_files", []))
+    found = set()
+    for sub in ("data", "lineage"):
+        for root, _dirs, files in os.walk(os.path.join(table.path, sub)):
+            found.update(
+                os.path.relpath(os.path.join(root, fn), table.path)
+                for fn in files if fn.endswith(".parquet")
+            )
+    return found - referenced
+
+
+def _lineage(batch_id):
+    return [{"source_id": "s", "batch_id": batch_id, "shard": 0,
+             "first_seq": 0, "last_seq": 0, "n_events": 1,
+             "n_dead_letter": 0, "max_lag_ms": 0}]
+
+
+@pytest.mark.parametrize(
+    "writer", ["merge", "append", "compact", "migrate_rename_column"]
+)
+def test_lost_version_race_leaves_no_unreferenced_files(
+    spark, tmp_table_path, writer
+):
+    """Every writer commits through one path. After losing a version
+    race, merge and append retry against the new state and succeed;
+    compact and migrate (whose rewrite is only valid for the snapshot
+    they read) fail with ConcurrentCommitError. No attempt leaves a
+    data or lineage file that no manifest references."""
+    ev = generate_events(SPEC)
+    # merge-on-read deltas give compact and migrate data to rewrite;
+    # the lineage rows give compact lineage files to fold
+    t = TransactionalTable.create(
+        spark, tmp_table_path, TRANSCRIPTS_SCHEMA, KEY_COLS, LWW_COLS,
+        n_buckets=4, merge_strategy="merge-on-read",
+    )
+    t.merge(events_df(spark, ev.iloc[:60]), "s", 0, lineage_df=_lineage(0))
+    t.merge(events_df(spark, ev.iloc[60:120]), "s", 1, lineage_df=_lineage(1))
+
+    other = TransactionalTable(spark, tmp_table_path)
+    orig = t._commit_manifest
+    fired = []
+
+    def racy(manifest):
+        # another writer steals this version just before our link
+        if not fired:
+            fired.append(True)
+            other.merge(events_df(spark, ev.iloc[120:140]), "other", 0)
+        return orig(manifest)
+
+    t._commit_manifest = racy
+    payload = [f.name for f in TRANSCRIPTS_SCHEMA.fields]
+    run = {
+        "merge": lambda: t.merge(
+            events_df(spark, ev.iloc[140:200]), "s", 2, lineage_df=_lineage(2)
+        ),
+        "append": lambda: t.append(
+            events_df(spark, ev.iloc[140:150]).select(*payload)
+        ),
+        "compact": t.compact,
+        "migrate_rename_column": lambda: t.migrate_rename_column(
+            "tool", "tool_name"
+        ),
+    }[writer]
+    if writer in ("merge", "append"):
+        r = run()
+        assert r["commit_attempts"] == 2
+        assert [h["error"] for h in r["attempt_history"]] == [
+            "ConcurrentCommitError"
+        ]
+    else:
+        with pytest.raises(ConcurrentCommitError):
+            run()
+    assert fired
+    assert _unreferenced_files(t) == set()
 
 
 def test_custom_lww_cols_order_is_honored(spark, tmp_table_path):

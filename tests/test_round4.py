@@ -133,130 +133,6 @@ def test_synth_media_covers_four_kinds_and_real_decode(spark):
 
 
 # --------------------------------------------------------------------------
-# shuffle dictionary encoding (round-3 VERDICT "Next round" #1)
-# --------------------------------------------------------------------------
-
-def test_dict_encoded_bulk_merge_matches_plain(spark, tmp_path):
-    """Dictionary-encoding role/tool across the bulk merge's bucket
-    exchange must be a pure physical optimization: identical final
-    table state (including nulls in the encoded columns and LWW
-    winners) on both the union-agg and delta-append paths."""
-    from nifi_processors_spark.schema import (
-        KEY_COLS, LWW_COLS, TRANSCRIPTS_SCHEMA,
-    )
-    from nifi_processors_spark.synth import (
-        SynthSpec, generate_events, oracle_apply,
-    )
-    from nifi_processors_spark.table import TransactionalTable
-
-    spec = SynthSpec(n_conversations=40, turns_per_conv=5, n_shards=4, seed=23)
-    ev = generate_events(spec)
-    df = spark.createDataFrame(ev.drop(columns=["arrival_idx"], errors="ignore"))
-    expected = oracle_apply(ev)
-
-    for strategy in ("copy-on-write", "merge-on-read"):
-        t = TransactionalTable.create(
-            spark, str(tmp_path / f"dict-{strategy}"), TRANSCRIPTS_SCHEMA,
-            KEY_COLS, LWW_COLS, n_buckets=8, merge_strategy=strategy,
-        )
-        # broadcast_threshold=1 forces the exchange-bearing bulk path
-        stats = t.merge(
-            df, "s", 0, broadcast_threshold=1, dict_min_rows=1,
-            dict_encode_cols=("role", "tool", "no_such_col", "ts"),
-        )
-        assert stats["dict_encoded_cols"] == ["role", "tool"], strategy
-        got = (
-            t.read().orderBy("conv_id", "turn_idx")
-            .toPandas()[["conv_id", "turn_idx", "role", "text", "tool", "ts"]]
-            .reset_index(drop=True)
-        )
-        import pandas as pd
-
-        pd.testing.assert_frame_equal(
-            got, expected.reset_index(drop=True), check_dtype=False
-        )
-
-
-def test_dict_encoded_agg_plan_is_still_single_exchange(spark, tmp_path):
-    """The codec must be a pure projection around the existing plan:
-    encode before the bucket exchange, decode after the LWW agg — the
-    payload still crosses exactly ONE exchange and stays inside
-    whole-stage codegen (no extra shuffle, no Python)."""
-    from pyspark.sql import functions as F
-
-    from nifi_processors_spark.plans.explain import count_exchanges
-    from nifi_processors_spark.schema import (
-        KEY_COLS, LWW_COLS, TRANSCRIPTS_SCHEMA,
-    )
-    from nifi_processors_spark.table import TransactionalTable
-
-    t = TransactionalTable.create(
-        spark, str(tmp_path / "t"), TRANSCRIPTS_SCHEMA, KEY_COLS, LWW_COLS,
-        n_buckets=4,
-    )
-    rows = [
-        ("c1", 0, "user", "hello", None, "2024-01-01 00:00:00", 1, False),
-        ("c1", 0, "assistant", "hi", "search", "2024-01-01 00:00:01", 2, False),
-        ("c2", 1, "user", "x", None, "2024-01-01 00:00:02", 3, False),
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "conv_id string, turn_idx int, role string, text string, "
-        "tool string, ts string, _seq long, _deleted boolean",
-    ).withColumn("ts", F.to_timestamp("ts")).withColumn(
-        "_bucket", t._bucket_expr(4, ["conv_id", "turn_idx"])
-    )
-    enc, dec, cols = t._shuffle_dict_codecs(
-        df, ("role", "tool"), ["ts", "_seq"], KEY_COLS
-    )
-    assert cols == ["role", "tool"]
-    non_key = ["role", "text", "tool", "ts", "_seq", "_deleted"]
-    agg = (
-        enc(df).repartition(4, "_bucket")
-        .groupBy("_bucket", *KEY_COLS)
-        .agg(F.expr(
-            "max_by(struct({c}), struct(ts, _seq))".format(c=", ".join(non_key))
-        ).alias("_w"))
-        .select("_bucket", *KEY_COLS,
-                *[F.col(f"_w.{c}").alias(c) for c in non_key])
-    )
-    out = dec(agg)
-    assert count_exchanges(out) == 1
-    plan = str(out._jdf.queryExecution().executedPlan())
-    assert "pythonUDF" not in plan.lower()
-    # round-trip through the codec restores the exact values
-    got = {
-        (r["conv_id"], r["turn_idx"]): (r["role"], r["tool"])
-        for r in out.collect()
-    }
-    assert got[("c1", 0)] == ("assistant", "search")
-    assert got[("c2", 1)] == ("user", None)
-
-
-def test_dict_encode_skips_high_cardinality_and_lww_cols(spark, tmp_path):
-    """text exceeds the 256-value cap → passes through; ts is an LWW
-    ordering column → never encoded even if asked."""
-    from nifi_processors_spark.schema import (
-        KEY_COLS, LWW_COLS, TRANSCRIPTS_SCHEMA,
-    )
-    from nifi_processors_spark.synth import SynthSpec, generate_events
-    from nifi_processors_spark.table import TransactionalTable
-
-    spec = SynthSpec(n_conversations=120, turns_per_conv=4, n_shards=4, seed=31)
-    ev = generate_events(spec)
-    df = spark.createDataFrame(ev.drop(columns=["arrival_idx"], errors="ignore"))
-    t = TransactionalTable.create(
-        spark, str(tmp_path / "t"), TRANSCRIPTS_SCHEMA, KEY_COLS, LWW_COLS,
-        n_buckets=8,
-    )
-    stats = t.merge(
-        df, "s", 0, broadcast_threshold=1, dict_min_rows=1,
-        dict_encode_cols=("text", "ts"),
-    )
-    assert stats["dict_encoded_cols"] == []
-
-
-# --------------------------------------------------------------------------
 # metrics emitter hardening (round-3 ADVICE, all four items)
 # --------------------------------------------------------------------------
 

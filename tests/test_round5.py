@@ -366,6 +366,10 @@ def test_schema_rename_migration_replay_across_cutover(spark, tmp_path):
     # modulo the rename
     part2 = rd.parquet(*segs[half:]).withColumnRenamed("tool", "tool_name")
     tbl.merge(part2, "s", 1)
+    # the guard outlives a clean merge: a stale batch arriving after it
+    # is still rejected (every commit carries retired_cols forward)
+    with pytest.raises(SchemaEvolutionError, match="retired"):
+        tbl.merge(rd.parquet(*segs[half:]), "s", 2)
     expected = (
         oracle_apply(events)
         .rename(columns={"tool": "tool_name"})
