@@ -115,10 +115,6 @@ def run_one(cores: int, binlog_dir: str, n_events: int) -> dict:
         # stream-granularity metrics ride the merge's own scan via
         # Observation — zero extra jobs per batch
         metrics_granularity="stream",
-        # bulk batches take the union+aggregate shuffle path (a 1.5M-row
-        # broadcast would be ~300MB; the shuffle path is the honest
-        # plan for batches this size and scales with cores)
-        merge_broadcast_threshold=300_000,
     )
     # SCALING_REDACT=1 measures the FULL product path of the north
     # star — validate → vectorized Arrow/pandas PII-redaction rewrite →

@@ -85,7 +85,7 @@ def merge_apply_throughput(
             LWW_COLS, n_buckets=64, merge_strategy=strategy,
         )
         for i, b in enumerate(batches):
-            table.merge(b, "bench", i, broadcast_threshold=300_000)
+            table.merge(b, "bench", i)
         if strategy == "merge-on-read":
             # a MOR replay isn't done until readers are scan-only again
             table.compact(drop_tombstones=True)

@@ -56,10 +56,6 @@ class EngineConfig:
     table_path: str = ""
     n_buckets: int = 32  # key-hash buckets ≙ shards on the put side
     merge_strategy: str = "copy-on-write"
-    # deduped batches at or below this row count merge via the
-    # broadcast copy-on-write path (big side never shuffled); larger
-    # batches fall back to union+aggregate (one shuffle, AQE-skew-safe)
-    merge_broadcast_threshold: int = 2_000_000
     commit_retries: int = 4  # ≙ KCL/KPL retry policy ACP:181-188
     commit_retry_backoff_ms: int = 500  # ≙ task backoff ACP:181-188
 

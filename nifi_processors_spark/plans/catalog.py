@@ -10,7 +10,10 @@ semantics cannot drift.
 
 from __future__ import annotations
 
+import atexit
 import hashlib
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -18,6 +21,20 @@ TABLES = [
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
 ]
+
+_SCRATCH_ROOT: list[str] = []
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh dir for a query's temp tables under this process's one
+    ``nps-*`` scratch root, removed at exit (the queries return lazy
+    frames over these tables, so they cannot clean up on return)."""
+    if not _SCRATCH_ROOT:
+        root = tempfile.mkdtemp(prefix="nps-")
+        atexit.register(shutil.rmtree, root, ignore_errors=True)
+        _SCRATCH_ROOT.append(root)
+    return tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH_ROOT[0])
+
 
 #: dialect substitutions: {key: (spark_form, duckdb_form)}
 _DIALECT = {

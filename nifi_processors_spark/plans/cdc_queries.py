@@ -14,7 +14,6 @@ value-hash is stable across engines.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -24,7 +23,7 @@ from nifi_processors_spark.functions.attributes import (
     with_error_reason,
 )
 from nifi_processors_spark.operators.dedup import dedup_exact, lww_dedup
-from nifi_processors_spark.plans.catalog import load_tables, render
+from nifi_processors_spark.plans.catalog import load_tables, render, scratch_dir
 
 #: change-event stream derived from `events` — ≙ FIXTURES.md §2, with
 #: op mix ~60/30/10 I/U/D, key-stable shards, per-shard monotone seq
@@ -105,7 +104,7 @@ def cdc_merge_full_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nifi_processors_spark.table import TransactionalTable
 
     ce = _ce(spark, sf_dir)
-    path = os.path.join(tempfile.mkdtemp(prefix="nps-merge-replay-"), "t")
+    path = os.path.join(scratch_dir("merge-replay-"), "t")
     table = TransactionalTable.create(
         spark, path, TRANSCRIPTS_SCHEMA, KEY_COLS, LWW_COLS, n_buckets=16
     )
@@ -124,7 +123,7 @@ def cdc_merge_mor_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nifi_processors_spark.table import TransactionalTable
 
     ce = _ce(spark, sf_dir)
-    path = os.path.join(tempfile.mkdtemp(prefix="nps-merge-mor-"), "t")
+    path = os.path.join(scratch_dir("merge-mor-"), "t")
     table = TransactionalTable.create(
         spark, path, TRANSCRIPTS_SCHEMA, KEY_COLS, LWW_COLS, n_buckets=16,
         merge_strategy="merge-on-read",
@@ -483,7 +482,7 @@ def cdc_stateful_conv_progress(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nifi_processors_spark.streaming.stateful import conversation_progress
 
     ce = _ce(spark, sf_dir).select("conv_id", "seq", "ts")
-    work = tempfile.mkdtemp(prefix="nps-stateful-")
+    work = scratch_dir("stateful-")
     seg_dir = os.path.join(work, "segments")
     os.makedirs(seg_dir)
     # three disjoint slices → three files → three micro-batches

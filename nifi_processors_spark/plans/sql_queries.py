@@ -18,7 +18,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from nifi_processors_spark.plans.catalog import load_tables, md5_unit, render
+from nifi_processors_spark.plans.catalog import load_tables, md5_unit, render, scratch_dir
 
 #: DataFrames persisted by the staged queries (MinHash, IVF). Each
 #: staged query releases the PREVIOUS query's pins before persisting
@@ -782,8 +782,6 @@ def _minhash_incremental_spark(corpus_tpl: str, cap: int, k: int):
         Jaccard verify) and appends its own signatures — no
         whole-corpus recompute anywhere. The union of per-batch pair
         sets must equal the batch-recompute oracle above."""
-        import tempfile
-
         from pyspark.sql import functions as F
 
         from nifi_processors_spark.operators.incremental_dedup import (
@@ -801,7 +799,7 @@ def _minhash_incremental_spark(corpus_tpl: str, cap: int, k: int):
             shutil.rmtree(_INC_TMP_DIRS.pop(), ignore_errors=True)
         load_tables(spark, sf_dir, ["documents"])
         corpus = spark.sql(render(corpus_tpl, "spark"))
-        base = tempfile.mkdtemp(prefix="mh_inc_idx_")
+        base = scratch_dir("mh_inc_idx_")
         _INC_TMP_DIRS.append(base)
         idx = MinHashLshIndex.create(
             spark, os.path.join(base, "idx"), cap=cap, n_buckets=16

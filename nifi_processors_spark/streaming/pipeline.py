@@ -308,7 +308,6 @@ class CdcPipeline:
             source_id=cfg.source_id,
             batch_id=batch_id,
             lineage_fn=_lineage_after_write if obs is not None else None,
-            broadcast_threshold=cfg.merge_broadcast_threshold,
             retries=cfg.commit_retries,
             backoff_ms=cfg.commit_retry_backoff_ms,
             upper_rows_hint=hint,

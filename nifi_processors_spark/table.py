@@ -58,6 +58,7 @@ from nifi_processors_spark.schema import (
 )
 
 INTERNAL_COLS = ["_seq", "_deleted"]
+_TMP_MANIFEST = ".tmp-"  # prefix of a manifest staged in _log/ before its link
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -75,6 +76,17 @@ def _lww_order(manifest: dict) -> list[str]:
     if "_seq" not in order:
         order.append("_seq")
     return order
+
+
+def _aligned(df: DataFrame, schema: T.StructType) -> list:
+    """``df``'s columns cast to ``schema``'s fields, in its order; a
+    field ``df`` lacks (an older file, a narrower batch) is a typed
+    null."""
+    have = set(df.columns)
+    return [
+        (F.col(f.name).cast(f.dataType) if f.name in have else F.lit(None).cast(f.dataType)).alias(f.name)
+        for f in schema.fields
+    ]
 
 
 class TransactionalTable:
@@ -168,8 +180,11 @@ class TransactionalTable:
     def _commit_manifest(self, manifest: dict) -> None:
         """Atomic commit: write tmp, hard-link to the versioned name.
         ``os.link`` raises EEXIST if another writer won the version —
-        the caller retries against the new state (optimistic CC)."""
-        tmp = os.path.join(self._log_dir, f".tmp-{uuid.uuid4().hex}.json")
+        the caller retries against the new state (optimistic CC).
+        The new link is a directory entry: ``_log`` is fsynced after
+        it, or a power loss could drop a version readers already saw
+        (Pillai et al., OSDI 2014)."""
+        tmp = os.path.join(self._log_dir, f"{_TMP_MANIFEST}{uuid.uuid4().hex}.json")
         with open(tmp, "w") as f:
             json.dump(manifest, f)
             f.flush()
@@ -182,6 +197,11 @@ class TransactionalTable:
             ) from e
         finally:
             os.unlink(tmp)
+        fd = os.open(self._log_dir, os.O_RDONLY)
+        try:
+            os.fsync(fd)
+        finally:
+            os.close(fd)
 
     def _commit(self, manifest: dict, cleanup: list[str]) -> dict:
         """The one commit path of every writer: publish ``manifest``
@@ -387,8 +407,8 @@ class TransactionalTable:
                 st = md.row_group(rg).column(idx).statistics
                 if st is None or not st.has_min_max:
                     return None, None
-                # min/max stats EXCLUDE nulls, but the merge join
-                # matches null keys (eqNullSafe): a file holding a
+                # min/max stats EXCLUDE nulls, but the merge's LWW
+                # aggregation groups null keys: a file holding a
                 # null-key row must never be pruned on its non-null
                 # range, or a null-key upsert would insert a second
                 # live row for the same key and break LWW convergence.
@@ -448,7 +468,8 @@ class TransactionalTable:
         """The one bucketed write: ``df`` (carrying ``_bucket``) lands
         as ``_bucket=<b>`` parquet dirs under a fresh staging dir, and
         each written file becomes a manifest entry with its bucket,
-        leading-key range and tombstone flag from ONE footer read.
+        row count, leading-key range and tombstone flag from ONE footer
+        read.
         Returns (table-relative staging dir, file entries)."""
         commit_rel = self._staging_rel("data", version)
         commit_dir = os.path.join(self.path, commit_rel)
@@ -464,6 +485,7 @@ class TransactionalTable:
                     entry = {
                         "path": os.path.relpath(abs_p, self.path),
                         "bucket": int(root.rsplit("_bucket=", 1)[1]),
+                        "rows": md.num_rows,
                     }
                     kmin, kmax = self._file_key_stats(md, key_col)
                     if kmin is not None:
@@ -533,7 +555,6 @@ class TransactionalTable:
         batch_id: int,
         lineage_df: DataFrame | None = None,
         extra_stats: dict | None = None,
-        broadcast_threshold: int = 2_000_000,
         lineage_fn=None,
         retries: int = 4,
         backoff_ms: int = 50,
@@ -551,14 +572,14 @@ class TransactionalTable:
         return self._retrying(
             lambda history: self._merge_once(
                 batch_df, source_id, batch_id, lineage_df, extra_stats,
-                broadcast_threshold, lineage_fn, history, upper_rows_hint,
+                lineage_fn, history, upper_rows_hint,
             ),
             retries, backoff_ms,
         )
 
     def _merge_once(
         self, batch_df, source_id, batch_id, lineage_df, extra_stats,
-        broadcast_threshold, lineage_fn, attempt_history, upper_rows_hint,
+        lineage_fn, attempt_history, upper_rows_hint,
     ):
         m = self.manifest()
         wm = m["watermarks"].get(source_id)
@@ -592,28 +613,16 @@ class TransactionalTable:
                 "columns before merge."
             )
         new_schema = schema_union(cur_schema, batch_payload)
-        payload_cols = [f.name for f in new_schema.fields]
 
-        # --- normalize batch → upsert rows (missing cols → null)
-        have = set(batch_df.columns)
-        proj = [
-            (F.col(c).cast(f.dataType) if c in have else F.lit(None).cast(f.dataType)).alias(c)
-            for c, f in zip(payload_cols, new_schema.fields)
-        ]
+        # --- normalize batch → upsert rows
         up = batch_df.select(
-            *proj,
+            *_aligned(batch_df, new_schema),
             F.col("seq").cast("long").alias("_seq"),
             (F.col("op") == F.lit("D")).alias("_deleted"),
         )
 
-        non_key = [c for c in payload_cols if c not in key_cols] + INTERNAL_COLS
         bcols = m.get("bucket_cols") or ["conv_id", "turn_idx"]
         up = up.withColumn("_bucket", self._bucket_expr(n_buckets, bcols))
-
-        def _lww_agg(df):
-            """Intra-batch/merge LWW: one winner per key (bucket ⊂ key,
-            so grouping on it too keeps the output clustered)."""
-            return lww_winners(df, ["_bucket", *key_cols], lww_order)
 
         # --- size the batch WITHOUT a job when possible: for
         # file-backed batches (the streaming source) the input file
@@ -628,7 +637,7 @@ class TransactionalTable:
         # stream batch) is an upper bound usable ONLY to pick the bulk
         # path when it is clearly large.
         est_rows = self.footer_row_estimate(batch_df)
-        bulk_cutoff = max(broadcast_threshold, 8 * n_buckets * 1000)
+        bulk_cutoff = 8 * n_buckets * 1000
         # hint-derived sizes are an UPPER BOUND (pre-validation rows):
         # usable to pick the bulk path, but n_upserts reported from it
         # must be flagged as an estimate (the true applied count is
@@ -640,12 +649,13 @@ class TransactionalTable:
 
         key0 = key_cols[0]
         bucket_ranges: dict[int, tuple] = {}
-        if est_rows is not None and est_rows > bulk_cutoff:
+        bulk = est_rows is not None and est_rows > bulk_cutoff
+        if bulk:
             n_batch = est_rows
             affected = list(range(n_buckets))
         else:
             # one light job (map-side-combined count) yields the batch
-            # size, the touched-bucket set (path choice + pruning) AND
+            # size, the touched-bucket set (partitions + pruning) AND
             # each bucket's key range (intra-bucket file pruning)
             bucket_counts = (
                 up.groupBy("_bucket")
@@ -653,10 +663,11 @@ class TransactionalTable:
                     F.count(F.lit(1)).alias("n"),
                     F.min(key0).alias("kmin"),
                     F.max(key0).alias("kmax"),
-                    # F.min/F.max skip nulls, but the merge join is
-                    # null-safe — a bucket whose batch slice contains
-                    # a null leading key must not prune ANY file (the
-                    # null-key row matches rows outside [kmin, kmax])
+                    # F.min/F.max skip nulls, but the LWW aggregation
+                    # groups null keys — a bucket whose batch slice
+                    # contains a null leading key must not prune ANY
+                    # file (the null-key row matches rows outside
+                    # [kmin, kmax])
                     F.sum(F.isnull(key0).cast("long")).alias("knulls"),
                 )
                 .collect()
@@ -696,148 +707,51 @@ class TransactionalTable:
             else:
                 touched.append(f)
 
-        existing = None
+        version = m["version"] + 1
+        out_cols = ["_bucket", *new_schema.names, *INTERNAL_COLS]
+        src = up.select(*out_cols)
         if touched:
-            internal = self._internal_schema()
-            existing = self.spark.read.schema(internal).parquet(
+            existing = self.spark.read.schema(self._internal_schema()).parquet(
                 *[os.path.join(self.path, f["path"]) for f in touched]
             )
-            # align to evolved schema (new columns → null)
-            eproj = [
-                (
-                    F.col(c).cast(f.dataType)
-                    if c in existing.columns
-                    else F.lit(None).cast(f.dataType)
-                ).alias(c)
-                for c, f in zip(payload_cols, new_schema.fields)
-            ]
-            existing = existing.select(
-                *eproj, F.col("_seq"), F.col("_deleted")
-            ).withColumn("_bucket", self._bucket_expr(n_buckets, bcols))
+            src = src.unionByName(
+                existing.select(*_aligned(existing, new_schema), "_seq", "_deleted")
+                .withColumn("_bucket", self._bucket_expr(n_buckets, bcols))
+            )
 
-        version = m["version"] + 1
-        out_cols = ["_bucket", *payload_cols, *INTERNAL_COLS]
-
-        # self-heal file fragmentation: once the affected buckets
-        # average >3 files each, do a full union-agg rewrite (which
-        # emits exactly one file chain per bucket) instead of
-        # stacking more copy-on-write generations
-        fragmented = touched and len(touched) > 3 * len(affected)
-
-        if strategy == "merge-on-read":
-            # --- delta-append (write-optimized): LWW-dedupe the batch
-            # and append it bucketed — ONE job over O(batch) rows, no
-            # read/join/rewrite of existing data. Readers resolve
-            # winners (read()); compact() folds deltas into base.
-            merge_path = "delta-append"
+        # partition count: one per affected bucket for bulk (the
+        # per-bucket writer is the parallelism unit); otherwise one per
+        # 500k rows aggregated — the batch PLUS the touched rows the
+        # manifest records — so a trickle batch into a small table
+        # doesn't schedule one sliver task per bucket, and one into a
+        # large table doesn't aggregate every touched row in one task.
+        # Entries written before per-file `rows` existed count as one
+        # partition per touched bucket.
+        if bulk:
             parts = max(len(affected), 1)
-            if n_batch <= broadcast_threshold:
-                parts = max(1, min(parts, -(-n_batch // 500_000)))
-            out = _lww_agg(up.repartition(parts, "_bucket")).select(*out_cols)
-        elif existing is not None and n_batch <= broadcast_threshold and not fragmented:
-            # --- small-batch path (the steady-state CDC case):
-            # broadcast the deduped batch against the affected
-            # buckets — the big side is scanned in place, NEVER
-            # shuffled. Updated/unchanged rows are written back
-            # preserving scan partitioning (copy-on-write, no
-            # exchange in the plan); inserts are the small side.
-            merge_path = "broadcast-cow"
-            up_d = _lww_agg(up)  # join build side needs unique keys
-            e, b = existing.alias("e"), F.broadcast(up_d.alias("b"))
-            on = [F.col(f"e.{k}").eqNullSafe(F.col(f"b.{k}")) for k in key_cols]
-            # lexicographic struct comparison = the manifest's LWW order
-            bwins = (
-                F.struct(*[F.col(f"b.{c}") for c in lww_order])
-                >= F.struct(*[F.col(f"e.{c}") for c in lww_order])
-            )
-            cow = e.join(b, on, "left").select(
-                F.col("e._bucket").alias("_bucket"),
-                *[F.col(f"e.{k}").alias(k) for k in key_cols],
-                *[
-                    F.when(bwins, F.col(f"b.{c}"))
-                    .otherwise(F.col(f"e.{c}"))
-                    .alias(c)
-                    for c in non_key
-                ],
-            ).select(*out_cols)
-            # keys are unique within the table — no distinct needed.
-            # Both the semi and the anti join MUST be null-safe like
-            # the cow join above: plain equality never matches a null
-            # key, so a null-key upsert would update the existing row
-            # AND insert a duplicate (two live rows, LWW broken).
-            matched_keys = existing.alias("e2").join(
-                F.broadcast(up_d.select(*key_cols).alias("k")),
-                [
-                    F.col(f"e2.{k}").eqNullSafe(F.col(f"k.{k}"))
-                    for k in key_cols
-                ],
-                "left_semi",
-            ).select(*key_cols)
-            # cluster the (small) inserts side by bucket — without
-            # this every up_d partition writes a sliver file into
-            # every bucket and file count explodes quadratically
-            inserts = (
-                up_d.alias("u")
-                .join(
-                    F.broadcast(matched_keys.alias("mk")),
-                    [
-                        F.col(f"u.{k}").eqNullSafe(F.col(f"mk.{k}"))
-                        for k in key_cols
-                    ],
-                    "left_anti",
-                )
-                .select(*out_cols)
-                .repartition(max(len(affected) // 2, 1), "_bucket")
-            )
-            # one write job: the cow side keeps its scan
-            # partitioning (no exchange); inserts ride along.
-            # Output sizing (K3 file aggregation, APP:40-68): when the
-            # rewritten data is small (known from the touched files'
-            # parquet footers — driver-side, no job), coalesce
-            # (narrow, still no exchange) so the steady-state CDC case
-            # emits a few right-sized files instead of one sliver per
-            # scan task — less task-scheduling overhead per batch and
-            # less fragmentation per commit.
-            out = cow.unionByName(inserts)
-            try:
-                touched_rows = sum(
-                    pq.read_metadata(
-                        os.path.join(self.path, f["path"])
-                    ).num_rows
-                    for f in touched
-                )
-            except Exception:
-                touched_rows = None
-            if touched_rows is not None:
-                total = touched_rows + n_batch
-                if total <= 4_000_000:
-                    out = out.coalesce(max(1, -(-total // 500_000)))
         else:
-            # --- big-batch path (backfill / bulk replay): union the
-            # deduped batch with the affected buckets and take the
-            # LWW winner per key in one shuffle. AQE coalesces and
-            # splits skewed partitions at runtime.
-            merge_path = "union-agg"
-            # batch dedup and merge-vs-existing fuse into ONE
-            # aggregation, and the whole merge moves the payload over
-            # ONE exchange: repartitioning by _bucket alone both
-            # satisfies the aggregate's clustered-distribution
-            # requirement (bucket ⊂ group keys ⇒ keys co-located) and
-            # leaves the output clustered for the partitionBy write —
-            # no second shuffle before writing.
-            unioned = (
-                up.select(*out_cols).unionByName(existing.select(*out_cols))
-                if existing is not None
-                else up.select(*out_cols)
-            )
-            # partition count: one per affected bucket for bulk (the
-            # per-bucket writer is the parallelism unit), downsized for
-            # small batches (e.g. the first merge into an empty table)
-            # so a 25k-row batch doesn't schedule 64 sliver tasks
-            parts = max(len(affected), 1)
-            if n_batch <= broadcast_threshold:
-                parts = max(1, min(parts, -(-n_batch // 500_000)))
-            out = _lww_agg(unioned.repartition(parts, "_bucket")).select(*out_cols)
+            rows = n_batch + sum(f.get("rows", 0) for f in touched)
+            unsized = {f["bucket"] for f in touched if "rows" not in f}
+            parts = max(1, min(len(affected), max(-(-rows // 500_000), len(unsized))))
+
+        # --- one formulation: the LWW winner per key over the batch
+        # unioned with the touched files. Batch dedup and merge-vs-
+        # existing fuse into ONE aggregation, and the whole merge moves
+        # the payload over ONE exchange: repartitioning by _bucket alone
+        # both satisfies the aggregate's clustered-distribution
+        # requirement (bucket ⊂ group keys ⇒ keys co-located) and leaves
+        # the output clustered for the partitionBy write — no second
+        # shuffle before writing, and one file per touched bucket. AQE
+        # coalesces and splits skewed partitions at runtime.
+        # Copy-on-write (union-agg) rewrites the touched files;
+        # merge-on-read touches none, so it is delta-append
+        # (write-optimized): ONE job over O(batch) rows, appended as
+        # delta files. Readers resolve winners (read()); compact()
+        # folds deltas into base.
+        merge_path = "delta-append" if strategy == "merge-on-read" else "union-agg"
+        out = lww_winners(
+            src.repartition(parts, "_bucket"), ["_bucket", *key_cols], lww_order
+        ).select(*out_cols)
         commit_rel, new_files = self._write_bucketed(
             out, version, key0, delta=strategy == "merge-on-read"
         )
@@ -885,6 +799,7 @@ class TransactionalTable:
             "buckets_touched": len(affected),
             "files_rewritten": len(touched),
             "files_added": len(new_files),
+            "merge_partitions": parts,
             # per-attempt commit-retry history (≙ the producer's
             # flattened attempt attributes, PUT:343-364)
             "commit_attempts": len(attempt_history) + 1,
@@ -1222,10 +1137,22 @@ class TransactionalTable:
         than its commit attempt, so the age test makes expiry safe to
         run concurrently with merges/appends/compactions; genuinely
         orphaned files (loser attempts whose cleanup died) age out of
-        the grace window and are collected on the next pass."""
+        the grace window and are collected on the next pass. The same
+        test sweeps temp manifests in ``_log/`` on every call: a writer
+        killed between the temp write and the link leaves one behind."""
+        now = time.time()
+        log_names = os.listdir(self._log_dir)
+        for fn in log_names:
+            if fn.startswith(_TMP_MANIFEST):
+                try:
+                    tmp = os.path.join(self._log_dir, fn)
+                    if now - os.path.getmtime(tmp) >= grace_secs:
+                        os.remove(tmp)
+                except OSError:
+                    pass  # its writer unlinked it under us
         versions = sorted(
             int(f[1:-5])
-            for f in os.listdir(self._log_dir)
+            for f in log_names
             if f.startswith("v") and f.endswith(".json")
         )
         if len(versions) <= keep_last:
@@ -1237,7 +1164,6 @@ class TransactionalTable:
             referenced.update(f["path"] for f in mv["files"])
             referenced.update(mv.get("lineage_files", []))
         removed_files = skipped_young = 0
-        now = time.time()
         for sub in ("data", "lineage"):
             base = os.path.join(self.path, sub)
             if not os.path.isdir(base):
@@ -1307,12 +1233,8 @@ class TransactionalTable:
         version = m["version"] + 1
         cur_schema = T.StructType.fromJson(json.loads(m["schema"]))
         new_schema = schema_union(cur_schema, df.schema)
-        proj = [
-            (F.col(f.name).cast(f.dataType) if f.name in df.columns else F.lit(None).cast(f.dataType)).alias(f.name)
-            for f in new_schema.fields
-        ]
         out = df.select(
-            *proj,
+            *_aligned(df, new_schema),
             F.lit(None).cast("long").alias("_seq"),
             F.lit(False).alias("_deleted"),
         )

@@ -10,7 +10,8 @@ from nifi_processors_spark.session import get_spark  # noqa: E402
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("nps-tests", cores=8, shuffle_partitions=8)
+    # cores: SPARK_GRAFT_CPUS, else the host's CPU count (get_spark)
+    s = get_spark("nps-tests", shuffle_partitions=8)
     yield s
 
 

@@ -21,8 +21,10 @@ def valid_cfg(**over):
 def test_property_surface_exact():
     # ≙ GT:169-191 asserting exactly 18 consumer properties
     # (round 5 adds maintenance_every_n_batches / maintenance_keep_last;
-    # knobs no engine code read were removed, 34 → 28)
-    assert len(EngineConfig.property_names()) == 28
+    # knobs no engine code read were removed, 34 → 28; the merge has
+    # one copy-on-write formulation, so merge_broadcast_threshold went,
+    # 28 → 27)
+    assert len(EngineConfig.property_names()) == 27
     for must in [
         "binlog_dir", "initial_position", "max_files_per_trigger",
         "n_shards", "table_path", "n_buckets",

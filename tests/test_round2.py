@@ -175,13 +175,13 @@ def test_custom_lww_cols_order_is_honored(spark, tmp_table_path):
         rows, "op string, conv_id string, turn_idx int, text string, prio long, seq long"
     )
     t.merge(b0, "s", 0)  # union-agg path (empty table)
-    # later-delivered rows with LOWER prio must lose on both merge paths
+    # later-delivered rows with LOWER prio must lose to existing rows
     b1 = spark.createDataFrame(
         [("U", "c1", 0, "stale-low-prio", 3, 3),
          ("U", "c2", 0, "winner", 7, 4)],
         "op string, conv_id string, turn_idx int, text string, prio long, seq long",
     )
-    t.merge(b1, "s", 1)  # broadcast-cow path (small vs existing)
+    t.merge(b1, "s", 1)  # union-agg against the existing rows
     out = {r["conv_id"]: r["text"] for r in t.read().collect()}
     assert out == {"c1": "winner-high-prio", "c2": "winner"}
 
@@ -404,8 +404,9 @@ def test_latest_initial_position_skips_preexisting(spark, tmp_path):
 
 def test_footer_estimate_gated_to_bare_scans(spark, tmp_path, tmp_table_path):
     """A filtered view of a big file must NOT inherit the file's footer
-    row count: n_upserts reflects actual rows and the merge stays on
-    the pruned broadcast-cow path instead of the all-buckets bulk path."""
+    row count: n_upserts reflects actual rows (the size probe ran) and
+    the merge stays bucket-pruned instead of taking the all-buckets
+    bulk path."""
     ev = generate_events(SPEC)
     big = events_df(spark, ev)
     pq_path = str(tmp_path / "events_pq")
@@ -417,9 +418,9 @@ def test_footer_estimate_gated_to_bare_scans(spark, tmp_path, tmp_table_path):
     small = spark.read.parquet(pq_path).filter(F.col("seq") % 101 == 0)
     n_small = small.count()
     assert 0 < n_small < len(ev) // 10
-    r = t.merge(small, "s", 1, broadcast_threshold=max(n_small * 2, 64))
-    assert r["n_upserts"] == n_small
-    assert r["merge_path"] == "broadcast-cow"
+    r = t.merge(small, "s", 1)
+    assert r["n_upserts"] == n_small and r["n_upserts_estimated"] is False
+    assert r["merge_path"] == "union-agg"
 
     # bare file-backed batches still use the no-job footer shortcut
     assert TransactionalTable._is_bare_scan(spark.read.parquet(pq_path))

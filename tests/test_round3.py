@@ -160,9 +160,7 @@ def test_hint_derived_upsert_count_is_flagged_estimate(
         spark, tmp_table_path, TRANSCRIPTS_SCHEMA, KEY_COLS, LWW_COLS,
         n_buckets=4,
     )
-    st = t.merge(
-        df, "s", 0, broadcast_threshold=10, upper_rows_hint=1_000_000
-    )
+    st = t.merge(df, "s", 0, upper_rows_hint=1_000_000)
     assert st["n_upserts_estimated"] is True
     assert st["n_upserts"] == 1_000_000  # the documented upper bound
     st2 = t.merge(df, "s", 1)

@@ -6,6 +6,10 @@ re-insert, duplicate delivery idempotence, schema evolution, and
 full-replay equality against the single-threaded oracle.
 """
 
+import os
+import stat
+import time
+
 import pandas as pd
 import pytest
 
@@ -176,3 +180,65 @@ def test_bucket_pruning_only_touches_affected_files(spark, tmp_table_path):
     untouched_after = {f["path"] for f in m1["files"]}
     # most files survive the commit unchanged (file-level pruning)
     assert len(untouched_before & untouched_after) >= len(untouched_before) - 2
+
+
+
+def test_merge_partitions_count_touched_rows(spark, tmp_table_path):
+    """The LWW aggregation gets one partition per 500k rows of batch
+    PLUS touched rows (manifest `rows`): a small batch into big buckets
+    is not aggregated in one task. Entries without `rows` (older
+    manifests) count one partition per touched bucket."""
+    ev = generate_events(SPEC)
+    t = make_table(spark, tmp_table_path, n_buckets=4)
+    t.merge(events_df(spark, ev), "s", 0)  # one file per bucket
+    rows = sum(f["rows"] for f in t.manifest()["files"])
+    assert rows == t.read(include_deleted=True).count()
+    upd = ev.drop_duplicates(["conv_id", "turn_idx"]).head(20).assign(op="U", text="new")
+    for batch_id, resize in [
+        (1, lambda f: {**f, "rows": 600_000}),
+        (2, lambda f: {k: v for k, v in f.items() if k != "rows"}),
+    ]:
+        # stand-in for a large (or older) table: only the manifest changes
+        m = t.manifest()
+        files = [resize(f) for f in m["files"]]
+        t._commit_manifest({**m, "version": m["version"] + 1, "files": files})
+        upd["ts"] = upd["ts"] + pd.Timedelta(days=30)
+        r = t.merge(events_df(spark, upd), "s", batch_id)
+        assert r["merge_path"] == "union-agg"
+        assert r["merge_partitions"] == r["buckets_touched"] > 1
+    out = t.read().toPandas()
+    assert not out.duplicated(["conv_id", "turn_idx"]).any()
+    assert (out["text"] == "new").sum() == 20
+
+
+def test_commits_fsync_the_log_dir(spark, tmp_table_path, monkeypatch):
+    """A commit adds a _log/ entry (os.link): the directory must be
+    fsynced too, or a power loss can drop a version that readers
+    already saw (Pillai et al., OSDI 2014)."""
+    real, synced_dirs = os.fsync, []
+
+    def fsync(fd):
+        if stat.S_ISDIR(os.fstat(fd).st_mode):
+            synced_dirs.append(fd)
+        return real(fd)
+
+    monkeypatch.setattr(os, "fsync", fsync)
+    t = make_table(spark, tmp_table_path, n_buckets=4)
+    assert synced_dirs, "create"
+    synced_dirs.clear()
+    t.merge(events_df(spark, generate_events(SPEC).head(20)), "s", 0)
+    assert synced_dirs, "merge"
+
+
+def test_expire_sweeps_stale_temp_manifests(spark, tmp_table_path):
+    """A writer killed between its temp-manifest write and the link
+    leaves _log/.tmp-*.json behind: every expire_snapshots call removes
+    those older than the grace window, even with nothing to expire,
+    and keeps young ones (their writer may still be linking)."""
+    t = make_table(spark, tmp_table_path, n_buckets=4)
+    old, young = (os.path.join(tmp_table_path, "_log", f".tmp-{n}.json") for n in ("old", "young"))
+    for p in (old, young):
+        open(p, "w").close()
+    os.utime(old, (time.time() - 3600,) * 2)
+    assert t.expire_snapshots(keep_last=10, grace_secs=600)["skipped"]
+    assert not os.path.exists(old) and os.path.exists(young)
