@@ -7,11 +7,10 @@ the stream touches stayed BOUNDED:
 
 * main-table manifest count + data-file count (maintenance cadence:
   ``maintenance_every_n_batches`` compact+expire passes),
-* DLQ manifest/file counts (its own every-64-commits cadence
-  actually engaging),
-* lineage file count (folded by compaction),
+* lineage and dead-letter file counts (folded by compaction),
 * driver RSS (sampled throughout — flat, not linear in batches),
-* per-batch wall (first-K vs last-K average — flat, not growing),
+* per-batch wall (median of a warmed window vs of the last K — flat,
+  not growing),
 * metrics queue/drop counters.
 
 Run directly (writes BENCH/endurance_r{N}.json) or through
@@ -36,6 +35,20 @@ def _rss_mb() -> float:
             if ln.startswith("VmRSS:"):
                 return round(int(ln.split()[1]) / 1024, 1)
     return -1.0
+
+
+def wall_windows(batch_secs: list[float]) -> tuple[float, float] | None:
+    """(median wall of the warmed window, median of the last K) with
+    K = max(10, n/10): the warmed window is batches K+1..2K, since the
+    first batches of a warm session run faster than its steady state.
+    None for fewer than 2K batches (the windows would overlap)."""
+    import statistics
+
+    k = max(10, len(batch_secs) // 10)
+    if len(batch_secs) < 2 * k:
+        return None
+    return (statistics.median(batch_secs[k:2 * k]),
+            statistics.median(batch_secs[-k:]))
 
 
 def run_endurance(
@@ -67,8 +80,8 @@ def run_endurance(
     events = generate_events(spec)
     write_binlog(events, binlog, spec)
     segs = sorted(glob.glob(os.path.join(binlog, "seg-*.parquet")))
-    # poison half the segments: one null-conv_id row each → the DLQ
-    # path commits continuously and its every-64 maintenance engages
+    # poison half the segments: one null-conv_id row each → dead
+    # letters ride every other commit and maintenance must fold them
     for i, seg in enumerate(segs):
         if i % 2 == 0:
             pdf = pd.read_parquet(seg)
@@ -83,7 +96,6 @@ def run_endurance(
     cfg = EngineConfig(
         binlog_dir=binlog,
         table_path=os.path.join(work_dir, "table"),
-        dead_letter_path=os.path.join(work_dir, "dlq"),
         checkpoint_dir=os.path.join(work_dir, "ckpt"),
         source_id="endurance",
         n_buckets=8,
@@ -117,11 +129,8 @@ def run_endurance(
         r["seconds"] for r in recs
         if r.get("kind") == "batch" and r.get("seconds") is not None
     ]
-    # window size never exceeds the sample count (short runs would
-    # otherwise divide a partial slice by k and overlap the windows)
-    k = max(1, min(len(batch_secs), max(10, len(batch_secs) // 10)))
+    windows = wall_windows(batch_secs)
     m_main = pipe.table.manifest()
-    m_dlq = pipe.dead_letter.manifest()
     log_count = lambda p: len(  # noqa: E731
         [f for f in os.listdir(os.path.join(p, "_log")) if f.startswith("v")]
     )
@@ -134,13 +143,9 @@ def run_endurance(
         "main_manifests_on_disk": log_count(cfg.table_path),
         "main_data_files": len(m_main["files"]),
         "main_lineage_files": len(m_main.get("lineage_files", [])),
-        "dlq_version": m_dlq["version"],
-        "dlq_manifests_on_disk": log_count(cfg.dead_letter_path),
-        "dlq_data_files": len(m_dlq["files"]),
-        "batch_sec_first": round(sum(batch_secs[:k]) / len(batch_secs[:k]), 3)
-        if batch_secs else None,
-        "batch_sec_last": round(sum(batch_secs[-k:]) / len(batch_secs[-k:]), 3)
-        if batch_secs else None,
+        "main_dead_letter_files": len(m_main.get("dead_letter_files", [])),
+        "batch_sec_warm": round(windows[0], 3) if windows else None,
+        "batch_sec_last": round(windows[1], 3) if windows else None,
         "rss_mb_start": rss_samples[0],
         "rss_mb_end": rss_samples[-1],
         "rss_mb_max": max(rss_samples),

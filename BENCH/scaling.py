@@ -106,7 +106,6 @@ def run_one(cores: int, binlog_dir: str, n_events: int) -> dict:
     cfg = EngineConfig(
         binlog_dir=binlog_dir,
         table_path=os.path.join(work, "table"),
-        dead_letter_path=os.path.join(work, "dlq"),
         checkpoint_dir=os.path.join(work, "ckpt"),
         n_buckets=64,
         # few, large micro-batches: the scaling criterion measures the

@@ -13,7 +13,7 @@ Cluster usage (the local[*] fallback is for sandbox runs):
         --conf spark.sql.shuffle.partitions=2000 \\
         --py-files nps.zip \\
         main.py --binlog-dir s3://bucket/binlog --table-path s3://bucket/transcripts \\
-                --dead-letter-path s3://bucket/dlq --checkpoint-dir s3://bucket/ckpt \\
+                --checkpoint-dir s3://bucket/ckpt \\
                 --n-buckets 4096 --max-files-per-trigger 2000 --continuous
 
 Sizing guidance for the 10^10-event target: n_buckets so a bucket is a
@@ -33,7 +33,8 @@ def parse_args(argv=None):
     ap.add_argument("--binlog-dir", required=True)
     ap.add_argument("--binlog-format", default="parquet", choices=["parquet", "json"])
     ap.add_argument("--table-path", required=True)
-    ap.add_argument("--dead-letter-path", required=True)
+    # unused: dead letters commit in the table's own manifest
+    ap.add_argument("--dead-letter-path", default="")
     ap.add_argument("--checkpoint-dir", required=True)
     ap.add_argument("--source-id", default="binlog")
     ap.add_argument("--n-buckets", type=int, default=64)
@@ -117,21 +118,13 @@ def main(argv=None) -> None:
                 pipe.metrics.close()
     else:
         pipe.run_once(timeout_s=86_400)
-        # maintenance covers the dead-letter table too: it takes one
-        # tiny append per poison micro-batch and would otherwise grow
-        # its file/manifest count forever (round-3 VERDICT #8)
+        # compaction also folds the lineage and dead-letter files
         if args.compact:
-            out = {"compact": pipe.table.compact()}
-            if pipe.dead_letter is not None:
-                out["compact_dlq"] = pipe.dead_letter.compact()
-            print(json.dumps(out))
+            print(json.dumps({"compact": pipe.table.compact()}))
         if args.expire_keep_last > 0:
-            out = {"expire": pipe.table.expire_snapshots(args.expire_keep_last)}
-            if pipe.dead_letter is not None:
-                out["expire_dlq"] = pipe.dead_letter.expire_snapshots(
-                    args.expire_keep_last
-                )
-            print(json.dumps(out))
+            print(json.dumps(
+                {"expire": pipe.table.expire_snapshots(args.expire_keep_last)}
+            ))
     print(json.dumps({"last_batch": pipe.last_batch_stats,
                       "table_version": pipe.table.current_version()}))
 

@@ -66,6 +66,8 @@ class EngineConfig:
     put_rate_limit_events_per_sec: int = 0
 
     # --- routing / dead letter (≙ REL_FAILURE PUT:307-326) ---
+    # dead letters commit in the main table's manifest; the engine no
+    # longer reads this path, which stays until callers stop passing it
     dead_letter_path: str = ""
     fail_on_dead_letter: bool = False  # ≙ fail-if-throttled APP:90-98
 
@@ -85,15 +87,15 @@ class EngineConfig:
     metrics_namespace: str = "cdc"  # ≙ producer metric namespace APP:120-129
 
     # --- maintenance (round-5 endurance: bounded metadata growth) ---
-    # every Nth committed batch runs table.compact() +
-    # expire_snapshots(maintenance_keep_last) on the MAIN table (the
-    # DLQ has its own fixed cadence); 0 disables. Advisory like the
-    # DLQ pass: a lost race never fails the already-committed batch.
+    # every Nth committed version runs table.compact() (which also
+    # folds the lineage and dead-letter files) + expire_snapshots(
+    # maintenance_keep_last); 0 disables. Advisory: a lost race never
+    # fails the already-committed batch.
     maintenance_every_n_batches: int = 64
     maintenance_keep_last: int = 16
 
     def validate(self) -> "EngineConfig":
-        """Range + cross-field validation; returns self for chaining."""
+        """Range validation; returns self for chaining."""
         if not self.binlog_dir:
             raise ConfigError("binlog_dir is required")
         if not self.table_path:
@@ -132,13 +134,6 @@ class EngineConfig:
             v = getattr(self, name)
             if not (lo <= v <= hi):
                 raise ConfigError(f"{name} must be in [{lo}, {hi}], got {v}")
-        # cross-field: dead-letter routing needs a quarantine path,
-        # unless the pipeline is configured to fail the batch instead
-        # (≙ access-key/secret-key must be set together, ACP:292-298)
-        if not self.fail_on_dead_letter and not self.dead_letter_path:
-            raise ConfigError(
-                "dead_letter_path required when fail_on_dead_letter=False"
-            )
         if not self.checkpoint_dir:
             raise ConfigError("checkpoint_dir is required")
         return self

@@ -6,24 +6,26 @@ SURVEY.md §2.11, is exactly Spark's driver-scheduled model); each
 micro-batch runs through ``apply_batch``:
 
 1. validate + split (success/failure relationships, PUT:307-326)
-2. dead-letter append for invalid rows (failure ≙ REL_FAILURE),
-   watermarked so a redelivered micro-batch doesn't duplicate DLQ rows
+2. LWW MERGE of the valid rows into the transcripts table
 3. per-shard lineage/metrics rows (provenance GET:266-268 + consumer
-   lag GET:314-315)
-4. LWW MERGE into the transcripts table with the offsets watermark and
-   lineage committed in the SAME atomic manifest — exactly-once
-   (upgrading the reference's checkpoint-before-commit at-least-once,
-   GET:281-296)
+   lag GET:314-315) and the invalid rows as dead letters (failure ≙
+   REL_FAILURE), staged after the data write
+4. ONE manifest commit publishes the data, the offsets watermark, the
+   lineage and the dead letters together — exactly-once (upgrading the
+   reference's checkpoint-before-commit at-least-once, GET:281-296)
 
-Crash anywhere before the manifest commit → nothing is visible and
-Structured Streaming redelivers the batch; crash after → redelivery is
-skipped by the watermark. A nuked checkpoint (full replay) reconverges
-because the merge itself is LWW-idempotent.
+Crash anywhere before the manifest commit → neither the batch nor its
+dead letters are visible and Structured Streaming redelivers the batch;
+crash after → redelivery is skipped by the watermark, since the batch
+and its dead letters are already committed together. A nuked
+checkpoint (full replay) reconverges because the merge itself is
+LWW-idempotent.
 """
 
 from __future__ import annotations
 
 import logging
+from types import SimpleNamespace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,7 +34,6 @@ from nifi_processors_spark.config import EngineConfig
 from nifi_processors_spark.functions.attributes import validate_events
 from nifi_processors_spark.schema import (
     CHANGE_EVENTS_SCHEMA,
-    DEAD_LETTER_SCHEMA,
     KEY_COLS,
     LWW_COLS,
     TRANSCRIPTS_SCHEMA,
@@ -71,18 +72,16 @@ class CdcPipeline:
         self.spark = spark
         self.transform = transform
         self.config = config.validate()
-        self.table = self._ensure_table(
-            config.table_path, TRANSCRIPTS_SCHEMA, KEY_COLS,
-            n_buckets=config.n_buckets,
-            merge_strategy=config.merge_strategy,
-        )
-        self.dead_letter = (
-            self._ensure_table(
-                config.dead_letter_path, DEAD_LETTER_SCHEMA, KEY_COLS, n_buckets=1
+        if TransactionalTable.exists(spark, config.table_path):
+            self.table = TransactionalTable(spark, config.table_path)
+        else:
+            self.table = TransactionalTable.create(
+                spark, config.table_path, TRANSCRIPTS_SCHEMA, KEY_COLS,
+                LWW_COLS, n_buckets=config.n_buckets,
+                merge_strategy=config.merge_strategy,
             )
-            if config.dead_letter_path
-            else None
-        )
+        # dead letters ride each batch's manifest: a read view, no table
+        self.dead_letter = SimpleNamespace(read=self.table.read_dead_letters)
         self.last_batch_stats: dict = {}
         # buffered telemetry channel (≙ CloudWatch metric buffering,
         # ACP:193-224) — decoupled from the atomic lineage commit
@@ -97,15 +96,6 @@ class CdcPipeline:
                 path=config.metrics_path,
                 namespace=config.metrics_namespace,
             )
-
-    def _ensure_table(self, path, schema, key_cols, n_buckets,
-                      merge_strategy="copy-on-write"):
-        if TransactionalTable.exists(self.spark, path):
-            return TransactionalTable(self.spark, path)
-        return TransactionalTable.create(
-            self.spark, path, schema, key_cols, LWW_COLS, n_buckets=n_buckets,
-            merge_strategy=merge_strategy,
-        )
 
     # ------------------------------------------------------ micro-batch
 
@@ -204,6 +194,10 @@ class CdcPipeline:
         from nifi_processors_spark.functions.attributes import with_error_reason
 
         tagged = with_error_reason(batch_df)
+        is_err = F.col("error_reason").isNotNull()
+        # the failure relationship: written by the merge's side-file
+        # hook only when the latched invalid count is > 0
+        dead_letters = tagged.filter(is_err).withColumn("batch_id", F.lit(batch_id))
 
         # ZERO-extra-job metrics: routing counts and per-shard
         # lineage/metrics (the reference accumulated these in its
@@ -212,41 +206,29 @@ class CdcPipeline:
         # no dedicated metrics scan at all. Per-shard granularity is
         # expressed as conditional aggregates (one set per shard id),
         # all evaluated in the same pass.
-        obs = None
-        tags: list[int | None] = []
-        want_metrics = (
-            cfg.metrics_enabled or cfg.fail_on_dead_letter
-            or self.dead_letter is not None
-        )
-        if want_metrics:
-            obs = Observation(f"cdc-b{batch_id}-{_uuid.uuid4().hex[:6]}")
-            tags = (
-                list(range(cfg.n_shards))
-                if cfg.metrics_granularity == "shard"
-                else [None]
-            )
-            is_err = F.col("error_reason").isNotNull()
-            expr_names = ["inv_total"]
-            exprs = [F.sum(is_err.cast("long")).alias("inv_total")]
-            for s in tags:
-                in_s = F.lit(True) if s is None else (F.col("shard") == s)
-                ok, ko = in_s & ~is_err, in_s & is_err
-                t = "all" if s is None else str(s)
-                exprs += [
-                    F.sum(ko.cast("long")).alias(f"inv_{t}"),
-                    F.sum(ok.cast("long")).alias(f"n_{t}"),
-                    F.min(F.when(ok, F.col("seq"))).alias(f"fs_{t}"),
-                    F.max(F.when(ok, F.col("seq"))).alias(f"ls_{t}"),
-                    F.max(
-                        F.when(
-                            ok,
-                            F.unix_millis(F.current_timestamp())
-                            - F.unix_millis(F.col("arrival_ts")),
-                        )
-                    ).alias(f"lag_{t}"),
-                ]
-                expr_names += [f"inv_{t}", f"n_{t}", f"fs_{t}", f"ls_{t}", f"lag_{t}"]
-            tagged = tagged.observe(obs, *exprs)
+        obs = Observation(f"cdc-b{batch_id}-{_uuid.uuid4().hex[:6]}")
+        tags = list(range(cfg.n_shards)) if cfg.metrics_granularity == "shard" else [None]
+        expr_names = ["inv_total"]
+        exprs = [F.sum(is_err.cast("long")).alias("inv_total")]
+        for s in tags:
+            in_s = F.lit(True) if s is None else (F.col("shard") == s)
+            ok, ko = in_s & ~is_err, in_s & is_err
+            t = "all" if s is None else str(s)
+            exprs += [
+                F.sum(ko.cast("long")).alias(f"inv_{t}"),
+                F.sum(ok.cast("long")).alias(f"n_{t}"),
+                F.min(F.when(ok, F.col("seq"))).alias(f"fs_{t}"),
+                F.max(F.when(ok, F.col("seq"))).alias(f"ls_{t}"),
+                F.max(
+                    F.when(
+                        ok,
+                        F.unix_millis(F.current_timestamp())
+                        - F.unix_millis(F.col("arrival_ts")),
+                    )
+                ).alias(f"lag_{t}"),
+            ]
+            expr_names += [f"inv_{t}", f"n_{t}", f"fs_{t}", f"ls_{t}", f"lag_{t}"]
+        tagged = tagged.observe(obs, *exprs)
 
         valid = tagged.filter(F.col("error_reason").isNull()).drop("error_reason")
         if self.transform is not None:
@@ -257,10 +239,11 @@ class CdcPipeline:
         def _lineage_after_write():
             """Runs inside merge AFTER the data write, BEFORE the
             manifest commit: the observation is latched by then (the
-            merge's first job scanned the observed batch), so this is
-            pure driver-side bookkeeping. Raising here aborts the
-            commit (batch failure ≙ route-all-to-failure + yield,
-            PUT:329-333) with nothing made visible."""
+            merge's first job scanned the observed batch), so the
+            lineage rows are pure driver-side bookkeeping, and the dead
+            letters cost a job only when there are any. Raising here
+            aborts the commit (batch failure ≙ route-all-to-failure +
+            yield, PUT:329-333) with nothing made visible."""
             vals = _obs_values(obs, expr_names)
             if vals is None:
                 # the observation latched an empty row (all rows of
@@ -273,8 +256,9 @@ class CdcPipeline:
             holder["n_dlq"] = n_inv
             if n_inv and cfg.fail_on_dead_letter:
                 raise ValueError(f"{n_inv} invalid events in batch {batch_id}")
+            dead = dead_letters if n_inv else None
             if not cfg.metrics_enabled:
-                return None
+                return None, dead
             rows = []
             for s in tags:
                 t = "all" if s is None else str(s)
@@ -295,7 +279,7 @@ class CdcPipeline:
                     }
                 )
             holder["lineage_rows"] = rows
-            return rows
+            return rows, dead
 
         # footer-based row count of the RAW (pre-validation) batch — an
         # upper bound the merge may use to pick the bulk path without a
@@ -307,72 +291,21 @@ class CdcPipeline:
             valid,
             source_id=cfg.source_id,
             batch_id=batch_id,
-            lineage_fn=_lineage_after_write if obs is not None else None,
+            lineage_fn=_lineage_after_write,
             retries=cfg.commit_retries,
             backoff_ms=cfg.commit_retry_backoff_ms,
             upper_rows_hint=hint,
         )
-
-        # a watermark-skipped merge ran no job over this batch, so the
-        # observation never latched — compute the DLQ count directly
-        # (redelivery-only path; correctness over job count here)
+        # a watermark-skipped redelivery wrote nothing: its dead
+        # letters were committed with the batch
         n_dlq = holder.get("n_dlq", 0)
-        if stats.get("skipped") and self.dead_letter is not None:
-            n_dlq = tagged.filter(F.col("error_reason").isNotNull()).count()
 
-        # dead-letter routing (failure relationship). Runs even when the
-        # merge was watermark-skipped: a crash between the merge commit
-        # and this append would otherwise lose the batch's DLQ rows
-        # forever (redelivery hits the merge watermark). The DLQ table's
-        # own (source::dlq, batch_id) watermark makes re-appends no-ops.
-        if n_dlq and self.dead_letter is not None:
-            invalid = tagged.filter(F.col("error_reason").isNotNull()).withColumn(
-                "batch_id", F.lit(batch_id)
-            )
-            dlq_res = self.dead_letter.append(
-                invalid,
-                source_id=f"{cfg.source_id}::dlq",
-                batch_id=batch_id,
-                retries=cfg.commit_retries,
-                backoff_ms=cfg.commit_retry_backoff_ms,
-            )
-            # DLQ retention (round-3 VERDICT #8): periodically fold the
-            # DLQ's sliver files and expire old snapshots, so a
-            # poison-heavy stream keeps a BOUNDED file/manifest count
-            # instead of one file per bad batch. Round 6: the cadence
-            # and retention now follow the SAME config knobs as the
-            # main table's pass below (round-5 endurance ended with 68
-            # DLQ manifests vs 11 main because the DLQ's hard-coded
-            # every-64th/keep-8 left a much higher steady state —
-            # steady-state manifests ∈ [keep_last, keep_last+cadence],
-            # so sharing knobs bounds the DLQ within ~2× of the main
-            # table). A disabled main cadence (0) keeps the legacy
-            # every-64th floor: DLQ growth must stay bounded
-            # regardless. expire's grace window keeps this safe next
-            # to the main table's concurrent commits; failure here
-            # must never fail the (already committed) batch.
-            ver = dlq_res.get("version")
-            dlq_every = cfg.maintenance_every_n_batches or 64
-            if ver and ver % dlq_every == 0:
-                try:
-                    self.dead_letter.compact()
-                    self.dead_letter.expire_snapshots(
-                        keep_last=cfg.maintenance_keep_last
-                    )
-                except Exception:
-                    # advisory on the hot path — but a persistently
-                    # failing maintenance pass means unbounded DLQ
-                    # growth, so it must be visible
-                    _log.warning(
-                        "DLQ maintenance failed at version %s", ver,
-                        exc_info=True,
-                    )
-        # main-table maintenance cadence (round-5 endurance): every Nth
-        # committed version compacts sliver files and expires old
-        # snapshots so a 1,000-micro-batch stream keeps BOUNDED
-        # manifest/data-file counts (the DLQ has its own cadence
-        # above). Advisory like the DLQ pass — the batch is already
-        # committed; a lost race with another writer must not fail it.
+        # maintenance cadence (round-5 endurance): every Nth committed
+        # version compacts sliver files, folds the lineage and
+        # dead-letter side files, and expires old snapshots so a
+        # 1,000-micro-batch stream keeps BOUNDED manifest/file counts.
+        # Advisory — the batch is already committed; a lost race with
+        # another writer must not fail it.
         mver = stats.get("version")
         if (
             cfg.maintenance_every_n_batches > 0
@@ -396,10 +329,10 @@ class CdcPipeline:
         if cfg.put_rate_limit_events_per_sec > 0 and not stats.get("skipped"):
             applied = int(stats.get("n_upserts") or 0)
             # a hint-derived n_upserts counts the RAW batch (including
-            # invalid rows routed to the DLQ) — pace on the rows that
+            # dead-lettered invalid rows) — pace on the rows that
             # were actually applied, not the upper bound
             if stats.get("n_upserts_estimated"):
-                applied = max(0, applied - int(n_dlq or 0))
+                applied = max(0, applied - n_dlq)
             min_elapsed = applied / cfg.put_rate_limit_events_per_sec
             remaining = min_elapsed - (_time.monotonic() - batch_t0)
             if remaining > 0:

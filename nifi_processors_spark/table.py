@@ -24,9 +24,10 @@ Iceberg via the same interface — the semantics below are what
 * **Schema evolution**: manifest schema is unioned-by-name with each
   batch's schema; old files are read with the new schema (missing
   columns → null) — the FlowFile schema-freedom analogue (GET:256-257).
-* **Lineage**: per-(batch, shard) lineage rows (≙ provenance receive
-  events GET:266-268 + millisBehindLatest GET:314-315) are parquet
-  files referenced by the same manifest — atomic with the data.
+* **Side files**: per-(batch, shard) lineage rows (≙ provenance receive
+  events GET:266-268 + millisBehindLatest GET:314-315) and the batch's
+  dead letters (≙ REL_FAILURE, PUT:307-326) are parquet files
+  referenced by the same manifest — atomic with the data.
 
 Scale notes (100 TB / 1000 executors): bucket count is a table
 property sized so bucket ≈ a few GB; merges shuffle once on the bucket
@@ -52,6 +53,7 @@ from pyspark.sql import types as T
 
 from nifi_processors_spark.operators.dedup import lww_winners
 from nifi_processors_spark.schema import (
+    DEAD_LETTER_SCHEMA,
     LINEAGE_SCHEMA,
     SchemaEvolutionError,
     schema_union,
@@ -59,6 +61,9 @@ from nifi_processors_spark.schema import (
 
 INTERNAL_COLS = ["_seq", "_deleted"]
 _TMP_MANIFEST = ".tmp-"  # prefix of a manifest staged in _log/ before its link
+# manifest lists of side files: small parquet files outside the bucketed
+# layout, staged under lineage/ and folded by compact()
+_SIDE_FILES = ("lineage_files", "dead_letter_files")
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -76,6 +81,16 @@ def _lww_order(manifest: dict) -> list[str]:
     if "_seq" not in order:
         order.append("_seq")
     return order
+
+
+def _utc_micros(t: pa.Table) -> pa.Table:
+    """``t`` with every timestamp column as UTC microseconds. Spark
+    writes INT96 timestamps by default, which pyarrow reads as naive
+    UTC values, and Spark 4 rejects nanosecond parquet timestamps."""
+    return t.cast(pa.schema([
+        f.with_type(pa.timestamp("us", tz="UTC")) if pa.types.is_timestamp(f.type) else f
+        for f in t.schema
+    ]))
 
 
 def _aligned(df: DataFrame, schema: T.StructType) -> list:
@@ -142,6 +157,7 @@ class TransactionalTable:
             "merge_strategy": merge_strategy,
             "files": [],
             "lineage_files": [],
+            "dead_letter_files": [],
             "watermarks": {},
             "parent": None,
             "stats": {},
@@ -340,11 +356,17 @@ class TransactionalTable:
         return df.filter(~F.col("_deleted")).drop(*INTERNAL_COLS)
 
     def read_lineage(self) -> DataFrame:
-        m = self.manifest()
-        paths = [os.path.join(self.path, p) for p in m.get("lineage_files", [])]
+        return self._read_side("lineage_files", LINEAGE_SCHEMA)
+
+    def read_dead_letters(self) -> DataFrame:
+        """The invalid rows of every committed batch (DEAD_LETTER_SCHEMA)."""
+        return self._read_side("dead_letter_files", DEAD_LETTER_SCHEMA)
+
+    def _read_side(self, key: str, schema: T.StructType) -> DataFrame:
+        paths = [os.path.join(self.path, p) for p in self.manifest().get(key, [])]
         if not paths:
-            return self.spark.createDataFrame([], LINEAGE_SCHEMA)
-        return self.spark.read.schema(LINEAGE_SCHEMA).parquet(*paths)
+            return self.spark.createDataFrame([], schema)
+        return self.spark.read.schema(schema).parquet(*paths)
 
     # ---------------------------------------------------------- merge
 
@@ -553,8 +575,6 @@ class TransactionalTable:
         batch_df: DataFrame,
         source_id: str,
         batch_id: int,
-        lineage_df: DataFrame | None = None,
-        extra_stats: dict | None = None,
         lineage_fn=None,
         retries: int = 4,
         backoff_ms: int = 50,
@@ -566,20 +586,27 @@ class TransactionalTable:
         committed watermark; a replayed-from-scratch stream converges
         anyway because the merge itself is LWW-idempotent.
 
+        ``lineage_fn()`` runs after the data write and before the
+        manifest link; it returns ``(lineage rows, dead letters)`` —
+        a list of LINEAGE_SCHEMA dicts and a DataFrame written in
+        DEAD_LETTER_SCHEMA, either may be None — staged in this attempt and
+        committed in the same manifest as the data. Raising aborts the
+        commit with nothing made visible.
+
         A lost commit race is retried against the new table state
         (``_retrying``); the committed stats carry ``attempt_history``.
         """
         return self._retrying(
             lambda history: self._merge_once(
-                batch_df, source_id, batch_id, lineage_df, extra_stats,
-                lineage_fn, history, upper_rows_hint,
+                batch_df, source_id, batch_id, lineage_fn, history,
+                upper_rows_hint,
             ),
             retries, backoff_ms,
         )
 
     def _merge_once(
-        self, batch_df, source_id, batch_id, lineage_df, extra_stats,
-        lineage_fn, attempt_history, upper_rows_hint,
+        self, batch_df, source_id, batch_id, lineage_fn, attempt_history,
+        upper_rows_hint,
     ):
         m = self.manifest()
         wm = m["watermarks"].get(source_id)
@@ -756,39 +783,41 @@ class TransactionalTable:
             out, version, key0, delta=strategy == "merge-on-read"
         )
 
-        # --- lineage files (atomic with the data commit). lineage_fn
+        # --- side files (atomic with the data commit). lineage_fn
         # runs AFTER the data write (so Observation metrics that piggy-
         # backed on the merge's own jobs are latched — zero extra jobs)
         # but BEFORE the manifest commit (atomicity). A lineage_fn that
         # raises (e.g. fail-on-dead-letter) aborts the commit with
-        # nothing made visible; this attempt's data dir is removed.
-        lineage_files = list(m.get("lineage_files", []))
+        # nothing made visible; this attempt's staged dirs are removed.
+        side = {k: list(m.get(k, [])) for k in _SIDE_FILES}
         staged = [commit_rel]
-        try:
-            if lineage_fn is not None and lineage_df is None:
-                lineage_df = lineage_fn()
-            if lineage_df is not None:
-                lin_rel = self._staging_rel("lineage", version)
-                staged.append(lin_rel)
-                if isinstance(lineage_df, DataFrame):
-                    lineage_df.coalesce(1).write.mode("errorifexists").parquet(
-                        os.path.join(self.path, lin_rel)
+        if lineage_fn is not None:
+            lin_rel = self._staging_rel("lineage", version)
+            staged.append(lin_rel)
+            try:
+                rows, dead_letters = lineage_fn()
+                # the handful of lineage rows is written with pyarrow
+                # on the driver — no Spark job for a few rows
+                rel = self._write_lineage_rows(rows, lin_rel)
+                if rel is not None:
+                    side["lineage_files"].append(rel)
+                if dead_letters is not None:
+                    # executor-side: an all-invalid bulk batch never
+                    # lands on the driver
+                    dl_rel = os.path.join(lin_rel, "dead_letter")
+                    dead_letters.select(
+                        *_aligned(dead_letters, DEAD_LETTER_SCHEMA)
+                    ).write.mode("errorifexists").parquet(
+                        os.path.join(self.path, dl_rel)
                     )
-                    lineage_files += [
-                        os.path.join(lin_rel, fn)
-                        for fn in sorted(os.listdir(os.path.join(self.path, lin_rel)))
+                    side["dead_letter_files"] += [
+                        os.path.join(dl_rel, fn)
+                        for fn in sorted(os.listdir(os.path.join(self.path, dl_rel)))
                         if fn.endswith(".parquet")
                     ]
-                else:
-                    # plain rows (list[dict]) from driver-side metrics:
-                    # write the handful of lineage rows with pyarrow
-                    # directly — no Spark job for a few rows
-                    rel = self._write_lineage_rows(lineage_df, lin_rel)
-                    if rel is not None:
-                        lineage_files.append(rel)
-        except Exception:
-            self._discard(staged)
-            raise
+            except Exception:
+                self._discard(staged)
+                raise
 
         watermarks = dict(m["watermarks"])
         watermarks[source_id] = batch_id
@@ -804,7 +833,6 @@ class TransactionalTable:
             # flattened attempt attributes, PUT:343-364)
             "commit_attempts": len(attempt_history) + 1,
             "attempt_history": list(attempt_history),
-            **(extra_stats or {}),
         }
         return self._commit(
             {
@@ -819,7 +847,7 @@ class TransactionalTable:
                 "bucket_hash": m.get("bucket_hash", "legacy"),
                 "merge_strategy": strategy,
                 "files": kept + new_files,
-                "lineage_files": lineage_files,
+                **side,
                 "watermarks": watermarks,
                 "parent": m["version"],
                 "stats": stats,
@@ -889,33 +917,31 @@ class TransactionalTable:
             )
         }
         version = m["version"] + 1
-        lineage_files = list(m.get("lineage_files", []))
+        # fold side files: streaming deployments add one tiny lineage
+        # file (and, for a poison batch, dead-letter files) per
+        # micro-batch — left alone the manifest's lists (and the file
+        # count) grow linearly forever
+        folded, side_staged = self._fold_side_files(m, version)
+        side_stats = {
+            "lineage_folded": "lineage_files" in folded,
+            "dead_letters_folded": "dead_letter_files" in folded,
+        }
         if not frag:
             # endurance gap (round 5): a copy-on-write stream keeps its
             # data files tight (one rewrite per merge) so no bucket is
-            # ever fragmented — but the per-batch LINEAGE slivers still
-            # accumulate one file per micro-batch. Fold them in a
-            # metadata-only commit so lineage file count stays bounded
-            # even when there is nothing to compact on the data side.
-            folded = (
-                self._fold_lineage(lineage_files, version)
-                if len(lineage_files) > 16 else None
-            )
-            if folded is None:
+            # ever fragmented — but the side files still accumulate.
+            # Fold them in a metadata-only commit.
+            if not folded:
                 return {"skipped": True, "reason": "nothing to compact"}
             return self._commit(
                 {
                     **m,
+                    **folded,
                     "version": version,
-                    "lineage_files": [folded],
                     "parent": m["version"],
-                    "stats": {
-                        "compacted_buckets": 0,
-                        "lineage_folded": True,
-                        "lineage_files_before": len(lineage_files),
-                    },
+                    "stats": {"compacted_buckets": 0, **side_stats},
                 },
-                [os.path.dirname(folded)],
+                side_staged,
             )
         internal = self._internal_schema()
         paths = [
@@ -942,52 +968,53 @@ class TransactionalTable:
             df.repartition(max(len(frag), 1), "_bucket"), version, m["key_cols"][0]
         )
         kept = [f for f in m["files"] if f["bucket"] not in frag]
-        # fold lineage: streaming deployments add one tiny lineage file
-        # per micro-batch — left alone the manifest's lineage_files list
-        # (and the file count) grows linearly forever. Compaction
-        # rewrites them as ONE file (driver-side pyarrow: a few rows per
-        # batch, no Spark job).
-        staged = [commit_rel]
-        folded_lineage = None
-        if len(lineage_files) > 1:
-            folded_lineage = self._fold_lineage(lineage_files, version)
-            if folded_lineage is not None:
-                lineage_files = [folded_lineage]
-                staged.append(os.path.dirname(folded_lineage))
         return self._commit(
             {
                 **m,
+                **folded,
                 "version": version,
                 "files": kept + new_files,
-                "lineage_files": lineage_files,
                 "parent": m["version"],
                 "stats": {
                     "compacted_buckets": len(frag),
                     "files_before": sum(len(v) for v in frag.values()),
                     "files_after": len(new_files),
-                    "lineage_folded": folded_lineage is not None,
+                    **side_stats,
                 },
             },
-            staged,
+            [commit_rel, *side_staged],
         )
 
-    def _fold_lineage(self, lineage_files: list[str], version: int) -> str | None:
-        """Concatenate all lineage parquet files into one (driver-side
-        pyarrow). Returns the new file's table-relative path, or None
-        when any input is unreadable (keep the originals then)."""
-        try:
-            tables = [
-                pq.read_table(os.path.join(self.path, rel))
-                for rel in lineage_files
-            ]
-            folded = pa.concat_tables(tables, promote_options="default")
-            rel_dir = self._staging_rel("lineage", version, kind="compact")
-            os.makedirs(os.path.join(self.path, rel_dir), exist_ok=True)
-            rel = os.path.join(rel_dir, "part-00000.parquet")
-            pq.write_table(folded, os.path.join(self.path, rel))
-            return rel
-        except Exception:
-            return None
+    def _fold_side_files(self, m: dict, version: int) -> tuple[dict, list[str]]:
+        """Concatenate each side-file list of ``m`` holding more than
+        one file into one file (driver-side pyarrow, no Spark job).
+        Returns the folded manifest lists and their table-relative
+        staging dirs; a list with an unreadable input keeps its
+        originals."""
+        folded, staged = {}, []
+        for key in _SIDE_FILES:
+            files = m.get(key, [])
+            if len(files) < 2:
+                continue
+            try:
+                tables = [
+                    _utc_micros(pq.read_table(
+                        os.path.join(self.path, rel), coerce_int96_timestamp_unit="us"
+                    ))
+                    for rel in files
+                ]
+                rel_dir = self._staging_rel("lineage", version, kind="compact")
+                os.makedirs(os.path.join(self.path, rel_dir), exist_ok=True)
+                rel = os.path.join(rel_dir, "part-00000.parquet")
+                pq.write_table(
+                    pa.concat_tables(tables, promote_options="default"),
+                    os.path.join(self.path, rel),
+                )
+            except Exception:
+                continue
+            folded[key] = [rel]
+            staged.append(rel_dir)
+        return folded, staged
 
     # ------------------------------------------------ schema migration
 
@@ -1162,7 +1189,8 @@ class TransactionalTable:
         for v in retained:
             mv = self.manifest(v)
             referenced.update(f["path"] for f in mv["files"])
-            referenced.update(mv.get("lineage_files", []))
+            for key in _SIDE_FILES:
+                referenced.update(mv.get(key, []))
         removed_files = skipped_young = 0
         for sub in ("data", "lineage"):
             base = os.path.join(self.path, sub)
@@ -1216,7 +1244,7 @@ class TransactionalTable:
         retries: int = 4,
         backoff_ms: int = 50,
     ) -> dict:
-        """Append-only commit (dead-letter / metrics tables). Optional
+        """Append-only commit (e.g. a quarantine table). Optional
         (source_id, batch_id) watermark makes re-appends of a
         redelivered micro-batch no-ops."""
         return self._retrying(

@@ -21,9 +21,6 @@ Two corpora, because achievable recall depends on data geometry:
   (emb_cosine_topk_blocked) remains the right tool for such data.
 """
 
-import os
-import tempfile
-
 import duckdb
 import numpy as np
 import pyarrow as pa
@@ -46,7 +43,7 @@ def _con_for(path: str) -> duckdb.DuckDBPyConnection:
 
 
 @pytest.fixture(scope="module")
-def clustered_path():
+def clustered_path(tmp_path_factory):
     """8 tight unit-norm clusters, 400 vectors, deterministic."""
     rng = np.random.default_rng(42)
     centers = rng.normal(size=(8, 64))
@@ -64,8 +61,7 @@ def clustered_path():
             ),
         }
     )
-    d = tempfile.mkdtemp(prefix="ann_recall_")
-    p = os.path.join(d, "embeddings.parquet")
+    p = str(tmp_path_factory.mktemp("ann_recall") / "embeddings.parquet")
     pq.write_table(tbl, p)
     return p
 

@@ -49,7 +49,6 @@ def test_valid_config_passes():
         dict(n_buckets=0),
         dict(metrics_granularity="nope"),
         dict(merge_strategy="copy-on-read"),  # not a real strategy
-        dict(dead_letter_path="", fail_on_dead_letter=False),
         dict(metrics_level="DETAILED"),  # lower-case names only
         dict(metrics_buffer_secs=-1),
         dict(metrics_queue_size=0),
@@ -61,8 +60,10 @@ def test_invalid_configs_raise(over):
 
 
 def test_fail_on_dead_letter_relaxes_dlq_path():
-    # cross-field rule, ≙ ACP:289-316 conditional requirements
+    # dead letters commit in the table's manifest: no quarantine path
+    # is needed whether invalid rows are dead-lettered or fail the batch
     valid_cfg(dead_letter_path="", fail_on_dead_letter=True).validate()
+    valid_cfg(dead_letter_path="", fail_on_dead_letter=False).validate()
 
 
 def test_merge_on_read_is_a_valid_strategy():

@@ -179,3 +179,82 @@ def test_fail_on_dead_letter_raises(spark, tmp_path):
         q.awaitTermination(120)
         if q.exception() is not None:
             raise RuntimeError(q.exception().desc)
+
+
+def _events(spark, rows):
+    """(op, conv_id, turn_idx, text, ts, seq) tuples → a batch frame."""
+    ts = [pd.Timestamp(r[4]) for r in rows]
+    return spark.createDataFrame(pd.DataFrame({
+        "op": [r[0] for r in rows],
+        "conv_id": [r[1] for r in rows],
+        "turn_idx": pd.array([r[2] for r in rows], dtype="int32"),
+        "role": ["user"] * len(rows),
+        "text": [r[3] for r in rows],
+        "tool": [None] * len(rows),
+        "ts": pd.Series(ts).astype("datetime64[us]"),
+        "seq": pd.array([r[5] for r in rows], dtype="int64"),
+        "shard": pd.array([0] * len(rows), dtype="int32"),
+        "arrival_ts": pd.Series(ts).astype("datetime64[us]"),
+    }))
+
+
+def test_invalid_row_commits_with_its_batch_in_one_version(spark, tmp_path):
+    """One micro-batch is ONE commit: a batch with one invalid row adds
+    exactly one version to a populated copy-on-write table, and that
+    manifest carries both the batch watermark and the dead-letter file.
+    Staging the dead letters costs the one write job the separate
+    dead-letter append used to: at most 5 jobs in all."""
+    from nifi_processors_spark.synth import generate_events
+
+    ev = generate_events(SynthSpec(n_conversations=50, turns_per_conv=4, seed=3))
+    p = CdcPipeline(spark, cfg_for(tmp_path, n_buckets=4))
+    p.apply_batch(spark.createDataFrame(ev.drop(columns=["arrival_idx"])), 0)
+    v0 = p.table.current_version()
+    batch = _events(spark, [
+        ("I", "conv-new", 0, "hello", "2030-01-01", 10_000),
+        ("I", "conv-new", 1, None, "2030-01-01", 10_001),  # null_text
+    ])
+    sc = spark.sparkContext
+    group = "test-one-commit-per-batch"
+    sc.setJobGroup(group, "copy-on-write batch with one invalid row")
+    try:
+        stats = p.apply_batch(batch, 1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert stats["n_dead_letter"] == 1 and stats["merge_path"] == "union-agg"
+    assert p.table.current_version() == v0 + 1
+    m = p.table.manifest()
+    assert m["watermarks"][p.config.source_id] == 1
+    assert m["dead_letter_files"] and all(
+        f.startswith("lineage/commit-") for f in m["dead_letter_files"]
+    )
+    dlq = p.dead_letter.read().collect()
+    assert [(r["conv_id"], r["turn_idx"], r["error_reason"], r["batch_id"])
+            for r in dlq] == [("conv-new", 1, "null_text", 1)]
+    assert 0 < len(jobs) <= 5, sorted(jobs)
+
+
+def test_folded_dead_letters_read_back_through_spark(spark, tmp_path):
+    """compact() folds the dead-letter files with pyarrow; the folded
+    file must read back through Spark with the same rows and
+    timestamps (a naive pyarrow round-trip of Spark's INT96 timestamps
+    writes nanosecond timestamps, which Spark 4 rejects)."""
+    p = CdcPipeline(spark, cfg_for(tmp_path, n_buckets=2))
+    for b in range(3):
+        p.apply_batch(_events(spark, [
+            ("I", f"c{b}", 0, "ok", f"2030-01-0{b + 1} 12:34:56.{b}23456", 2 * b),
+            ("I", f"c{b}", 1, None, f"2031-02-0{b + 1} 01:02:03.{b}54321", 2 * b + 1),
+        ]), b)
+    cols = ["conv_id", "turn_idx", "ts", "arrival_ts", "error_reason", "batch_id"]
+
+    def rows():
+        return sorted(tuple(r) for r in p.dead_letter.read().select(*cols).collect())
+
+    before = rows()
+    assert len(before) == 3 and len(p.table.manifest()["dead_letter_files"]) >= 3
+    st = p.table.compact()
+    assert st["dead_letters_folded"] is True
+    assert len(p.table.manifest()["dead_letter_files"]) == 1
+    assert rows() == before
+    assert before[2][2].microsecond == 254321

@@ -1,7 +1,7 @@
 """Round-2 regression tests: contended-commit isolation + attempt
-history, manifest-driven LWW ordering, DLQ durability across the
-merge-commit/DLQ-append crash window, and the footer-estimate gate
-for filtered batches."""
+history, manifest-driven LWW ordering, a batch and its dead letters
+committing or vanishing together across a crash, and the
+footer-estimate gate for filtered batches."""
 
 import os
 
@@ -70,13 +70,15 @@ def test_contended_commit_retries_and_records_attempt_history(
 
 
 def _unreferenced_files(table):
-    """Parquet files under data/ and lineage/ that no manifest names."""
+    """Parquet files under data/ and lineage/ (lineage and dead-letter
+    side files) that no manifest names."""
     referenced = set()
     for fn in os.listdir(table._log_dir):
         if fn.startswith("v") and fn.endswith(".json"):
             mv = table.manifest(int(fn[1:-5]))
             referenced.update(f["path"] for f in mv["files"])
             referenced.update(mv.get("lineage_files", []))
+            referenced.update(mv.get("dead_letter_files", []))
     found = set()
     for sub in ("data", "lineage"):
         for root, _dirs, files in os.walk(os.path.join(table.path, sub)):
@@ -87,10 +89,13 @@ def _unreferenced_files(table):
     return found - referenced
 
 
-def _lineage(batch_id):
-    return [{"source_id": "s", "batch_id": batch_id, "shard": 0,
+def _side_files(batch_id, dead_letters=None):
+    """A merge ``lineage_fn`` staging one lineage row and, optionally,
+    a dead-letter DataFrame."""
+    rows = [{"source_id": "s", "batch_id": batch_id, "shard": 0,
              "first_seq": 0, "last_seq": 0, "n_events": 1,
              "n_dead_letter": 0, "max_lag_ms": 0}]
+    return lambda: (rows, dead_letters)
 
 
 @pytest.mark.parametrize(
@@ -103,16 +108,21 @@ def test_lost_version_race_leaves_no_unreferenced_files(
     race, merge and append retry against the new state and succeed;
     compact and migrate (whose rewrite is only valid for the snapshot
     they read) fail with ConcurrentCommitError. No attempt leaves a
-    data or lineage file that no manifest references."""
+    data, lineage or dead-letter file that no manifest references."""
     ev = generate_events(SPEC)
     # merge-on-read deltas give compact and migrate data to rewrite;
-    # the lineage rows give compact lineage files to fold
+    # the lineage rows and dead letters give compact side files to fold
     t = TransactionalTable.create(
         spark, tmp_table_path, TRANSCRIPTS_SCHEMA, KEY_COLS, LWW_COLS,
         n_buckets=4, merge_strategy="merge-on-read",
     )
-    t.merge(events_df(spark, ev.iloc[:60]), "s", 0, lineage_df=_lineage(0))
-    t.merge(events_df(spark, ev.iloc[60:120]), "s", 1, lineage_df=_lineage(1))
+    def dead(rows):
+        return events_df(spark, rows).withColumn("error_reason", F.lit("bad"))
+
+    t.merge(events_df(spark, ev.iloc[:60]), "s", 0,
+            lineage_fn=_side_files(0, dead(ev.iloc[:2])))
+    t.merge(events_df(spark, ev.iloc[60:120]), "s", 1,
+            lineage_fn=_side_files(1, dead(ev.iloc[60:62])))
 
     other = TransactionalTable(spark, tmp_table_path)
     orig = t._commit_manifest
@@ -129,7 +139,8 @@ def test_lost_version_race_leaves_no_unreferenced_files(
     payload = [f.name for f in TRANSCRIPTS_SCHEMA.fields]
     run = {
         "merge": lambda: t.merge(
-            events_df(spark, ev.iloc[140:200]), "s", 2, lineage_df=_lineage(2)
+            events_df(spark, ev.iloc[140:200]), "s", 2,
+            lineage_fn=_side_files(2, dead(ev.iloc[140:142])),
         ),
         "append": lambda: t.append(
             events_df(spark, ev.iloc[140:150]).select(*payload)
@@ -186,14 +197,15 @@ def test_custom_lww_cols_order_is_honored(spark, tmp_table_path):
     assert out == {"c1": "winner-high-prio", "c2": "winner"}
 
 
-def test_dlq_append_survives_merge_watermark_skip(spark, tmp_path):
-    """Crash window: merge manifest committed, process dies before the
-    DLQ append. On redelivery the merge is watermark-skipped but the
-    invalid rows MUST still be dead-lettered (and only once)."""
+def test_crash_before_link_hides_batch_and_dead_letters(spark, tmp_path):
+    """A micro-batch is ONE commit: a writer dying after its data and
+    dead letters are staged but before the manifest link leaves neither
+    visible, only unreferenced files the grace-window sweep collects.
+    Redelivery makes both visible once; a second redelivery is
+    watermark-skipped and dead-letters nothing again."""
     cfg = EngineConfig(
         binlog_dir=str(tmp_path / "binlog"),
         table_path=str(tmp_path / "table"),
-        dead_letter_path=str(tmp_path / "dlq"),
         checkpoint_dir=str(tmp_path / "ckpt"),
         n_buckets=4,
     )
@@ -213,24 +225,42 @@ def test_dlq_append_survives_merge_watermark_skip(spark, tmp_path):
         }
     )
     batch = spark.createDataFrame(pdf)
+    t = p.table
+    v0 = t.current_version()
 
-    # simulate the crashed first delivery: merge committed (valid rows
-    # + watermark), DLQ append never happened
-    from nifi_processors_spark.functions.attributes import with_error_reason
+    orig = t._commit_manifest
 
-    tagged = with_error_reason(batch)
-    valid = tagged.filter(F.col("error_reason").isNull()).drop("error_reason")
-    p.table.merge(valid, source_id=cfg.source_id, batch_id=7)
+    def crash(manifest):
+        assert manifest["dead_letter_files"], "dead letters staged before the link"
+        raise RuntimeError("simulated crash before manifest link")
 
-    # redelivery of the same micro-batch
+    t._commit_manifest = crash
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        p.apply_batch(batch, 7)
+    t._commit_manifest = orig
+
+    assert t.current_version() == v0
+    assert t.read().count() == 0 and p.dead_letter.read().count() == 0
+    assert t.watermark(cfg.source_id) is None
+    orphans = _unreferenced_files(t)
+    assert any(f.startswith("lineage/") for f in orphans), orphans
+
+    # redelivery commits the batch and its dead letters in one version
     stats = p.apply_batch(batch, 7)
-    assert stats["skipped"] is True  # merge correctly watermark-skipped
+    assert not stats["skipped"] and stats["n_dead_letter"] == 1
+    assert t.current_version() == v0 + 1
+    assert t.read().count() == 2
     dlq = p.dead_letter.read().toPandas()
     assert len(dlq) == 1 and dlq["error_reason"][0] == "null_text"
+    assert dlq["conv_id"][0] == "c2" and dlq["batch_id"][0] == 7
+    # past the grace window the crash's orphans (dead letters too) go
+    assert orphans <= _unreferenced_files(t)
+    t.expire_snapshots(keep_last=1, grace_secs=0.0)
+    assert _unreferenced_files(t) == set()
 
-    # a second redelivery duplicates nothing (DLQ's own watermark)
-    p.apply_batch(batch, 7)
-    assert p.dead_letter.read().count() == 1
+    # a second redelivery is skipped and duplicates nothing
+    assert p.apply_batch(batch, 7)["skipped"] is True
+    assert t.read().count() == 2 and p.dead_letter.read().count() == 1
 
 
 def test_min_max_key_stats_prune_files_within_bucket(spark, tmp_table_path):

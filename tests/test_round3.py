@@ -300,11 +300,11 @@ def test_lineage_folding_and_snapshot_expiry(spark, tmp_table_path):
                  "2024-01-01 00:00:01", i, 0, "2024-01-01 00:00:01"),
             ]),
             "s", i,
-            lineage_df=[{
+            lineage_fn=lambda i=i: ([{
                 "source_id": "s", "batch_id": i, "shard": 0,
                 "first_seq": i, "last_seq": i, "n_events": 1,
                 "n_dead_letter": 0, "max_lag_ms": 0,
-            }],
+            }], None),
         )
     assert len(t.manifest()["lineage_files"]) == n_batches
 

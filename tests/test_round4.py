@@ -255,7 +255,7 @@ def test_expire_grace_protects_staged_commit(spark, tmp_path):
 
 
 def test_dlq_compaction_preserves_appends_and_bounds_files(spark, tmp_path):
-    """The dead-letter table is append-only: compact() must fold its
+    """An append-only (quarantine) table: compact() must fold its
     one-file-per-poison-batch slivers into a single file WITHOUT
     deduplicating (duplicate bad events are distinct occurrences) and
     WITHOUT losing null-key rows; expire then bounds manifests."""

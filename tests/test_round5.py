@@ -410,14 +410,15 @@ def test_schema_rename_migration_replay_across_cutover(spark, tmp_path):
 def test_endurance_bounded_metadata(spark, tmp_path):
     """Round-5 VERDICT #5 (small-N gate; BENCH/endurance.py runs the
     500-batch campaign): after 60 poison-laced micro-batches with the
-    new maintenance cadence, manifest / data-file / lineage-file
-    counts are all bounded and per-batch wall is flat."""
+    new maintenance cadence, manifest / data-file / lineage-file /
+    dead-letter-file counts are all bounded and per-batch wall is
+    flat."""
     import sys as _sys
 
     _sys.path.insert(
         0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "BENCH")
     )
-    from endurance import run_endurance
+    from endurance import run_endurance, wall_windows
 
     rep = run_endurance(
         spark, str(tmp_path / "endur"), n_batches=60,
@@ -428,11 +429,23 @@ def test_endurance_bounded_metadata(spark, tmp_path):
     # manifests: ≤ keep_last + one maintenance period + slack
     assert rep["main_manifests_on_disk"] <= 4 + 16 + 4
     assert rep["main_data_files"] <= 8  # ≤ one file per bucket
-    assert rep["main_lineage_files"] <= 17  # folded each cadence pass
+    # side files are folded on each cadence pass: at most one period
+    assert rep["main_lineage_files"] <= 17
+    assert 1 <= rep["main_dead_letter_files"] <= 17
     assert rep["metrics_dropped"] == 0
+
     # flat per-batch wall (generous noise bound — the real flatness
-    # evidence is the 500-batch BENCH campaign)
-    assert rep["batch_sec_last"] <= 2 * rep["batch_sec_first"] + 0.5
+    # evidence is the 500-batch BENCH campaign): the median of the last
+    # 10 batches against the median of a warmed window (batches 11-20;
+    # a warm session's first batches run faster than its steady state)
+    def flat(warm, last):
+        return last <= 2 * warm + 0.5
+
+    assert flat(rep["batch_sec_warm"], rep["batch_sec_last"]), rep
+    # the bound still rejects linear growth of 0.1 s per batch, and
+    # accepts a fast start followed by a flat steady state
+    assert not flat(*wall_windows([1.0 + 0.1 * i for i in range(60)]))
+    assert flat(*wall_windows([1.0] * 10 + [2.2] * 50))
 
 
 def test_expire_keeps_young_empty_commit_dir(spark, tmp_path):
