@@ -33,8 +33,6 @@ def parse_args(argv=None):
     ap.add_argument("--binlog-dir", required=True)
     ap.add_argument("--binlog-format", default="parquet", choices=["parquet", "json"])
     ap.add_argument("--table-path", required=True)
-    # unused: dead letters commit in the table's own manifest
-    ap.add_argument("--dead-letter-path", default="")
     ap.add_argument("--checkpoint-dir", required=True)
     ap.add_argument("--source-id", default="binlog")
     ap.add_argument("--n-buckets", type=int, default=64)
@@ -89,7 +87,6 @@ def main(argv=None) -> None:
         binlog_dir=args.binlog_dir,
         binlog_format=args.binlog_format,
         table_path=args.table_path,
-        dead_letter_path=args.dead_letter_path,
         checkpoint_dir=args.checkpoint_dir,
         source_id=args.source_id,
         n_buckets=args.n_buckets,

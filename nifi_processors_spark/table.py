@@ -83,16 +83,6 @@ def _lww_order(manifest: dict) -> list[str]:
     return order
 
 
-def _utc_micros(t: pa.Table) -> pa.Table:
-    """``t`` with every timestamp column as UTC microseconds. Spark
-    writes INT96 timestamps by default, which pyarrow reads as naive
-    UTC values, and Spark 4 rejects nanosecond parquet timestamps."""
-    return t.cast(pa.schema([
-        f.with_type(pa.timestamp("us", tz="UTC")) if pa.types.is_timestamp(f.type) else f
-        for f in t.schema
-    ]))
-
-
 def _aligned(df: DataFrame, schema: T.StructType) -> list:
     """``df``'s columns cast to ``schema``'s fields, in its order; a
     field ``df`` lacks (an older file, a narrower batch) is a typed
@@ -917,102 +907,96 @@ class TransactionalTable:
             )
         }
         version = m["version"] + 1
+        files, staged = m["files"], []
+        stats = {"compacted_buckets": len(frag)}
+        if frag:
+            paths = [
+                os.path.join(self.path, f["path"]) for fs in frag.values() for f in fs
+            ]
+            # one exchange, as in merge: repartitioning by _bucket
+            # clusters every version of a key (keys never span buckets)
+            df = (
+                self.spark.read.schema(self._internal_schema()).parquet(*paths)
+                .withColumn("_bucket", self._bucket_expr(
+                    m["n_buckets"], m.get("bucket_cols") or ["conv_id", "turn_idx"]
+                ))
+                .repartition(len(frag), "_bucket")
+            )
+            if any(f.get("delta") for fs in frag.values() for f in fs):
+                # major compaction of merge-on-read deltas: resolve LWW
+                # winners so the rewritten base files hold exactly one
+                # row per key. MUST happen BEFORE tombstone expiry —
+                # dropping tombstones first would resurrect the older
+                # rows they shadow.
+                df = lww_winners(df, ["_bucket", *m["key_cols"]], _lww_order(m))
+            if drop_tombstones:
+                df = df.filter(~F.col("_deleted"))
+            # the footer-derived tombstone flag of each rewritten file
+            # is provably false after a drop_tombstones compaction
+            commit_rel, new_files = self._write_bucketed(df, version, m["key_cols"][0])
+            staged.append(commit_rel)
+            files = [f for f in m["files"] if f["bucket"] not in frag] + new_files
+            stats["files_before"] = sum(len(v) for v in frag.values())
+            stats["files_after"] = len(new_files)
         # fold side files: streaming deployments add one tiny lineage
         # file (and, for a poison batch, dead-letter files) per
         # micro-batch — left alone the manifest's lists (and the file
-        # count) grow linearly forever
+        # count) grow linearly forever. A copy-on-write stream never
+        # fragments a bucket, so its pass is this metadata-only fold.
         folded, side_staged = self._fold_side_files(m, version)
-        side_stats = {
-            "lineage_folded": "lineage_files" in folded,
-            "dead_letters_folded": "dead_letter_files" in folded,
-        }
-        if not frag:
-            # endurance gap (round 5): a copy-on-write stream keeps its
-            # data files tight (one rewrite per merge) so no bucket is
-            # ever fragmented — but the side files still accumulate.
-            # Fold them in a metadata-only commit.
-            if not folded:
-                return {"skipped": True, "reason": "nothing to compact"}
-            return self._commit(
-                {
-                    **m,
-                    **folded,
-                    "version": version,
-                    "parent": m["version"],
-                    "stats": {"compacted_buckets": 0, **side_stats},
-                },
-                side_staged,
-            )
-        internal = self._internal_schema()
-        paths = [
-            os.path.join(self.path, f["path"]) for fs in frag.values() for f in fs
-        ]
-        df = self.spark.read.schema(internal).parquet(*paths)
-        if any(f.get("delta") for fs in frag.values() for f in fs):
-            # major compaction of merge-on-read deltas: resolve LWW
-            # winners so the rewritten base files hold exactly one row
-            # per key. MUST happen BEFORE tombstone expiry — dropping
-            # tombstones first would resurrect the older rows they
-            # shadow. Keys never span buckets (bucket = key hash), so
-            # per-bucket compaction sees every version of its keys.
-            df = lww_winners(df, m["key_cols"], _lww_order(m))
-        if drop_tombstones:
-            df = df.filter(~F.col("_deleted"))
-        df = df.withColumn(
-            "_bucket",
-            self._bucket_expr(m["n_buckets"], m.get("bucket_cols") or ["conv_id", "turn_idx"]),
-        )
-        # the footer-derived tombstone flag of each rewritten file is
-        # provably false after a drop_tombstones compaction
-        commit_rel, new_files = self._write_bucketed(
-            df.repartition(max(len(frag), 1), "_bucket"), version, m["key_cols"][0]
-        )
-        kept = [f for f in m["files"] if f["bucket"] not in frag]
+        if not frag and not folded:
+            return {"skipped": True, "reason": "nothing to compact"}
         return self._commit(
             {
                 **m,
                 **folded,
                 "version": version,
-                "files": kept + new_files,
+                "files": files,
                 "parent": m["version"],
                 "stats": {
-                    "compacted_buckets": len(frag),
-                    "files_before": sum(len(v) for v in frag.values()),
-                    "files_after": len(new_files),
-                    **side_stats,
+                    **stats,
+                    "lineage_folded": "lineage_files" in folded,
+                    "dead_letters_folded": "dead_letter_files" in folded,
                 },
             },
-            [commit_rel, *side_staged],
+            staged + side_staged,
         )
 
     def _fold_side_files(self, m: dict, version: int) -> tuple[dict, list[str]]:
-        """Concatenate each side-file list of ``m`` holding more than
-        one file into one file (driver-side pyarrow, no Spark job).
-        Returns the folded manifest lists and their table-relative
-        staging dirs; a list with an unreadable input keeps its
-        originals."""
+        """Fold each side-file list of ``m`` holding more than one file
+        into one file. Lineage (a few rows per batch) is concatenated
+        with pyarrow on the driver, no Spark job; dead letters can be a
+        whole bulk batch, so one executor-side Spark job rewrites them
+        and none reaches the driver. Returns the folded manifest lists
+        and their table-relative staging dirs; a list whose fold fails
+        keeps its originals."""
         folded, staged = {}, []
         for key in _SIDE_FILES:
-            files = m.get(key, [])
-            if len(files) < 2:
+            srcs = [os.path.join(self.path, rel) for rel in m.get(key, [])]
+            if len(srcs) < 2:
                 continue
+            rel_dir = self._staging_rel("lineage", version, kind="compact")
+            out_dir = os.path.join(self.path, rel_dir)
             try:
-                tables = [
-                    _utc_micros(pq.read_table(
-                        os.path.join(self.path, rel), coerce_int96_timestamp_unit="us"
-                    ))
-                    for rel in files
-                ]
-                rel_dir = self._staging_rel("lineage", version, kind="compact")
-                os.makedirs(os.path.join(self.path, rel_dir), exist_ok=True)
-                rel = os.path.join(rel_dir, "part-00000.parquet")
-                pq.write_table(
-                    pa.concat_tables(tables, promote_options="default"),
-                    os.path.join(self.path, rel),
-                )
+                if key == "lineage_files":
+                    os.makedirs(out_dir)
+                    pq.write_table(
+                        pa.concat_tables(
+                            [pq.read_table(p) for p in srcs], promote_options="default"
+                        ),
+                        os.path.join(out_dir, "part-00000.parquet"),
+                    )
+                else:
+                    dead = self.spark.read.schema(DEAD_LETTER_SCHEMA).parquet(*srcs)
+                    dead.coalesce(1).write.mode("errorifexists").parquet(out_dir)
             except Exception:
+                self._discard([rel_dir])
                 continue
-            folded[key] = [rel]
+            folded[key] = [
+                os.path.join(rel_dir, fn)
+                for fn in sorted(os.listdir(out_dir))
+                if fn.endswith(".parquet")
+            ]
             staged.append(rel_dir)
         return folded, staged
 

@@ -235,26 +235,37 @@ def test_invalid_row_commits_with_its_batch_in_one_version(spark, tmp_path):
     assert 0 < len(jobs) <= 5, sorted(jobs)
 
 
-def test_folded_dead_letters_read_back_through_spark(spark, tmp_path):
-    """compact() folds the dead-letter files with pyarrow; the folded
-    file must read back through Spark with the same rows and
-    timestamps (a naive pyarrow round-trip of Spark's INT96 timestamps
-    writes nanosecond timestamps, which Spark 4 rejects)."""
+def test_folded_dead_letters_read_back_through_spark(spark, tmp_path, monkeypatch):
+    """compact() folds the dead-letter files, a multi-file batch among
+    them, into one file with an executor-side Spark job: no dead-letter
+    file is read on the driver, and the folded file reads back through
+    Spark with the same rows and microsecond timestamps."""
     p = CdcPipeline(spark, cfg_for(tmp_path, n_buckets=2))
     for b in range(3):
         p.apply_batch(_events(spark, [
             ("I", f"c{b}", 0, "ok", f"2030-01-0{b + 1} 12:34:56.{b}23456", 2 * b),
             ("I", f"c{b}", 1, None, f"2031-02-0{b + 1} 01:02:03.{b}54321", 2 * b + 1),
         ]), b)
+    p.apply_batch(_events(spark, [
+        ("I", "c3", i, None, f"2032-03-04 05:06:07.{i}00001", 10 + i) for i in range(4)
+    ]).repartition(3), 3)
     cols = ["conv_id", "turn_idx", "ts", "arrival_ts", "error_reason", "batch_id"]
 
     def rows():
         return sorted(tuple(r) for r in p.dead_letter.read().select(*cols).collect())
 
     before = rows()
-    assert len(before) == 3 and len(p.table.manifest()["dead_letter_files"]) >= 3
+    dl_files = p.table.manifest()["dead_letter_files"]
+    assert len(before) == 7 and len(dl_files) >= 5
+    driver_reads = []
+    for name in ("read_table", "ParquetFile"):
+        orig = getattr(pq, name)
+        monkeypatch.setattr(pq, name, lambda src, *a, _o=orig, **k: (
+            driver_reads.append(str(src)), _o(src, *a, **k))[1])
     st = p.table.compact()
+    monkeypatch.undo()
     assert st["dead_letters_folded"] is True
+    assert not [r for r in driver_reads for f in dl_files if r.endswith(f)]
     assert len(p.table.manifest()["dead_letter_files"]) == 1
     assert rows() == before
     assert before[2][2].microsecond == 254321

@@ -657,7 +657,6 @@ def test_cli_entrypoint_drains_compacts_and_expires(spark, tmp_path, capsys):
     cli.main([
         "--binlog-dir", binlog,
         "--table-path", str(tmp_path / "t"),
-        "--dead-letter-path", str(tmp_path / "dlq"),
         "--checkpoint-dir", str(tmp_path / "ck"),
         "--max-files-per-trigger", "4",
         "--metrics-level", "summary",
