@@ -39,7 +39,7 @@ from nifi_processors_spark.schema import (
     TRANSCRIPTS_SCHEMA,
 )
 from nifi_processors_spark.sources.binlog import read_binlog_stream
-from nifi_processors_spark.table import TransactionalTable
+from nifi_processors_spark.table import TransactionalTable, _scan
 
 _log = logging.getLogger(__name__)
 
@@ -146,12 +146,7 @@ class CdcPipeline:
                         paths.append(e["path"])
             if not paths:
                 return None
-            reader = self.spark.read.schema(CHANGE_EVENTS_SCHEMA)
-            df = (
-                reader.json(paths)
-                if cfg.binlog_format == "json"
-                else reader.parquet(*paths)
-            )
+            df = _scan(self.spark, paths, CHANGE_EVENTS_SCHEMA, cfg.binlog_format)
             if cfg.initial_position == "latest":
                 snap_path = _os.path.join(
                     cfg.checkpoint_dir, "initial_position_snapshot.json"

@@ -42,6 +42,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import threading
 import time
 import uuid
 
@@ -64,6 +65,8 @@ _TMP_MANIFEST = ".tmp-"  # prefix of a manifest staged in _log/ before its link
 # manifest lists of side files: small parquet files outside the bucketed
 # layout, staged under lineage/ and folded by compact()
 _SIDE_FILES = ("lineage_files", "dead_letter_files")
+_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+_LISTING_LOCK = threading.Lock()  # one raise-and-restore of the threshold at a time
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -83,6 +86,13 @@ def _lww_order(manifest: dict) -> list[str]:
     return order
 
 
+def _schema(manifest: dict, internal: bool = False) -> T.StructType:
+    """``manifest``'s table schema; ``internal`` adds the ``_seq`` and
+    ``_deleted`` columns every data file carries."""
+    s = T.StructType.fromJson(json.loads(manifest["schema"]))
+    return s.add("_seq", T.LongType()).add("_deleted", T.BooleanType()) if internal else s
+
+
 def _aligned(df: DataFrame, schema: T.StructType) -> list:
     """``df``'s columns cast to ``schema``'s fields, in its order; a
     field ``df`` lacks (an older file, a narrower batch) is a typed
@@ -92,6 +102,34 @@ def _aligned(df: DataFrame, schema: T.StructType) -> list:
         (F.col(f.name).cast(f.dataType) if f.name in have else F.lit(None).cast(f.dataType)).alias(f.name)
         for f in schema.fields
     ]
+
+
+def _scan(
+    spark: SparkSession, paths: list[str], schema: T.StructType, fmt: str = "parquet"
+) -> DataFrame:
+    """The one scan of files a manifest (or a stream's source log)
+    names; it starts no Spark job. The explicit ``schema`` reads
+    columns added after a file was written as null; leaf-file paths
+    disable partition inference (no stray ``_bucket`` column); no paths
+    is an empty frame. Spark's file index lists more paths than the
+    session's ``parallelPartitionDiscovery.threshold`` (32) with a job,
+    when the DataFrame is built, so the threshold is raised to
+    ``len(paths)`` for the build alone."""
+    if not paths:
+        return spark.createDataFrame([], schema)
+    reader = spark.read.schema(schema).format(fmt)
+    with _LISTING_LOCK:
+        if len(paths) <= int(spark.conf.get(_LISTING_THRESHOLD)):
+            return reader.load(paths)
+        old = spark.conf.get(_LISTING_THRESHOLD, None)  # None: unset
+        spark.conf.set(_LISTING_THRESHOLD, str(len(paths)))
+        try:
+            return reader.load(paths)
+        finally:
+            if old is None:
+                spark.conf.unset(_LISTING_THRESHOLD)
+            else:
+                spark.conf.set(_LISTING_THRESHOLD, old)
 
 
 class TransactionalTable:
@@ -267,17 +305,7 @@ class TransactionalTable:
     # --------------------------------------------------------- schema
 
     def table_schema(self, version: int | None = None) -> T.StructType:
-        return T.StructType.fromJson(json.loads(self.manifest(version)["schema"]))
-
-    def _internal_schema(self, version: int | None = None) -> T.StructType:
-        s = self.table_schema(version)
-        return T.StructType(
-            list(s.fields)
-            + [
-                T.StructField("_seq", T.LongType(), True),
-                T.StructField("_deleted", T.BooleanType(), True),
-            ]
-        )
+        return _schema(self.manifest(version))
 
     def watermark(self, source_id: str, version: int | None = None) -> int | None:
         wm = self.manifest(version)["watermarks"].get(source_id)
@@ -294,15 +322,8 @@ class TransactionalTable:
         """Snapshot read (time travel via ``version``). Public shape
         drops internal columns and tombstones."""
         m = self.manifest(version)
-        schema = self._internal_schema(version)
         paths = [os.path.join(self.path, f["path"]) for f in m["files"]]
-        if not paths:
-            df = self.spark.createDataFrame([], schema)
-        else:
-            # explicit schema ⇒ old (pre-evolution) files yield nulls
-            # for later-added columns; passing leaf files disables
-            # partition-dir inference so no stray _bucket column.
-            df = self.spark.read.schema(schema).parquet(*paths)
+        df = _scan(self.spark, paths, _schema(m, internal=True))
         # merge-on-read resolution: when delta files exist, a key may
         # appear in several files — take the LWW winner per key (same
         # (lww_cols, _seq) order as the write path) in one shuffle.
@@ -333,16 +354,12 @@ class TransactionalTable:
         unbucketed ``append`` path (bucket = -1) are excluded by any
         pruned read; index tables write through ``merge`` only."""
         m = self.manifest(version)
-        schema = self._internal_schema(version)
         files = m["files"]
         if buckets is not None:
             bset = {int(b) for b in buckets}
             files = [f for f in files if f["bucket"] in bset]
         paths = [os.path.join(self.path, f["path"]) for f in files]
-        if not paths:
-            df = self.spark.createDataFrame([], schema)
-        else:
-            df = self.spark.read.schema(schema).parquet(*paths)
+        df = _scan(self.spark, paths, _schema(m, internal=True))
         return df.filter(~F.col("_deleted")).drop(*INTERNAL_COLS)
 
     def read_lineage(self) -> DataFrame:
@@ -354,9 +371,7 @@ class TransactionalTable:
 
     def _read_side(self, key: str, schema: T.StructType) -> DataFrame:
         paths = [os.path.join(self.path, p) for p in self.manifest().get(key, [])]
-        if not paths:
-            return self.spark.createDataFrame([], schema)
-        return self.spark.read.schema(schema).parquet(*paths)
+        return _scan(self.spark, paths, schema)
 
     # ---------------------------------------------------------- merge
 
@@ -379,7 +394,7 @@ class TransactionalTable:
             if cols is None:
                 cols = m.get("bucket_cols") or ["conv_id", "turn_idx"]
             hash_mode = m.get("bucket_hash", "legacy")
-            schema = T.StructType.fromJson(json.loads(m["schema"]))
+            schema = _schema(m)
         except FileNotFoundError:
             cols = cols or ["conv_id", "turn_idx"]
         exprs = []
@@ -606,8 +621,6 @@ class TransactionalTable:
         key_cols = m["key_cols"]
         n_buckets = m["n_buckets"]
         lww_order = _lww_order(m)
-        cur_schema = T.StructType.fromJson(json.loads(m["schema"]))
-
         # --- schema evolution: union-by-name with the batch's payload
         _non_payload = {"op", "seq", "shard", "arrival_ts", "arrival_idx",
                         "_seq", "_deleted", "_bucket"}
@@ -629,7 +642,7 @@ class TransactionalTable:
                 "it with the current schema, or re-map the stream's "
                 "columns before merge."
             )
-        new_schema = schema_union(cur_schema, batch_payload)
+        new_schema = schema_union(_schema(m), batch_payload)
 
         # --- normalize batch → upsert rows
         up = batch_df.select(
@@ -728,9 +741,8 @@ class TransactionalTable:
         out_cols = ["_bucket", *new_schema.names, *INTERNAL_COLS]
         src = up.select(*out_cols)
         if touched:
-            existing = self.spark.read.schema(self._internal_schema()).parquet(
-                *[os.path.join(self.path, f["path"]) for f in touched]
-            )
+            paths = [os.path.join(self.path, f["path"]) for f in touched]
+            existing = _scan(self.spark, paths, _schema(m, internal=True))
             src = src.unionByName(
                 existing.select(*_aligned(existing, new_schema), "_seq", "_deleted")
                 .withColumn("_bucket", self._bucket_expr(n_buckets, bcols))
@@ -910,13 +922,11 @@ class TransactionalTable:
         files, staged = m["files"], []
         stats = {"compacted_buckets": len(frag)}
         if frag:
-            paths = [
-                os.path.join(self.path, f["path"]) for fs in frag.values() for f in fs
-            ]
+            paths = [os.path.join(self.path, f["path"]) for fs in frag.values() for f in fs]
             # one exchange, as in merge: repartitioning by _bucket
             # clusters every version of a key (keys never span buckets)
             df = (
-                self.spark.read.schema(self._internal_schema()).parquet(*paths)
+                _scan(self.spark, paths, _schema(m, internal=True))
                 .withColumn("_bucket", self._bucket_expr(
                     m["n_buckets"], m.get("bucket_cols") or ["conv_id", "turn_idx"]
                 ))
@@ -987,7 +997,7 @@ class TransactionalTable:
                         os.path.join(out_dir, "part-00000.parquet"),
                     )
                 else:
-                    dead = self.spark.read.schema(DEAD_LETTER_SCHEMA).parquet(*srcs)
+                    dead = _scan(self.spark, srcs, DEAD_LETTER_SCHEMA)
                     dead.coalesce(1).write.mode("errorifexists").parquet(out_dir)
             except Exception:
                 self._discard([rel_dir])
@@ -1031,7 +1041,7 @@ class TransactionalTable:
 
     def _migrate_schema(self, old: str, new: str | None) -> dict:
         m = self.manifest()
-        schema = self.table_schema()
+        schema = _schema(m)
         names = [f.name for f in schema.fields]
         if old not in names:
             raise SchemaEvolutionError(f"no such column {old!r}")
@@ -1060,11 +1070,7 @@ class TransactionalTable:
         # must not change merge semantics), stamp buckets from the OLD
         # schema, then apply the rename/drop
         paths = [os.path.join(self.path, f["path"]) for f in m["files"]]
-        int_schema = self._internal_schema()
-        if paths:
-            df = self.spark.read.schema(int_schema).parquet(*paths)
-        else:
-            df = self.spark.createDataFrame([], int_schema)
+        df = _scan(self.spark, paths, _schema(m, internal=True))
         if any(f.get("delta") for f in m["files"]):
             # merge-on-read with un-compacted deltas: the rewrite must
             # LWW-resolve winners (keeping tombstones — expiry is
@@ -1148,9 +1154,9 @@ class TransactionalTable:
         than its commit attempt, so the age test makes expiry safe to
         run concurrently with merges/appends/compactions; genuinely
         orphaned files (loser attempts whose cleanup died) age out of
-        the grace window and are collected on the next pass. The same
-        test sweeps temp manifests in ``_log/`` on every call: a writer
-        killed between the temp write and the link leaves one behind."""
+        the grace window and are collected on the next pass. Both sweeps
+        (files, and temp manifests in ``_log/``) run on every call, also
+        when no manifest expires: a killed writer leaves them behind."""
         now = time.time()
         log_names = os.listdir(self._log_dir)
         for fn in log_names:
@@ -1166,8 +1172,6 @@ class TransactionalTable:
             for f in log_names
             if f.startswith("v") and f.endswith(".json")
         )
-        if len(versions) <= keep_last:
-            return {"skipped": True, "reason": "nothing to expire"}
         retained, expired = versions[-keep_last:], versions[:-keep_last]
         referenced: set[str] = set()
         for v in retained:
@@ -1211,7 +1215,7 @@ class TransactionalTable:
         for v in expired:
             os.remove(self._manifest_path(v))
         return {
-            "skipped": False,
+            "skipped": not expired,
             "expired_manifests": len(expired),
             "removed_files": removed_files,
             "skipped_in_grace": skipped_young,
@@ -1243,8 +1247,7 @@ class TransactionalTable:
             if wm is not None and batch_id <= int(wm):
                 return {"skipped": True, "reason": "watermark"}
         version = m["version"] + 1
-        cur_schema = T.StructType.fromJson(json.loads(m["schema"]))
-        new_schema = schema_union(cur_schema, df.schema)
+        new_schema = schema_union(_schema(m), df.schema)
         out = df.select(
             *_aligned(df, new_schema),
             F.lit(None).cast("long").alias("_seq"),

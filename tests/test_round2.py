@@ -263,6 +263,41 @@ def test_crash_before_link_hides_batch_and_dead_letters(spark, tmp_path):
     assert t.read().count() == 2 and p.dead_letter.read().count() == 1
 
 
+def test_expire_sweeps_crash_orphans_with_no_manifest_to_expire(spark, tmp_path):
+    """A writer dying after staging its data and dead letters, on a log
+    of ≤ keep_last versions: expire_snapshots still sweeps every orphan
+    past the grace window, expires no manifest, and the table reads."""
+    cfg = EngineConfig(
+        binlog_dir=str(tmp_path / "binlog"),
+        table_path=str(tmp_path / "table"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        n_buckets=4,
+    )
+    p = CdcPipeline(spark, cfg)
+    t = p.table
+    batch = spark.createDataFrame(generate_events(SynthSpec(
+        n_conversations=5, turns_per_conv=2, seed=9
+    )).drop(columns=["arrival_idx"]).assign(text=lambda d: d["text"].where(d.index != 0)))
+    p.apply_batch(batch, 0)
+
+    def crash(manifest):
+        raise RuntimeError("simulated crash before manifest link")
+
+    t._commit_manifest = crash
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        p.apply_batch(batch, 1)
+    del t._commit_manifest
+    orphans = _unreferenced_files(t)
+    assert any("dead_letter" in f for f in orphans), orphans
+    versions = sorted(os.listdir(t._log_dir))
+
+    st = t.expire_snapshots(keep_last=10, grace_secs=0.0)
+    assert st["expired_manifests"] == 0 and st["removed_files"] >= len(orphans)
+    assert _unreferenced_files(t) == set()
+    assert sorted(os.listdir(t._log_dir)) == versions
+    assert t.read().count() > 0 and t.read_dead_letters().count() == 1
+
+
 def test_min_max_key_stats_prune_files_within_bucket(spark, tmp_table_path):
     """Manifest min/max key stats: a small merge whose key range is
     disjoint from a file's range skips that file even when they share
