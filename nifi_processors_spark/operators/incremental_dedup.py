@@ -56,7 +56,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from nifi_processors_spark.table import TransactionalTable
+from nifi_processors_spark.table import TransactionalTable, _bucket_expr
 
 log = logging.getLogger(__name__)
 
@@ -230,7 +230,7 @@ class MinHashLshIndex:
         list bounded by n_buckets (same constraint class as a
         broadcast small side), used to prune the index read."""
         keyed = df.select(F.col(col).alias(key))
-        expr = table._bucket_expr(self.n_buckets, [key])
+        expr = _bucket_expr(table.manifest())
         return [r[0] for r in keyed.select(expr.alias("b")).distinct().collect()]
 
     # ---------------------------------------------------------- ingest

@@ -39,28 +39,9 @@ from nifi_processors_spark.schema import (
     TRANSCRIPTS_SCHEMA,
 )
 from nifi_processors_spark.sources.binlog import read_binlog_stream
-from nifi_processors_spark.table import TransactionalTable, _scan
+from nifi_processors_spark.table import TransactionalTable, _obs_values, _scan
 
 _log = logging.getLogger(__name__)
-
-
-def _obs_values(obs, names: list[str]) -> dict | None:
-    """Latched Observation metrics by POSITION. ``Observation.get``
-    round-trips the JVM row through ``PythonSQLUtils.toPyRow``, which
-    asserts the row carries a schema — in foreachBatch the metrics row
-    sometimes arrives as a schema-less GenericRow and that assertion
-    fires. All our metrics are longs/nulls, which py4j converts
-    natively, so positional access on the JVM row is both safe and
-    schema-independent. Blocks until the first action latches.
-
-    Returns None when the latched row is EMPTY — observed empirically
-    when the first action's result is empty (e.g. every row of the
-    batch was filtered out above the CollectMetrics node); callers
-    must fall back to a direct aggregation for that case."""
-    jrow = obs._jo.getRow()
-    if jrow.size() == 0:
-        return None
-    return {name: jrow.get(i) for i, name in enumerate(names)}
 
 
 class CdcPipeline:
@@ -106,10 +87,10 @@ class CdcPipeline:
         ``Scan ExistingRDD`` wrapper: ``inputFiles()`` is empty, parquet
         footers are unreachable, column pruning is lost, and every
         action re-decodes all ten columns. Measured on the 13.4M-event
-        scaling replay that wrapper costs TWO redundant full decodes
+        scaling replay that wrapper cost TWO redundant full decodes
         per micro-batch — a CollectLimit job for the empty-batch check
-        and the merge's pre-count aggregate (the footer-rows hint can
-        never engage) — ~10 s of a 46 s four-core batch.
+        and the merge's size probe (the footer-rows hint could never
+        engage) — ~10 s of a 46 s four-core batch.
 
         The file source's own commit log (checkpoint/sources/0/<id>)
         records exactly which files belong to this batch (`v1` header +
@@ -197,7 +178,8 @@ class CdcPipeline:
         # ZERO-extra-job metrics: routing counts and per-shard
         # lineage/metrics (the reference accumulated these in its
         # per-record loop, GET:245-267,307-322) ride the merge's OWN
-        # first job as aggregate Observations on the validated batch —
+        # jobs (the copy-on-write size probe, else the write) as
+        # aggregate Observations on the validated batch —
         # no dedicated metrics scan at all. Per-shard granularity is
         # expressed as conditional aggregates (one set per shard id),
         # all evaluated in the same pass.
@@ -234,7 +216,7 @@ class CdcPipeline:
         def _lineage_after_write():
             """Runs inside merge AFTER the data write, BEFORE the
             manifest commit: the observation is latched by then (the
-            merge's first job scanned the observed batch), so the
+            merge's probe or write scanned the observed batch), so the
             lineage rows are pure driver-side bookkeeping, and the dead
             letters cost a job only when there are any. Raising here
             aborts the commit (batch failure ≙ route-all-to-failure +
@@ -277,9 +259,9 @@ class CdcPipeline:
             return rows, dead
 
         # footer-based row count of the RAW (pre-validation) batch — an
-        # upper bound the merge may use to pick the bulk path without a
-        # pre-count job (the validated view is filtered, so its own
-        # plan is not a bare scan)
+        # upper bound the merge uses to pick the bulk path and to size
+        # merge-on-read partitions (the validated view is filtered, so
+        # its own plan is not a bare scan); n_upserts stays exact
         hint = self.table.footer_row_estimate(batch_df)
 
         stats = self.table.merge(
@@ -322,13 +304,7 @@ class CdcPipeline:
         # at or below the configured events/sec — a driver-side sleep,
         # no per-record cost. Skipped batches applied nothing.
         if cfg.put_rate_limit_events_per_sec > 0 and not stats.get("skipped"):
-            applied = int(stats.get("n_upserts") or 0)
-            # a hint-derived n_upserts counts the RAW batch (including
-            # dead-lettered invalid rows) — pace on the rows that
-            # were actually applied, not the upper bound
-            if stats.get("n_upserts_estimated"):
-                applied = max(0, applied - n_dlq)
-            min_elapsed = applied / cfg.put_rate_limit_events_per_sec
+            min_elapsed = int(stats["n_upserts"]) / cfg.put_rate_limit_events_per_sec
             remaining = min_elapsed - (_time.monotonic() - batch_t0)
             if remaining > 0:
                 _time.sleep(remaining)

@@ -51,6 +51,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.observation import Observation
 
 from nifi_processors_spark.operators.dedup import lww_winners
 from nifi_processors_spark.schema import (
@@ -93,15 +94,67 @@ def _schema(manifest: dict, internal: bool = False) -> T.StructType:
     return s.add("_seq", T.LongType()).add("_deleted", T.BooleanType()) if internal else s
 
 
+def _bucket_expr(manifest: dict):
+    """Stable key→bucket hash of ``manifest``'s table. MUST never
+    change for a live table (old files were placed with it). xxhash64
+    is Spark-native and JVM-evaluated (whole-stage codegen — no Python
+    in this path).
+
+    Buckets hash the FULL merge key by default: a viral conversation's
+    turns then spread across all buckets instead of concentrating in
+    one — bucket-level skew is solved structurally (the reference's
+    random-partition-key load spreading, PutKinesisStream.java:264-269,
+    made deterministic). File pruning still works: any batch key hashes
+    to exactly one bucket. Callers pass the snapshot they planned from,
+    so the hash never follows a newer version's schema."""
+    cols = manifest.get("bucket_cols") or ["conv_id", "turn_idx"]
+    types = {f.name: f.dataType.typeName() for f in _schema(manifest).fields}
+    widened = manifest.get("bucket_hash", "legacy") == "widened"
+    exprs = []
+    for c in cols:
+        e = F.col(c)
+        # canonical hash width per chain: int→long / float→double is
+        # value-stable, so widening a key column's type never
+        # re-buckets existing files
+        if widened and types.get(c) in ("byte", "short", "integer", "long"):
+            e = e.cast("long")
+        elif widened and types.get(c) in ("float", "double"):
+            e = e.cast("double")
+        exprs.append(e)
+    return F.pmod(F.xxhash64(*exprs), F.lit(manifest["n_buckets"])).cast("int")
+
+
 def _aligned(df: DataFrame, schema: T.StructType) -> list:
     """``df``'s columns cast to ``schema``'s fields, in its order; a
     field ``df`` lacks (an older file, a narrower batch) is a typed
-    null."""
-    have = set(df.columns)
+    null. A column already of its field's type is a bare reference:
+    each PySpark Column call costs a py4j round trip, and Catalyst
+    drops a same-type cast anyway."""
+    have = {f.name: f.dataType for f in df.schema.fields}
     return [
-        (F.col(f.name).cast(f.dataType) if f.name in have else F.lit(None).cast(f.dataType)).alias(f.name)
+        F.col(f.name) if have.get(f.name) == f.dataType
+        else (F.col(f.name) if f.name in have else F.lit(None)).cast(f.dataType).alias(f.name)
         for f in schema.fields
     ]
+
+
+def _obs_values(obs, names: list[str]) -> dict | None:
+    """Latched Observation metrics by POSITION. ``Observation.get``
+    round-trips the JVM row through ``PythonSQLUtils.toPyRow``, which
+    asserts the row carries a schema — in foreachBatch the metrics row
+    sometimes arrives as a schema-less GenericRow and that assertion
+    fires. All our metrics are longs/nulls, which py4j converts
+    natively, so positional access on the JVM row is both safe and
+    schema-independent. Blocks until the first action latches.
+
+    Returns None when the latched row is EMPTY — observed empirically
+    when the first action's result is empty (e.g. every row of the
+    batch was filtered out above the CollectMetrics node); callers
+    must fall back to a direct aggregation for that case."""
+    jrow = obs._jo.getRow()
+    if jrow.size() == 0:
+        return None
+    return {name: jrow.get(i) for i, name in enumerate(names)}
 
 
 def _scan(
@@ -375,46 +428,6 @@ class TransactionalTable:
 
     # ---------------------------------------------------------- merge
 
-    def _bucket_expr(self, n_buckets: int, bucket_cols: list[str] | None = None):
-        """Stable key→bucket hash. MUST never change for a live table
-        (old files were placed with it). xxhash64 is Spark-native and
-        JVM-evaluated (whole-stage codegen — no Python in this path).
-
-        Buckets hash the FULL merge key by default: a viral
-        conversation's turns then spread across all buckets instead of
-        concentrating in one — bucket-level skew is solved structurally
-        (the reference's random-partition-key load spreading,
-        PutKinesisStream.java:264-269, made deterministic). File
-        pruning still works: any batch key hashes to exactly one
-        bucket."""
-        cols = bucket_cols
-        hash_mode, schema = "legacy", None
-        try:
-            m = self.manifest()
-            if cols is None:
-                cols = m.get("bucket_cols") or ["conv_id", "turn_idx"]
-            hash_mode = m.get("bucket_hash", "legacy")
-            schema = _schema(m)
-        except FileNotFoundError:
-            cols = cols or ["conv_id", "turn_idx"]
-        exprs = []
-        for c in cols:
-            e = F.col(c)
-            if hash_mode == "widened" and schema is not None:
-                tn = next(
-                    (f.dataType.typeName() for f in schema.fields if f.name == c),
-                    None,
-                )
-                # canonical hash width per chain: int→long / float→
-                # double is value-stable, so widening a key column's
-                # type never re-buckets existing files
-                if tn in ("byte", "short", "integer", "long"):
-                    e = e.cast("long")
-                elif tn in ("float", "double"):
-                    e = e.cast("double")
-            exprs.append(e)
-        return F.pmod(F.xxhash64(*exprs), F.lit(n_buckets)).cast("int")
-
     @staticmethod
     def _file_key_stats(md, key_col: str):
         """(min, max) of ``key_col`` from a written file's parquet footer
@@ -644,88 +657,75 @@ class TransactionalTable:
             )
         new_schema = schema_union(_schema(m), batch_payload)
 
-        # --- normalize batch → upsert rows
+        # --- normalize batch → upsert rows, counted by an Observation
+        # that the merge's first job latches: the exact n_upserts of
+        # every path costs no job of its own
+        counted = Observation()
         up = batch_df.select(
             *_aligned(batch_df, new_schema),
             F.col("seq").cast("long").alias("_seq"),
             (F.col("op") == F.lit("D")).alias("_deleted"),
-        )
+        ).observe(counted, F.count(F.lit(1)).alias("n"))
+        up = up.withColumn("_bucket", _bucket_expr(m))
 
-        bcols = m.get("bucket_cols") or ["conv_id", "turn_idx"]
-        up = up.withColumn("_bucket", self._bucket_expr(n_buckets, bcols))
+        def n_upserts() -> int:
+            vals = _obs_values(counted, ["n"])
+            # empty latched row (the action's result was empty): count
+            # directly, as _obs_values documents
+            return up.count() if vals is None else int(vals["n"])
 
-        # --- size the batch WITHOUT a job when possible: for
-        # file-backed batches (the streaming source) the input file
-        # sizes estimate rows on the driver. A clearly-bulk batch
-        # skips the exact pre-count entirely — at bulk spread every
-        # bucket is touched anyway, and the saved job is a full scan.
-        # exact footer estimate exists only for bare-scan file-backed
-        # batches (a filtered view of a big file would overcount,
-        # misreport n_upserts, and wrongly push small batches onto the
-        # all-buckets bulk path, defeating file pruning). The caller's
-        # upper_rows_hint (e.g. footer rows of the raw pre-validation
-        # stream batch) is an upper bound usable ONLY to pick the bulk
-        # path when it is clearly large.
+        # --- size the batch WITHOUT a job when possible: parquet
+        # footers count a bare-scan, file-backed batch exactly (a
+        # filtered view of a big file would overcount, so it gets no
+        # estimate); else the caller's upper_rows_hint (e.g. footer
+        # rows of the raw pre-validation stream batch) bounds it from
+        # above. Either picks the bulk path and sizes partitions; no
+        # estimate is reported as n_upserts.
         est_rows = self.footer_row_estimate(batch_df)
-        bulk_cutoff = 8 * n_buckets * 1000
-        # hint-derived sizes are an UPPER BOUND (pre-validation rows):
-        # usable to pick the bulk path, but n_upserts reported from it
-        # must be flagged as an estimate (the true applied count is
-        # hint − invalid/DLQ rows; the rate limiter corrects for this)
-        n_batch_estimated = False
-        if est_rows is None and upper_rows_hint is not None and upper_rows_hint > bulk_cutoff:
+        if est_rows is None:
             est_rows = upper_rows_hint
-            n_batch_estimated = True
+        bulk = est_rows is not None and est_rows > 8 * n_buckets * 1000
 
+        strategy = m.get("merge_strategy", "copy-on-write")
         key0 = key_cols[0]
-        bucket_ranges: dict[int, tuple] = {}
-        bulk = est_rows is not None and est_rows > bulk_cutoff
-        if bulk:
-            n_batch = est_rows
-            affected = list(range(n_buckets))
-        else:
-            # one light job (map-side-combined count) yields the batch
-            # size, the touched-bucket set (partitions + pruning) AND
-            # each bucket's key range (intra-bucket file pruning)
-            bucket_counts = (
-                up.groupBy("_bucket")
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
+        # the buckets the batch can write → the batch's key range in
+        # each (None: prune no file of that bucket). Merge-on-read
+        # touches NO file (every existing file is kept, the batch lands
+        # as delta files) and a bulk batch hits every bucket, so both
+        # skip the size probe.
+        probed = strategy == "copy-on-write" and not bulk
+        ranges: dict[int, tuple | None] = dict.fromkeys(range(n_buckets))
+        if probed:
+            # the size probe: one light aggregate yields the touched
+            # buckets and each one's key range (intra-bucket file
+            # pruning); it latches `counted`, which then sizes the
+            # partitions exactly
+            ranges = {
+                r["_bucket"]: (r["kmin"], r["kmax"])
+                # F.min/F.max skip nulls, but the LWW aggregation groups
+                # null keys — a bucket whose batch slice holds a null
+                # leading key must not prune ANY file
+                if r["kmin"] is not None and r["knulls"] == 0 else None
+                for r in up.groupBy("_bucket").agg(
                     F.min(key0).alias("kmin"),
                     F.max(key0).alias("kmax"),
-                    # F.min/F.max skip nulls, but the LWW aggregation
-                    # groups null keys — a bucket whose batch slice
-                    # contains a null leading key must not prune ANY
-                    # file (the null-key row matches rows outside
-                    # [kmin, kmax])
                     F.sum(F.isnull(key0).cast("long")).alias("knulls"),
-                )
-                .collect()
-            )
-            n_batch = sum(r["n"] for r in bucket_counts)
-            affected = sorted(r["_bucket"] for r in bucket_counts)
-            bucket_ranges = {
-                r["_bucket"]: (r["kmin"], r["kmax"])
-                for r in bucket_counts
-                if r["kmin"] is not None and r["knulls"] == 0
+                ).collect()
             }
-        affected_set = set(affected)
+            est_rows = n_upserts()
 
-        old_files = m["files"]
-        strategy = m.get("merge_strategy", "copy-on-write")
         # file-level pruning, two tiers: (1) untouched buckets are
         # never read or rewritten; (2) within a touched bucket, a file
         # whose manifest [min_key, max_key] is disjoint from the
         # batch's key range for that bucket cannot contain any batch
         # key (ranges are on the leading key column) — keep it as-is.
-        # merge-on-read touches NOTHING: every existing file is kept
-        # and the batch lands as delta files.
+        old_files = m["files"]
         touched, kept = [], list(old_files) if strategy == "merge-on-read" else []
         for f in [] if strategy == "merge-on-read" else old_files:
-            if f["bucket"] not in affected_set:
+            if f["bucket"] not in ranges:
                 kept.append(f)
                 continue
-            rng = bucket_ranges.get(f["bucket"])
+            rng = ranges[f["bucket"]]
             fmin, fmax = f.get("min_key"), f.get("max_key")
             if (
                 rng is not None
@@ -745,23 +745,21 @@ class TransactionalTable:
             existing = _scan(self.spark, paths, _schema(m, internal=True))
             src = src.unionByName(
                 existing.select(*_aligned(existing, new_schema), "_seq", "_deleted")
-                .withColumn("_bucket", self._bucket_expr(n_buckets, bcols))
+                .withColumn("_bucket", _bucket_expr(m))
             )
 
-        # partition count: one per affected bucket for bulk (the
-        # per-bucket writer is the parallelism unit); otherwise one per
-        # 500k rows aggregated — the batch PLUS the touched rows the
-        # manifest records — so a trickle batch into a small table
-        # doesn't schedule one sliver task per bucket, and one into a
-        # large table doesn't aggregate every touched row in one task.
-        # Entries written before per-file `rows` existed count as one
-        # partition per touched bucket.
-        if bulk:
-            parts = max(len(affected), 1)
-        else:
-            rows = n_batch + sum(f.get("rows", 0) for f in touched)
-            unsized = {f["bucket"] for f in touched if "rows" not in f}
-            parts = max(1, min(len(affected), max(-(-rows // 500_000), len(unsized))))
+        # partitions: one wave across every core — a trickle batch into
+        # 32 buckets must not write its 32 files from one task — or one
+        # per 500k rows aggregated (the batch PLUS the touched rows the
+        # manifest records) when that is more, capped by the buckets
+        # the batch can write: repartitioning by _bucket keeps each
+        # bucket in one task, so the layout stays one file per written
+        # bucket. Entries written before per-file `rows` existed count
+        # as one partition per touched bucket.
+        agg_rows = (est_rows or 0) + sum(f.get("rows", 0) for f in touched)
+        unsized = {f["bucket"] for f in touched if "rows" not in f}
+        cores = self.spark.sparkContext.defaultParallelism
+        parts = max(1, min(len(ranges), max(cores, -(-agg_rows // 500_000), len(unsized))))
 
         # --- one formulation: the LWW winner per key over the batch
         # unioned with the touched files. Batch dedup and merge-vs-
@@ -771,12 +769,14 @@ class TransactionalTable:
         # requirement (bucket ⊂ group keys ⇒ keys co-located) and leaves
         # the output clustered for the partitionBy write — no second
         # shuffle before writing, and one file per touched bucket. AQE
-        # coalesces and splits skewed partitions at runtime.
+        # keeps the explicit partition count (it coalesces only
+        # exchanges without one).
         # Copy-on-write (union-agg) rewrites the touched files;
         # merge-on-read touches none, so it is delta-append
-        # (write-optimized): ONE job over O(batch) rows, appended as
-        # delta files. Readers resolve winners (read()); compact()
-        # folds deltas into base.
+        # (write-optimized): the write alone (2 jobs: its shuffle-map
+        # stage and the write) over O(batch) rows, appended as delta
+        # files. Readers resolve winners (read()); compact() folds
+        # deltas into base.
         merge_path = "delta-append" if strategy == "merge-on-read" else "union-agg"
         out = lww_winners(
             src.repartition(parts, "_bucket"), ["_bucket", *key_cols], lww_order
@@ -784,6 +784,8 @@ class TransactionalTable:
         commit_rel, new_files = self._write_bucketed(
             out, version, key0, delta=strategy == "merge-on-read"
         )
+        # the probe latched the count; else the write did
+        n_up = est_rows if probed else n_upserts()
 
         # --- side files (atomic with the data commit). lineage_fn
         # runs AFTER the data write (so Observation metrics that piggy-
@@ -825,9 +827,9 @@ class TransactionalTable:
         watermarks[source_id] = batch_id
         stats = {
             "merge_path": merge_path,
-            "n_upserts": n_batch,
-            "n_upserts_estimated": n_batch_estimated,
-            "buckets_touched": len(affected),
+            "n_upserts": n_up,
+            # the probe's set; else the buckets of the files written
+            "buckets_touched": len(ranges) if probed else len({f["bucket"] for f in new_files}),
             "files_rewritten": len(touched),
             "files_added": len(new_files),
             "merge_partitions": parts,
@@ -845,7 +847,7 @@ class TransactionalTable:
                 # MUST carry through every commit: files are placed by
                 # this hash — losing either key would silently
                 # re-bucket the table
-                "bucket_cols": bcols,
+                "bucket_cols": m.get("bucket_cols") or ["conv_id", "turn_idx"],
                 "bucket_hash": m.get("bucket_hash", "legacy"),
                 "merge_strategy": strategy,
                 "files": kept + new_files,
@@ -927,9 +929,7 @@ class TransactionalTable:
             # clusters every version of a key (keys never span buckets)
             df = (
                 _scan(self.spark, paths, _schema(m, internal=True))
-                .withColumn("_bucket", self._bucket_expr(
-                    m["n_buckets"], m.get("bucket_cols") or ["conv_id", "turn_idx"]
-                ))
+                .withColumn("_bucket", _bucket_expr(m))
                 .repartition(len(frag), "_bucket")
             )
             if any(f.get("delta") for fs in frag.values() for f in fs):
@@ -1083,10 +1083,7 @@ class TransactionalTable:
             # high). Resolution runs on the OLD names, before the
             # rename touches any column.
             df = lww_winners(df, m["key_cols"], _lww_order(m))
-        bcols = m.get("bucket_cols") or ["conv_id", "turn_idx"]
-        df = df.withColumn(
-            "_bucket", self._bucket_expr(m["n_buckets"], bcols)
-        )
+        df = df.withColumn("_bucket", _bucket_expr(m))
         df = df.drop(old) if new is None else df.withColumnRenamed(old, new)
 
         def _ren(c: str) -> str:

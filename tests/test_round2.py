@@ -484,7 +484,7 @@ def test_footer_estimate_gated_to_bare_scans(spark, tmp_path, tmp_table_path):
     n_small = small.count()
     assert 0 < n_small < len(ev) // 10
     r = t.merge(small, "s", 1)
-    assert r["n_upserts"] == n_small and r["n_upserts_estimated"] is False
+    assert r["n_upserts"] == n_small
     assert r["merge_path"] == "union-agg"
 
     # bare file-backed batches still use the no-job footer shortcut

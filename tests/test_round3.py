@@ -139,13 +139,11 @@ def test_latest_refuses_fresh_snapshot_on_existing_checkpoint(
         read_binlog_stream(spark, cfg)
 
 
-def test_hint_derived_upsert_count_is_flagged_estimate(
-    spark, tmp_table_path
-):
-    """ADVICE r2 (low): when the bulk path is chosen via
-    upper_rows_hint (raw pre-validation rows), n_upserts is an upper
-    bound — stats must say so, so the rate limiter can pace on the
-    true applied count."""
+def test_hint_picks_bulk_path_and_upserts_stay_exact(spark, tmp_table_path):
+    """upper_rows_hint (raw pre-validation rows) picks the bulk path —
+    every bucket's files are rewritten, no size probe prunes them — but
+    n_upserts is always the exact count of the batch's upsert rows,
+    never the hint's upper bound."""
     from nifi_processors_spark.schema import (
         KEY_COLS, LWW_COLS, TRANSCRIPTS_SCHEMA,
     )
@@ -154,18 +152,21 @@ def test_hint_derived_upsert_count_is_flagged_estimate(
 
     ev = generate_events(
         SynthSpec(n_conversations=40, turns_per_conv=4, n_shards=2, seed=3)
-    )
-    df = spark.createDataFrame(ev.drop(columns=["arrival_idx"]))
+    ).drop(columns=["arrival_idx"])
     t = TransactionalTable.create(
         spark, tmp_table_path, TRANSCRIPTS_SCHEMA, KEY_COLS, LWW_COLS,
         n_buckets=4,
     )
-    st = t.merge(df, "s", 0, upper_rows_hint=1_000_000)
-    assert st["n_upserts_estimated"] is True
-    assert st["n_upserts"] == 1_000_000  # the documented upper bound
-    st2 = t.merge(df, "s", 1)
-    assert st2["n_upserts_estimated"] is False
-    assert st2["n_upserts"] == len(ev)
+    st = t.merge(spark.createDataFrame(ev), "s", 0, upper_rows_hint=1_000_000)
+    assert st["n_upserts"] == len(ev)
+    n_files = len(t.manifest()["files"])
+    one = spark.createDataFrame(ev.tail(1))
+    st1 = t.merge(one, "s", 1, upper_rows_hint=1_000_000)
+    assert st1["files_rewritten"] == n_files > 1  # bulk: no pruning
+    assert st1["n_upserts"] == 1
+    st2 = t.merge(one, "s", 2)
+    assert st2["files_rewritten"] == 1  # probed: one bucket's file
+    assert st2["n_upserts"] == 1
 
 
 def test_media_codecs_roundtrip_and_detect_layout():
