@@ -289,19 +289,16 @@ class MinHashLshIndex:
         # — a doc capped out of every band can never appear in a future
         # candidate pair, so the stores stay bounded under viral
         # clusters exactly like the band index itself.
-        def _ev(df: DataFrame) -> DataFrame:
-            return df.withColumn("batch_id", F.lit(b).cast("long")).withColumn(
-                "op", F.lit("I")
-            ).withColumn("seq", F.lit(b).cast("long"))
+        def _append(tbl: TransactionalTable, df: DataFrame) -> dict:
+            stamped = df.withColumn("batch_id", F.lit(b).cast("long"))
+            return tbl.append(stamped, source_id, b)
 
-        st_bands = self.bands.merge(_ev(retained), source_id, b)
-        st_sh = self.shingles.merge(
-            _ev(e.join(retained_docs, "doc_id").select("doc_id", "h")),
-            source_id, b,
+        st_bands = _append(self.bands, retained)
+        st_sh = _append(
+            self.shingles, e.join(retained_docs, "doc_id").select("doc_id", "h")
         )
-        st_docs = self.docs.merge(
-            _ev(sig.join(retained_docs, "doc_id").select("doc_id", "n")),
-            source_id, b,
+        st_docs = _append(
+            self.docs, sig.join(retained_docs, "doc_id").select("doc_id", "n")
         )
 
         # --- probe: candidates = capped batch rows × earlier index
@@ -414,6 +411,7 @@ class MinHashLshIndex:
                     self.spark, pairs_path, PAIRS_SCHEMA,
                     key_cols=["doc_a", "doc_b"], lww_cols=["batch_id"],
                     n_buckets=self.n_buckets, bucket_cols=["doc_a"],
+                    merge_strategy="merge-on-read",
                 )
 
         def _apply(df, batch_id: int):
@@ -429,7 +427,7 @@ class MinHashLshIndex:
             # micro-batch for the stream's lifetime
             self._release_results()
             if maintain_every and (int(batch_id) + 1) % maintain_every == 0:
-                # advisory like the pipeline's DLQ pass — but a
+                # advisory like the pipeline's maintenance — but a
                 # persistently failing maintenance pass means unbounded
                 # index growth, so it must be visible
                 try:
@@ -458,7 +456,8 @@ class MinHashLshIndex:
         """Fold per-batch delta slivers into per-bucket base files and
         expire old snapshots on all three tables — the compaction
         cadence that keeps file/manifest counts bounded over thousands
-        of micro-batches (same contract as the DLQ maintenance)."""
+        of micro-batches (same contract as the pipeline's maintenance
+        cadence)."""
         out = {}
         for name in ("bands", "shingles", "docs"):
             tbl: TransactionalTable = getattr(self, name)

@@ -920,9 +920,9 @@ def split_media_errors(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     reference's success/failure relationship pair, PUT:214-230).
 
     The failure side keeps its ``error_reason`` and is shaped for
-    ``TransactionalTable.append`` — the same DLQ path the CDC side uses
-    (``streaming/pipeline.py`` dead-letter routing): quarantined rows
-    commit durably, valid rows flow on, nothing aborts."""
+    ``TransactionalTable.append`` into a quarantine table keyed by
+    ``media_id``: quarantined rows commit durably, valid rows flow on,
+    nothing aborts."""
     from pyspark.sql import functions as F
 
     ok = df.filter(F.col("error_reason").isNull()).drop("error_reason")

@@ -52,6 +52,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.observation import Observation
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from nifi_processors_spark.operators.dedup import lww_winners
 from nifi_processors_spark.schema import (
@@ -66,6 +67,7 @@ _TMP_MANIFEST = ".tmp-"  # prefix of a manifest staged in _log/ before its link
 # manifest lists of side files: small parquet files outside the bucketed
 # layout, staged under lineage/ and folded by compact()
 _SIDE_FILES = ("lineage_files", "dead_letter_files")
+_LINEAGE_ARROW = to_arrow_schema(LINEAGE_SCHEMA)  # for the driver-side lineage writer
 _LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 _LISTING_LOCK = threading.Lock()  # one raise-and-restore of the threshold at a time
 
@@ -217,6 +219,12 @@ class TransactionalTable:
         is the major compaction folding deltas back into base files."""
         if merge_strategy not in ("copy-on-write", "merge-on-read"):
             raise ValueError(f"unknown merge_strategy {merge_strategy!r}")
+        lww_cols = lww_cols or ["ts"]
+        bucket_cols = bucket_cols or list(key_cols)
+        # the stream's `seq` orders LWW as the internal `_seq`
+        unknown = {*key_cols, *bucket_cols, *(set(lww_cols) - {"seq"})} - set(schema.names)
+        if unknown:
+            raise ValueError(f"key/bucket/lww column(s) {sorted(unknown)} not in schema")
         t = cls(spark, path)
         os.makedirs(t._log_dir, exist_ok=True)
         if t.current_version() is not None:
@@ -225,9 +233,9 @@ class TransactionalTable:
             "version": 0,
             "schema": schema.json(),
             "key_cols": key_cols,
-            "lww_cols": lww_cols or ["ts"],
+            "lww_cols": lww_cols,
             "n_buckets": n_buckets,
-            "bucket_cols": bucket_cols or list(key_cols),
+            "bucket_cols": bucket_cols,
             # hash integer bucket cols as LONG / floats as DOUBLE from
             # day one (Iceberg's bucket-transform rule): type WIDENING
             # of a key column then never moves keys between buckets
@@ -317,6 +325,15 @@ class TransactionalTable:
         for rel in rels:
             shutil.rmtree(os.path.join(self.path, rel), ignore_errors=True)
 
+    def _parquet_parts(self, rel: str) -> list[str]:
+        """The parquet part files written into the staged dir ``rel``,
+        as sorted table-relative paths (manifest entries)."""
+        return [
+            os.path.join(rel, fn)
+            for fn in sorted(os.listdir(os.path.join(self.path, rel)))
+            if fn.endswith(".parquet")
+        ]
+
     @staticmethod
     def _staging_rel(sub: str, version: int, kind: str = "commit") -> str:
         """Unique per-attempt dir: two writers racing the same version
@@ -326,34 +343,6 @@ class TransactionalTable:
         manifest references — the manifest link alone decides the
         winner."""
         return os.path.join(sub, f"{kind}-{version:012d}-{uuid.uuid4().hex[:8]}")
-
-    @staticmethod
-    def _retrying(attempt_fn, retries: int, backoff_ms: int) -> dict:
-        """Optimistic-concurrency loop shared by ``merge`` and
-        ``append``: after a lost version race, re-run
-        ``attempt_fn(history)`` against the new table state with
-        exponential backoff. ``retries``/``backoff_ms`` come from
-        EngineConfig (commit_retries / commit_retry_backoff_ms ≙ the
-        reference's retry policy, ACP:181-188). Each contended attempt
-        is recorded in ``history``, which the committed stats carry as
-        ``attempt_history`` — the analogue of the producer's
-        per-attempt error attributes (PUT:343-364)."""
-        history: list[dict] = []
-        for attempt in range(retries + 1):
-            try:
-                return attempt_fn(history)
-            except ConcurrentCommitError as e:
-                if attempt == retries:
-                    raise
-                delay_ms = backoff_ms * (2**attempt)
-                history.append({
-                    "attempt": attempt + 1,
-                    "error": type(e).__name__,
-                    "message": str(e),
-                    "backoff_ms": delay_ms,
-                })
-                time.sleep(delay_ms / 1000.0)
-        raise AssertionError("unreachable")
 
     # --------------------------------------------------------- schema
 
@@ -403,9 +392,7 @@ class TransactionalTable:
         merge's per-batch watermark guarantees a redelivered batch
         never lands twice). With ``buckets``, only data files PLACED in
         those buckets are read — the LSH index probe reads O(touched
-        buckets) of the corpus, not O(corpus). Files written by the
-        unbucketed ``append`` path (bucket = -1) are excluded by any
-        pruned read; index tables write through ``merge`` only."""
+        buckets) of the corpus, not O(corpus)."""
         m = self.manifest(version)
         files = m["files"]
         if buckets is not None:
@@ -611,15 +598,49 @@ class TransactionalTable:
         committed in the same manifest as the data. Raising aborts the
         commit with nothing made visible.
 
-        A lost commit race is retried against the new table state
-        (``_retrying``); the committed stats carry ``attempt_history``.
+        A lost commit race is retried against the new table state, up
+        to ``retries`` times with exponential backoff from
+        ``backoff_ms`` (EngineConfig commit_retries /
+        commit_retry_backoff_ms ≙ the reference's retry policy,
+        ACP:181-188). Each contended attempt is recorded in the
+        committed stats' ``attempt_history`` — the analogue of the
+        producer's per-attempt error attributes (PUT:343-364).
         """
-        return self._retrying(
-            lambda history: self._merge_once(
-                batch_df, source_id, batch_id, lineage_fn, history,
-                upper_rows_hint,
-            ),
-            retries, backoff_ms,
+        history: list[dict] = []
+        while True:
+            try:
+                return self._merge_once(
+                    batch_df, source_id, batch_id, lineage_fn, history,
+                    upper_rows_hint,
+                )
+            except ConcurrentCommitError as e:
+                if len(history) == retries:
+                    raise
+                delay_ms = backoff_ms * 2 ** len(history)
+                history.append({
+                    "attempt": len(history) + 1,
+                    "error": type(e).__name__,
+                    "message": str(e),
+                    "backoff_ms": delay_ms,
+                })
+                time.sleep(delay_ms / 1000.0)
+
+    def append(
+        self,
+        df: DataFrame,
+        source_id: str,
+        batch_id: int,
+        retries: int = 4,
+        backoff_ms: int = 50,
+    ) -> dict:
+        """Insert ``df``'s rows (table columns only, e.g. a quarantine
+        table's): a ``merge`` of them as upserts sequenced by
+        ``batch_id``, so they are keyed, LWW-resolved and bucketed like
+        every other write, and a redelivered (source_id, batch_id) is a
+        watermark no-op."""
+        return self.merge(
+            df.withColumns({"op": F.lit("I"), "seq": F.lit(batch_id).cast("long")}),
+            source_id, batch_id, retries=retries, backoff_ms=backoff_ms,
         )
 
     def _merge_once(
@@ -814,11 +835,7 @@ class TransactionalTable:
                     ).write.mode("errorifexists").parquet(
                         os.path.join(self.path, dl_rel)
                     )
-                    side["dead_letter_files"] += [
-                        os.path.join(dl_rel, fn)
-                        for fn in sorted(os.listdir(os.path.join(self.path, dl_rel)))
-                        if fn.endswith(".parquet")
-                    ]
+                    side["dead_letter_files"] += self._parquet_parts(dl_rel)
             except Exception:
                 self._discard(staged)
                 raise
@@ -866,25 +883,13 @@ class TransactionalTable:
         table-relative path, or None for empty input."""
         if not rows:
             return None
-        pa_schema = pa.schema(
-            [
-                ("source_id", pa.string()),
-                ("batch_id", pa.int64()),
-                ("shard", pa.int32()),
-                ("first_seq", pa.int64()),
-                ("last_seq", pa.int64()),
-                ("n_events", pa.int64()),
-                ("n_dead_letter", pa.int64()),
-                ("max_lag_ms", pa.int64()),
-            ]
-        )
         out_dir = os.path.join(self.path, lin_rel)
         os.makedirs(out_dir, exist_ok=True)
         rel = os.path.join(lin_rel, "part-00000.parquet")
         pq.write_table(
             pa.Table.from_pylist(
-                [{k: r.get(k) for k in pa_schema.names} for r in rows],
-                schema=pa_schema,
+                [{k: r.get(k) for k in _LINEAGE_ARROW.names} for r in rows],
+                schema=_LINEAGE_ARROW,
             ),
             os.path.join(self.path, rel),
         )
@@ -1002,11 +1007,7 @@ class TransactionalTable:
             except Exception:
                 self._discard([rel_dir])
                 continue
-            folded[key] = [
-                os.path.join(rel_dir, fn)
-                for fn in sorted(os.listdir(out_dir))
-                if fn.endswith(".parquet")
-            ]
+            folded[key] = self._parquet_parts(rel_dir)
             staged.append(rel_dir)
         return folded, staged
 
@@ -1218,63 +1219,3 @@ class TransactionalTable:
             "skipped_in_grace": skipped_young,
             "retained_versions": retained,
         }
-
-    # --------------------------------------------------------- append
-
-    def append(
-        self,
-        df: DataFrame,
-        source_id: str | None = None,
-        batch_id: int | None = None,
-        retries: int = 4,
-        backoff_ms: int = 50,
-    ) -> dict:
-        """Append-only commit (e.g. a quarantine table). Optional
-        (source_id, batch_id) watermark makes re-appends of a
-        redelivered micro-batch no-ops."""
-        return self._retrying(
-            lambda history: self._append_once(df, source_id, batch_id, history),
-            retries, backoff_ms,
-        )
-
-    def _append_once(self, df, source_id, batch_id, attempt_history) -> dict:
-        m = self.manifest()
-        if source_id is not None and batch_id is not None:
-            wm = m["watermarks"].get(source_id)
-            if wm is not None and batch_id <= int(wm):
-                return {"skipped": True, "reason": "watermark"}
-        version = m["version"] + 1
-        new_schema = schema_union(_schema(m), df.schema)
-        out = df.select(
-            *_aligned(df, new_schema),
-            F.lit(None).cast("long").alias("_seq"),
-            F.lit(False).alias("_deleted"),
-        )
-        # unbucketed: every file lands in the bucket -1 dir
-        stage_rel = self._staging_rel("data", version)
-        commit_rel = os.path.join(stage_rel, "_bucket=-1")
-        out.write.mode("errorifexists").parquet(os.path.join(self.path, commit_rel))
-        new_files = [
-            {"path": os.path.join(commit_rel, fn), "bucket": -1}
-            for fn in os.listdir(os.path.join(self.path, commit_rel))
-            if fn.endswith(".parquet")
-        ]
-        watermarks = dict(m["watermarks"])
-        if source_id is not None and batch_id is not None:
-            watermarks[source_id] = batch_id
-        return self._commit(
-            {
-                **m,
-                "version": version,
-                "schema": new_schema.json(),
-                "files": m["files"] + new_files,
-                "watermarks": watermarks,
-                "parent": m["version"],
-                "stats": {
-                    "files_added": len(new_files),
-                    "commit_attempts": len(attempt_history) + 1,
-                    "attempt_history": list(attempt_history),
-                },
-            },
-            [stage_rel],
-        )

@@ -1,3 +1,4 @@
+import contextlib
 import os
 import sys
 
@@ -18,3 +19,18 @@ def spark():
 @pytest.fixture()
 def tmp_table_path(tmp_path):
     return str(tmp_path / "table")
+
+
+@contextlib.contextmanager
+def job_ids(spark, group):
+    """The ids of the Spark jobs started inside the block."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    ids = []
+    try:
+        yield ids
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        # the status store is fed by the async listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        ids.extend(sc.statusTracker().getJobIdsForGroup(group))

@@ -202,6 +202,8 @@ def test_streaming_foreach_batch_index(spark, tmp_path):
     )
     q.awaitTermination(300)
     pairs = TransactionalTable(spark, pairs_path)
+    # each pairs write is an O(batch) delta, not a bucket rewrite
+    assert pairs.manifest()["merge_strategy"] == "merge-on-read"
     got = {
         frozenset((r["doc_a"], r["doc_b"]))
         for r in pairs.read().collect()

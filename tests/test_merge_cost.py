@@ -7,12 +7,12 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from conftest import job_ids
 from nifi_processors_spark.config import EngineConfig
 from nifi_processors_spark.schema import KEY_COLS, LWW_COLS, TRANSCRIPTS_SCHEMA
 from nifi_processors_spark.streaming.pipeline import CdcPipeline
 from nifi_processors_spark.synth import SynthSpec, generate_events
 from nifi_processors_spark.table import TransactionalTable, _aligned
-from test_scan import job_ids
 
 EVENTS = generate_events(SynthSpec(n_conversations=80, turns_per_conv=4, seed=7)).drop(
     columns=["arrival_idx"]

@@ -9,6 +9,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from conftest import job_ids
 from nifi_processors_spark.config import EngineConfig
 from nifi_processors_spark.streaming.pipeline import CdcPipeline
 from nifi_processors_spark.synth import SynthSpec, make_fixture
@@ -214,14 +215,8 @@ def test_invalid_row_commits_with_its_batch_in_one_version(spark, tmp_path):
         ("I", "conv-new", 0, "hello", "2030-01-01", 10_000),
         ("I", "conv-new", 1, None, "2030-01-01", 10_001),  # null_text
     ])
-    sc = spark.sparkContext
-    group = "test-one-commit-per-batch"
-    sc.setJobGroup(group, "copy-on-write batch with one invalid row")
-    try:
+    with job_ids(spark, "test-one-commit-per-batch") as jobs:
         stats = p.apply_batch(batch, 1)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert stats["n_dead_letter"] == 1 and stats["merge_path"] == "union-agg"
     assert p.table.current_version() == v0 + 1
     m = p.table.manifest()

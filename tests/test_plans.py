@@ -3,6 +3,7 @@ the 'would this survive 100×' checks."""
 
 from pyspark.sql import functions as F
 
+from conftest import job_ids
 from nifi_processors_spark.plans.explain import (
     codegen_stages,
     count_exchanges,
@@ -69,14 +70,8 @@ def test_cow_merge_job_budget(spark, tmp_path):
     )
     t.merge(spark.createDataFrame(ev.drop(columns=["arrival_idx"])), "s", 0)
     batch = spark.createDataFrame(ev.tail(3).drop(columns=["arrival_idx"]))
-    sc = spark.sparkContext
-    group = "test-cow-merge-job-budget"
-    sc.setJobGroup(group, "small copy-on-write merge")
-    try:
+    with job_ids(spark, "test-cow-merge-job-budget") as jobs:
         r = t.merge(batch, "s", 1)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert 0 < len(jobs) <= 4, sorted(jobs)
     assert r["merge_path"] == "union-agg" and r["files_rewritten"] > 0
 

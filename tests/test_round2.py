@@ -143,7 +143,7 @@ def test_lost_version_race_leaves_no_unreferenced_files(
             lineage_fn=_side_files(2, dead(ev.iloc[140:142])),
         ),
         "append": lambda: t.append(
-            events_df(spark, ev.iloc[140:150]).select(*payload)
+            events_df(spark, ev.iloc[140:150]).select(*payload), "s", 2
         ),
         "compact": t.compact,
         "migrate_rename_column": lambda: t.migrate_rename_column(

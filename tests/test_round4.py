@@ -255,10 +255,11 @@ def test_expire_grace_protects_staged_commit(spark, tmp_path):
 
 
 def test_dlq_compaction_preserves_appends_and_bounds_files(spark, tmp_path):
-    """An append-only (quarantine) table: compact() must fold its
-    one-file-per-poison-batch slivers into a single file WITHOUT
-    deduplicating (duplicate bad events are distinct occurrences) and
-    WITHOUT losing null-key rows; expire then bounds manifests."""
+    """A keyed quarantine table written by ``append`` (an insert-only
+    merge): redelivered bad events of one key keep ONE live row, the
+    null-key row survives as its own key, and compact() folds the
+    per-append delta slivers without changing either; expire then
+    bounds manifests."""
     import os
 
     from pyspark.sql import types as T
@@ -271,24 +272,27 @@ def test_dlq_compaction_preserves_appends_and_bounds_files(spark, tmp_path):
     ])
     t = TransactionalTable.create(
         spark, str(tmp_path / "dlq"), schema, ["conv_id", "turn_idx"],
-        n_buckets=1,
+        lww_cols=["seq"], n_buckets=1, merge_strategy="merge-on-read",
     )
     rows = [("c1", 0, "bad"), ("c1", 0, "bad"), (None, None, "null-key")]
     for b in range(8):
         t.append(spark.createDataFrame(rows, schema), "dlq", b)
-    assert t.read().count() == 8 * len(rows)
+
+    def live():  # (live rows, null-key rows): one row per key
+        return t.read().count(), t.read().filter("conv_id IS NULL").count()
+
+    assert live() == (2, 1)
     files_before = len(t.manifest()["files"])
     assert files_before >= 8
 
     st = t.compact()
     assert st["files_after"] < files_before
-    assert t.read().count() == 8 * len(rows), "append-only: no dedup"
-    assert t.read().filter("conv_id IS NULL").count() == 8
+    assert live() == (2, 1)
 
     t.expire_snapshots(keep_last=2, grace_secs=0.0)
     logs = os.listdir(os.path.join(str(tmp_path / "dlq"), "_log"))
     assert len([f for f in logs if f.endswith(".json")]) == 2
-    assert t.read().count() == 8 * len(rows)
+    assert live() == (2, 1)
 
 
 # --------------------------------------------------------------------------

@@ -70,9 +70,9 @@ def test_media_stats_quarantines_corrupt_blobs(spark):
 
 
 def test_image_features_quarantine_and_dlq_append(spark, tmp_path):
-    """The failure side of split_media_errors rides the SAME DLQ path
-    the CDC pipeline uses: an append-only TransactionalTable commit —
-    quarantined rows are durable, valid rows flow on, nothing aborts."""
+    """The failure side of split_media_errors commits to a quarantine
+    table keyed by media_id through ``append`` — quarantined rows are
+    durable, valid rows flow on, nothing aborts."""
     from pyspark.sql import types as T
 
     from nifi_processors_spark.table import TransactionalTable
@@ -98,6 +98,7 @@ def test_image_features_quarantine_and_dlq_append(spark, tmp_path):
             ]
         ),
         key_cols=["media_id"],
+        lww_cols=["seq"],
     )
     dlq.append(bad.select("media_id", "error_reason"),
                source_id="media::dlq", batch_id=0)
@@ -463,7 +464,8 @@ def test_expire_keeps_young_empty_commit_dir(spark, tmp_path):
         ]
     )
     tbl = TransactionalTable.create(
-        spark, str(tmp_path / "t"), schema, key_cols=["k"], n_buckets=2
+        spark, str(tmp_path / "t"), schema, key_cols=["k"], lww_cols=["seq"],
+        n_buckets=2,
     )
     for b in range(4):
         tbl.append(spark.createDataFrame([(b, "x")], schema),

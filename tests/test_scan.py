@@ -5,13 +5,13 @@ does so once a scan names more than
 and leaves the session's threshold as it found it."""
 
 import ast
-import contextlib
 import os
 
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import job_ids
 from nifi_processors_spark.schema import KEY_COLS, LWW_COLS, TRANSCRIPTS_SCHEMA
 from nifi_processors_spark.synth import SynthSpec, generate_events, oracle_apply
 from nifi_processors_spark.table import _LISTING_THRESHOLD, TransactionalTable
@@ -19,21 +19,6 @@ from nifi_processors_spark.table import _LISTING_THRESHOLD, TransactionalTable
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 EVENTS = generate_events(SynthSpec(n_conversations=60, turns_per_conv=6, seed=5))
 N_DEAD = 40  # dead-letter files: one per partition
-
-
-@contextlib.contextmanager
-def job_ids(spark, group):
-    """The ids of the Spark jobs started inside the block."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    ids = []
-    try:
-        yield ids
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        # the status store is fed by the async listener bus
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def mor_table(spark, path, n_dead=N_DEAD):

@@ -183,6 +183,41 @@ def test_bucket_pruning_only_touches_affected_files(spark, tmp_table_path):
 
 
 
+def test_append_of_a_held_key_keeps_one_live_row(spark, tmp_table_path):
+    """``append`` is an insert-only merge: appending a key the
+    copy-on-write table already holds replaces its row by LWW (one live
+    row, the later value) and places the file in the key's bucket."""
+    ev = generate_events(SPEC)
+    t = make_table(spark, tmp_table_path, n_buckets=4)
+    t.merge(events_df(spark, ev), "s", 0)
+    held = t.read().orderBy("conv_id", "turn_idx").limit(1).toPandas()
+    held["text"] = "appended"
+    held["ts"] = held["ts"] + pd.Timedelta(days=30)
+    r = t.append(spark.createDataFrame(held), "quarantine", 0)
+    key = (held["conv_id"][0], int(held["turn_idx"][0]))
+    live = t.read().where(
+        f"conv_id = '{key[0]}' AND turn_idx = {key[1]}"
+    ).collect()
+    assert [row["text"] for row in live] == ["appended"]
+    assert r["merge_path"] == "union-agg" and r["n_upserts"] == 1
+    assert all(0 <= f["bucket"] < 4 for f in t.manifest()["files"])
+    assert t.append(spark.createDataFrame(held), "quarantine", 0)["skipped"]
+
+
+@pytest.mark.parametrize("arg", ["key_cols", "bucket_cols", "lww_cols"])
+def test_create_rejects_columns_outside_the_schema(spark, tmp_table_path, arg):
+    """Key, bucket and LWW columns must name schema fields (``seq`` is
+    the stream's LWW column and always allowed): a bad name fails at
+    create, not inside the first merge's plan."""
+    cols = {"key_cols": KEY_COLS, "lww_cols": LWW_COLS, arg: ["nope"]}
+    with pytest.raises(ValueError, match="nope"):
+        TransactionalTable.create(spark, tmp_table_path, TRANSCRIPTS_SCHEMA, **cols)
+    assert not TransactionalTable.exists(spark, tmp_table_path)
+    TransactionalTable.create(
+        spark, tmp_table_path, TRANSCRIPTS_SCHEMA, KEY_COLS, lww_cols=["seq"]
+    )
+
+
 def test_merge_partitions_count_touched_rows(spark, tmp_table_path):
     """The LWW aggregation gets one partition per 500k rows of batch
     PLUS touched rows (manifest `rows`): a small batch into big buckets
