@@ -9,9 +9,13 @@ Iceberg via the same interface — the semantics below are what
 * **Atomic commits**: a snapshot is one JSON manifest under ``_log/``;
   committing is a single ``os.link`` (fails if the version exists —
   optimistic concurrency). Readers only ever see a committed manifest.
-* **Bucketed layout**: data files are hash-bucketed by the merge key's
-  conversation id. A merge touches only the buckets its batch hits —
-  file-level pruning that scales with batch key-spread, not table size.
+* **Bucketed layout**: rows are hash-bucketed by the merge key
+  (``_bucket_expr``), and each data file holds the rows of one write
+  task: one contiguous bucket range, recorded in the manifest as
+  ``min_bucket``/``max_bucket`` (``_span``). A merge touches only the
+  files whose span meets a bucket its batch hits — file-level pruning
+  that scales with batch key-spread, not table size — and a write emits
+  one file per task, not one per bucket.
 * **LWW MERGE**: per (conv_id, turn_idx), max (ts, seq) wins; deletes
   are LWW tombstones (kept internally, filtered from public reads) so
   replaying events in ANY order converges to the same state — this is
@@ -45,6 +49,7 @@ import shutil
 import threading
 import time
 import uuid
+from collections import Counter
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -70,6 +75,7 @@ _SIDE_FILES = ("lineage_files", "dead_letter_files")
 _LINEAGE_ARROW = to_arrow_schema(LINEAGE_SCHEMA)  # for the driver-side lineage writer
 _LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 _LISTING_LOCK = threading.Lock()  # one raise-and-restore of the threshold at a time
+_ROWS_PER_PART = 500_000  # rows one write task aggregates and writes (_write_parts)
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -126,6 +132,27 @@ def _bucket_expr(manifest: dict):
     return F.pmod(F.xxhash64(*exprs), F.lit(manifest["n_buckets"])).cast("int")
 
 
+def _span(f: dict) -> range:
+    """The buckets a data file's rows hash into: its manifest entry's
+    ``min_bucket``..``max_bucket``. Entries written when each file held
+    one bucket (``{"bucket": b}``) span ``[b, b]``."""
+    if "bucket" in f:
+        return range(f["bucket"], f["bucket"] + 1)
+    return range(f["min_bucket"], f["max_bucket"] + 1)
+
+
+def _clustered(df: DataFrame, n_buckets: int, parts: int) -> DataFrame:
+    """``df`` (carrying ``_bucket``) moved over one exchange into
+    ``parts`` tasks, each holding one contiguous bucket range: the plain
+    column ``_part`` is the task id. An aggregate grouped by
+    ``["_part", "_bucket", *keys]`` reuses this partitioning (no second
+    exchange); a computed expression given to ``repartitionById`` would
+    not be recognised and adds one."""
+    return df.withColumn(
+        "_part", F.expr(f"CAST(_bucket * {parts} DIV {n_buckets} AS INT)")
+    ).repartitionById(parts, "_part")
+
+
 def _aligned(df: DataFrame, schema: T.StructType) -> list:
     """``df``'s columns cast to ``schema``'s fields, in its order; a
     field ``df`` lacks (an older file, a narrower batch) is a typed
@@ -145,7 +172,7 @@ def _obs_values(obs, names: list[str]) -> dict | None:
     round-trips the JVM row through ``PythonSQLUtils.toPyRow``, which
     asserts the row carries a schema — in foreachBatch the metrics row
     sometimes arrives as a schema-less GenericRow and that assertion
-    fires. All our metrics are longs/nulls, which py4j converts
+    fires. All our metrics are ints/longs/nulls, which py4j converts
     natively, so positional access on the JVM row is both safe and
     schema-independent. Blocks until the first action latches.
 
@@ -390,14 +417,16 @@ class TransactionalTable:
         asserts each key was written at most once (true for the
         incremental-dedup index tables, whose rows are immutable —
         merge's per-batch watermark guarantees a redelivered batch
-        never lands twice). With ``buckets``, only data files PLACED in
-        those buckets are read — the LSH index probe reads O(touched
-        buckets) of the corpus, not O(corpus)."""
+        never lands twice). With ``buckets``, only data files whose
+        bucket span meets one of them are read — the LSH index probe
+        reads O(touched buckets) of the corpus, not O(corpus). Such a
+        file also holds rows of the other buckets in its span: callers
+        select their keys from the result."""
         m = self.manifest(version)
         files = m["files"]
         if buckets is not None:
             bset = {int(b) for b in buckets}
-            files = [f for f in files if f["bucket"] in bset]
+            files = [f for f in files if not bset.isdisjoint(_span(f))]
         paths = [os.path.join(self.path, f["path"]) for f in files]
         df = _scan(self.spark, paths, _schema(m, internal=True))
         return df.filter(~F.col("_deleted")).drop(*INTERNAL_COLS)
@@ -492,38 +521,48 @@ class TransactionalTable:
     def _write_bucketed(
         self, df: DataFrame, version: int, key_col: str, delta: bool = False
     ) -> tuple[str, list[dict]]:
-        """The one bucketed write: ``df`` (carrying ``_bucket``) lands
-        as ``_bucket=<b>`` parquet dirs under a fresh staging dir, and
-        each written file becomes a manifest entry with its bucket,
-        row count, leading-key range and tombstone flag from ONE footer
-        read.
+        """The one bucketed write: ``df`` (carrying ``_bucket``, and the
+        ``_part`` of ``_clustered``, which is not stored) lands as one
+        parquet file per write task under a fresh staging dir, with
+        ``_bucket`` a stored column. Each file becomes a manifest entry
+        with its bucket span, row count, leading-key range and tombstone
+        flag from ONE footer read; the 0-row file Spark writes for an
+        empty frame is dropped.
         Returns (table-relative staging dir, file entries)."""
         commit_rel = self._staging_rel("data", version)
-        commit_dir = os.path.join(self.path, commit_rel)
-        df.write.partitionBy("_bucket").mode("errorifexists").parquet(commit_dir)
+        df.drop("_part").write.mode("errorifexists").parquet(
+            os.path.join(self.path, commit_rel)
+        )
         entries = []
-        for root, _dirs, files in os.walk(commit_dir):
-            for fn in files:
-                if fn.endswith(".parquet"):
-                    abs_p = os.path.join(root, fn)
-                    # read_metadata opens and closes the file per call —
-                    # ParquetFile would leave the handle to GC
-                    md = pq.read_metadata(abs_p)
-                    entry = {
-                        "path": os.path.relpath(abs_p, self.path),
-                        "bucket": int(root.rsplit("_bucket=", 1)[1]),
-                        "rows": md.num_rows,
-                    }
-                    kmin, kmax = self._file_key_stats(md, key_col)
-                    if kmin is not None:
-                        entry["min_key"], entry["max_key"] = kmin, kmax
-                    if delta:
-                        entry["delta"] = True
-                    tflag = self._file_tombstone_flag(md)
-                    if tflag is not None:
-                        entry["tombstones"] = tflag
-                    entries.append(entry)
+        for rel in self._parquet_parts(commit_rel):
+            abs_p = os.path.join(self.path, rel)
+            # read_metadata opens and closes the file per call —
+            # ParquetFile would leave the handle to GC
+            md = pq.read_metadata(abs_p)
+            if md.num_rows == 0:
+                os.remove(abs_p)
+                continue
+            lo, hi = self._file_key_stats(md, "_bucket")
+            entry = {"path": rel, "min_bucket": lo, "max_bucket": hi, "rows": md.num_rows}
+            kmin, kmax = self._file_key_stats(md, key_col)
+            if kmin is not None:
+                entry["min_key"], entry["max_key"] = kmin, kmax
+            if delta:
+                entry["delta"] = True
+            tflag = self._file_tombstone_flag(md)
+            if tflag is not None:
+                entry["tombstones"] = tflag
+            entries.append(entry)
         return commit_rel, entries
+
+    def _write_parts(self, rows: int, buckets: int) -> int:
+        """How many tasks (so files) a write of ``rows`` rows into
+        ``buckets`` buckets uses: one wave across every core — a
+        trickle batch must not write from one task — or one per
+        ``_ROWS_PER_PART`` rows when that is more, capped by the
+        buckets (a task holds at least one bucket)."""
+        cores = self.spark.sparkContext.defaultParallelism
+        return max(1, min(buckets, max(cores, -(-rows // _ROWS_PER_PART))))
 
     @staticmethod
     def footer_row_estimate(df: DataFrame) -> int | None:
@@ -679,21 +718,28 @@ class TransactionalTable:
         new_schema = schema_union(_schema(m), batch_payload)
 
         # --- normalize batch → upsert rows, counted by an Observation
-        # that the merge's first job latches: the exact n_upserts of
-        # every path costs no job of its own
+        # that the merge's first job latches: the exact n_upserts and
+        # buckets_touched of every path cost no job of their own (the
+        # bucket set is bounded by n_buckets)
         counted = Observation()
+        upsert_stats = [
+            F.count(F.lit(1)).alias("n"),
+            F.size(F.collect_set("_bucket")).alias("buckets"),
+        ]
         up = batch_df.select(
             *_aligned(batch_df, new_schema),
             F.col("seq").cast("long").alias("_seq"),
             (F.col("op") == F.lit("D")).alias("_deleted"),
-        ).observe(counted, F.count(F.lit(1)).alias("n"))
-        up = up.withColumn("_bucket", _bucket_expr(m))
+        ).withColumn("_bucket", _bucket_expr(m)).observe(counted, *upsert_stats)
 
-        def n_upserts() -> int:
-            vals = _obs_values(counted, ["n"])
+        def observed() -> tuple[int, int]:
+            """(n_upserts, buckets_touched)"""
+            vals = _obs_values(counted, ["n", "buckets"])
             # empty latched row (the action's result was empty): count
             # directly, as _obs_values documents
-            return up.count() if vals is None else int(vals["n"])
+            if vals is None:
+                vals = up.agg(*upsert_stats).first().asDict()
+            return int(vals["n"]), int(vals["buckets"])
 
         # --- size the batch WITHOUT a job when possible: parquet
         # footers count a bare-scan, file-backed batch exactly (a
@@ -733,27 +779,22 @@ class TransactionalTable:
                     F.sum(F.isnull(key0).cast("long")).alias("knulls"),
                 ).collect()
             }
-            est_rows = n_upserts()
+            est_rows = observed()[0]
 
-        # file-level pruning, two tiers: (1) untouched buckets are
-        # never read or rewritten; (2) within a touched bucket, a file
-        # whose manifest [min_key, max_key] is disjoint from the
-        # batch's key range for that bucket cannot contain any batch
-        # key (ranges are on the leading key column) — keep it as-is.
+        # file-level pruning, two tiers: (1) a file whose bucket span
+        # meets no bucket the batch hits is never read or rewritten;
+        # (2) a file whose manifest [min_key, max_key] is disjoint from
+        # the batch's key range in each bucket it meets cannot contain
+        # any batch key (ranges are on the leading key column) — keep
+        # it as-is.
         old_files = m["files"]
         touched, kept = [], list(old_files) if strategy == "merge-on-read" else []
         for f in [] if strategy == "merge-on-read" else old_files:
-            if f["bucket"] not in ranges:
-                kept.append(f)
-                continue
-            rng = ranges[f["bucket"]]
+            hit = [ranges[b] for b in _span(f) if b in ranges]
             fmin, fmax = f.get("min_key"), f.get("max_key")
-            if (
-                rng is not None
-                and fmin is not None
-                and fmax is not None
-                and (fmax < rng[0] or fmin > rng[1])
-            ):
+            if not hit or (fmin is not None and all(
+                rng is not None and (fmax < rng[0] or fmin > rng[1]) for rng in hit
+            )):
                 kept.append(f)
             else:
                 touched.append(f)
@@ -769,29 +810,25 @@ class TransactionalTable:
                 .withColumn("_bucket", _bucket_expr(m))
             )
 
-        # partitions: one wave across every core — a trickle batch into
-        # 32 buckets must not write its 32 files from one task — or one
-        # per 500k rows aggregated (the batch PLUS the touched rows the
-        # manifest records) when that is more, capped by the buckets
-        # the batch can write: repartitioning by _bucket keeps each
-        # bucket in one task, so the layout stays one file per written
-        # bucket. Entries written before per-file `rows` existed count
-        # as one partition per touched bucket.
-        agg_rows = (est_rows or 0) + sum(f.get("rows", 0) for f in touched)
-        unsized = {f["bucket"] for f in touched if "rows" not in f}
-        cores = self.spark.sparkContext.defaultParallelism
-        parts = max(1, min(len(ranges), max(cores, -(-agg_rows // 500_000), len(unsized))))
+        # partitions: sized by the rows aggregated (the batch PLUS the
+        # touched rows the manifest records; an entry written before
+        # per-file `rows` existed counts as one partition) and capped by
+        # the buckets in play: those the batch can write and those of
+        # the touched files' spans.
+        in_play = set(ranges).union(*(_span(f) for f in touched))
+        agg_rows = (est_rows or 0) + sum(f.get("rows", _ROWS_PER_PART) for f in touched)
+        parts = self._write_parts(agg_rows, len(in_play))
 
         # --- one formulation: the LWW winner per key over the batch
         # unioned with the touched files. Batch dedup and merge-vs-
         # existing fuse into ONE aggregation, and the whole merge moves
-        # the payload over ONE exchange: repartitioning by _bucket alone
-        # both satisfies the aggregate's clustered-distribution
-        # requirement (bucket ⊂ group keys ⇒ keys co-located) and leaves
-        # the output clustered for the partitionBy write — no second
-        # shuffle before writing, and one file per touched bucket. AQE
-        # keeps the explicit partition count (it coalesces only
-        # exchanges without one).
+        # the payload over ONE exchange: clustering by `_part` (a
+        # contiguous bucket range) satisfies the aggregate's clustered-
+        # distribution requirement (`_part` and `_bucket` lead the group
+        # keys, and keys never span buckets) and leaves each task
+        # holding one bucket range — written as one file, no second
+        # shuffle. AQE keeps the explicit partition count (it coalesces
+        # only exchanges without one).
         # Copy-on-write (union-agg) rewrites the touched files;
         # merge-on-read touches none, so it is delta-append
         # (write-optimized): the write alone (2 jobs: its shuffle-map
@@ -800,13 +837,13 @@ class TransactionalTable:
         # deltas into base.
         merge_path = "delta-append" if strategy == "merge-on-read" else "union-agg"
         out = lww_winners(
-            src.repartition(parts, "_bucket"), ["_bucket", *key_cols], lww_order
-        ).select(*out_cols)
+            _clustered(src, n_buckets, parts), ["_part", "_bucket", *key_cols], lww_order
+        )
         commit_rel, new_files = self._write_bucketed(
             out, version, key0, delta=strategy == "merge-on-read"
         )
-        # the probe latched the count; else the write did
-        n_up = est_rows if probed else n_upserts()
+        # the probe latched the counts; else the write did
+        n_up, buckets_touched = observed()
 
         # --- side files (atomic with the data commit). lineage_fn
         # runs AFTER the data write (so Observation metrics that piggy-
@@ -845,8 +882,7 @@ class TransactionalTable:
         stats = {
             "merge_path": merge_path,
             "n_upserts": n_up,
-            # the probe's set; else the buckets of the files written
-            "buckets_touched": len(ranges) if probed else len({f["bucket"] for f in new_files}),
+            "buckets_touched": buckets_touched,
             "files_rewritten": len(touched),
             "files_added": len(new_files),
             "merge_partitions": parts,
@@ -901,57 +937,69 @@ class TransactionalTable:
         """Rewrite fragmented buckets so each holds at most
         ``max_files_per_bucket`` files; optionally expire delete
         tombstones (safe once no replay older than the deletes can
-        arrive). The analogue of Iceberg's rewrite_data_files."""
+        arrive). The analogue of Iceberg's rewrite_data_files.
+
+        The selection is closed: files whose bucket spans overlap,
+        directly or through other files, form one group, and a group is
+        rewritten whole or not at all — every version of a key lives in
+        files spanning its bucket, so rewriting part of a group would
+        leave a second base row beside the merge-on-read winner."""
         m = self.manifest()
-        by_bucket: dict[int, list[dict]] = {}
-        for f in m["files"]:
-            by_bucket.setdefault(f["bucket"], []).append(f)
-        frag = {
-            b: fs for b, fs in by_bucket.items()
-            if len(fs) > max_files_per_bucket
-            # delta files qualify regardless of count: folding them
-            # into base restores scan-only reads
-            or any(f.get("delta") for f in fs)
-            # tombstone expiry touches only buckets whose files may
-            # actually hold a tombstone: manifests record a per-file
-            # `tombstones` flag from the parquet footer at write time
-            # (absent = written before the flag existed = unknown =
-            # must rewrite). Round-5 VERDICT #1: the previous
-            # `or drop_tombstones` arm rewrote EVERY bucket, 100%
-            # write amplification when a sliver of buckets holds
-            # deletes.
-            or (
-                drop_tombstones
-                and any(f.get("tombstones", True) for f in fs)
+        groups: list[list[dict]] = []  # files of overlapping spans
+        end = -1  # the last bucket of the spans seen so far
+        for f in sorted(m["files"], key=lambda f: _span(f).start):
+            span = _span(f)
+            if span.start > end:  # meets no earlier file's span
+                groups.append([])
+            groups[-1].append(f)
+            end = max(end, span.stop - 1)
+
+        def fragmented(fs: list[dict]) -> bool:
+            return (
+                max(Counter(b for f in fs for b in _span(f)).values()) > max_files_per_bucket
+                # delta files qualify regardless of count: folding them
+                # into base restores scan-only reads
+                or any(f.get("delta") for f in fs)
+                # tombstone expiry touches only files that may actually
+                # hold a tombstone: manifests record a per-file
+                # `tombstones` flag from the parquet footer at write
+                # time (absent = written before the flag existed =
+                # unknown = must rewrite), so an expiry pass never
+                # rewrites the whole table for a sliver of deletes
+                or (drop_tombstones and any(f.get("tombstones", True) for f in fs))
             )
-        }
+
+        frag = [f for fs in groups if fragmented(fs) for f in fs]
         version = m["version"] + 1
         files, staged = m["files"], []
-        stats = {"compacted_buckets": len(frag)}
+        in_play = set().union(*(_span(f) for f in frag))
+        stats = {"compacted_buckets": len(in_play)}
         if frag:
-            paths = [os.path.join(self.path, f["path"]) for fs in frag.values() for f in fs]
-            # one exchange, as in merge: repartitioning by _bucket
-            # clusters every version of a key (keys never span buckets)
-            df = (
+            paths = [os.path.join(self.path, f["path"]) for f in frag]
+            parts = self._write_parts(sum(f.get("rows", _ROWS_PER_PART) for f in frag), len(in_play))
+            # one exchange, as in merge: clustering by bucket range
+            # co-locates every version of a key (keys never span buckets)
+            df = _clustered(
                 _scan(self.spark, paths, _schema(m, internal=True))
-                .withColumn("_bucket", _bucket_expr(m))
-                .repartition(len(frag), "_bucket")
+                .withColumn("_bucket", _bucket_expr(m)),
+                m["n_buckets"], parts,
             )
-            if any(f.get("delta") for fs in frag.values() for f in fs):
+            if any(f.get("delta") for f in frag):
                 # major compaction of merge-on-read deltas: resolve LWW
                 # winners so the rewritten base files hold exactly one
                 # row per key. MUST happen BEFORE tombstone expiry —
                 # dropping tombstones first would resurrect the older
                 # rows they shadow.
-                df = lww_winners(df, ["_bucket", *m["key_cols"]], _lww_order(m))
+                df = lww_winners(df, ["_part", "_bucket", *m["key_cols"]], _lww_order(m))
             if drop_tombstones:
                 df = df.filter(~F.col("_deleted"))
             # the footer-derived tombstone flag of each rewritten file
             # is provably false after a drop_tombstones compaction
             commit_rel, new_files = self._write_bucketed(df, version, m["key_cols"][0])
             staged.append(commit_rel)
-            files = [f for f in m["files"] if f["bucket"] not in frag] + new_files
-            stats["files_before"] = sum(len(v) for v in frag.values())
+            rewritten = {f["path"] for f in frag}
+            files = [f for f in m["files"] if f["path"] not in rewritten] + new_files
+            stats["files_before"] = len(frag)
             stats["files_after"] = len(new_files)
         # fold side files: streaming deployments add one tiny lineage
         # file (and, for a poison batch, dead-letter files) per
@@ -1050,7 +1098,7 @@ class TransactionalTable:
         # is stripped from batch payloads before merge, so a payload
         # column renamed onto one of those names would silently absorb
         # the envelope value instead of producer data; _bucket is the
-        # write path's partition column
+        # bucket id every data file stores as a column
         reserved = {"op", "seq", "shard", "arrival_ts", "arrival_idx",
                     "_bucket", *INTERNAL_COLS}
         if new is not None and (new in names or new in reserved):
@@ -1071,7 +1119,15 @@ class TransactionalTable:
         # must not change merge semantics), stamp buckets from the OLD
         # schema, then apply the rename/drop
         paths = [os.path.join(self.path, f["path"]) for f in m["files"]]
-        df = _scan(self.spark, paths, _schema(m, internal=True))
+        n_buckets = m["n_buckets"]
+        parts = self._write_parts(
+            sum(f.get("rows", _ROWS_PER_PART) for f in m["files"]), n_buckets
+        )
+        df = _clustered(
+            _scan(self.spark, paths, _schema(m, internal=True))
+            .withColumn("_bucket", _bucket_expr(m)),
+            n_buckets, parts,
+        )
         if any(f.get("delta") for f in m["files"]):
             # merge-on-read with un-compacted deltas: the rewrite must
             # LWW-resolve winners (keeping tombstones — expiry is
@@ -1083,8 +1139,7 @@ class TransactionalTable:
             # tombstones on every subsequent read (round-5 ADVICE
             # high). Resolution runs on the OLD names, before the
             # rename touches any column.
-            df = lww_winners(df, m["key_cols"], _lww_order(m))
-        df = df.withColumn("_bucket", _bucket_expr(m))
+            df = lww_winners(df, ["_part", "_bucket", *m["key_cols"]], _lww_order(m))
         df = df.drop(old) if new is None else df.withColumnRenamed(old, new)
 
         def _ren(c: str) -> str:
@@ -1104,9 +1159,7 @@ class TransactionalTable:
         # migration keeps tombstones (LWW-resolved above for MOR
         # sources) — their footer-derived flag lets a later
         # drop_tombstones compact prune correctly
-        commit_rel, new_files = self._write_bucketed(
-            df.repartition(m["n_buckets"], "_bucket"), version, key_cols[0]
-        )
+        commit_rel, new_files = self._write_bucketed(df, version, key_cols[0])
         manifest = {
             **m,
             "version": version,

@@ -3,8 +3,6 @@ against the persistent corpus index in O(batch + touched buckets),
 equivalent to batch recompute, idempotent under redelivery, bounded
 under compaction and viral duplicate clusters."""
 
-import os
-
 import pytest
 
 from nifi_processors_spark.operators.incremental_dedup import MinHashLshIndex
@@ -14,6 +12,7 @@ from nifi_processors_spark.plans.sql_queries import (
     MH_REST_ARRIVAL_TPL,
     MH_SIG_TPL,
 )
+from nifi_processors_spark.table import _span
 
 _BASE = (
     "the quick brown fox jumps over the lazy dog while seventeen "
@@ -130,9 +129,7 @@ def test_probe_is_bucket_pruned_not_corpus_scan(spark, tmp_path):
     _pairs, st = idx.ingest(one, batch_id=3)
     assert st["touched_band_buckets"] <= 3
     full_files = idx.bands.read_raw().inputFiles()
-    some_bucket = int(
-        os.path.basename(os.path.dirname(full_files[0])).split("=")[1]
-    )
+    some_bucket = _span(idx.bands.manifest()["files"][0]).start
     pruned_files = idx.bands.read_raw(buckets=[some_bucket]).inputFiles()
     assert 0 < len(pruned_files) < len(full_files)
     assert set(pruned_files) <= set(full_files)

@@ -1,6 +1,7 @@
 """The fixed cost of one merge: merge-on-read skips the size probe, the
-write runs one wave across every core, n_upserts is one latched
-Observation, and a merge reads its manifest once."""
+write runs one wave across every core and writes one file per task,
+n_upserts and buckets_touched are one latched Observation, and a merge
+reads its manifest once."""
 
 import pandas as pd
 import pytest
@@ -12,7 +13,7 @@ from nifi_processors_spark.config import EngineConfig
 from nifi_processors_spark.schema import KEY_COLS, LWW_COLS, TRANSCRIPTS_SCHEMA
 from nifi_processors_spark.streaming.pipeline import CdcPipeline
 from nifi_processors_spark.synth import SynthSpec, generate_events
-from nifi_processors_spark.table import TransactionalTable, _aligned
+from nifi_processors_spark.table import TransactionalTable, _aligned, _bucket_expr, _span
 
 EVENTS = generate_events(SynthSpec(n_conversations=80, turns_per_conv=4, seed=7)).drop(
     columns=["arrival_idx"]
@@ -54,7 +55,12 @@ def test_mor_merge_skips_size_probe_and_counts_every_upsert(spark, tmp_path):
     assert 0 < len(jobs) <= 2, sorted(jobs)
     assert r["n_upserts"] == len(upd) == 30
     added = [f for f in t.manifest()["files"] if f["path"] not in before]
-    assert r["buckets_touched"] == len({f["bucket"] for f in added}) == r["files_added"]
+    assert r["files_added"] == len(added) <= r["merge_partitions"]
+    batch_buckets = {
+        row[0] for row in batch.select(_bucket_expr(t.manifest())).distinct().collect()
+    }
+    assert r["buckets_touched"] == len(batch_buckets)
+    assert batch_buckets <= {b for f in added for b in _span(f)}
     out = t.read().filter(F.col("text").startswith("new")).toPandas()
     assert len(out) == 15 and (out["text"] == "new2").all()
 
@@ -97,13 +103,24 @@ def test_all_invalid_batch_commits_zero_upserts(spark, tmp_path, strategy):
 def test_trickle_cow_merge_writes_in_one_wave(spark, tmp_path):
     """A small copy-on-write batch into 32 buckets writes from one
     partition per core (capped by the buckets it touches), not from a
-    single task; the layout stays one file per touched bucket."""
+    single task, and each task writes one file, not one per bucket."""
     t = populated(spark, str(tmp_path / "t"), "copy-on-write")
     r = t.merge(spark.createDataFrame(updates(20)), "s", 1)
     cores = spark.sparkContext.defaultParallelism
     assert r["merge_path"] == "union-agg" and r["n_upserts"] == 20
-    assert r["merge_partitions"] == min(r["buckets_touched"], cores)
-    assert r["files_added"] == r["buckets_touched"]
+    assert min(r["buckets_touched"], cores) <= r["merge_partitions"] <= cores
+    assert 0 < r["files_added"] <= r["merge_partitions"]
+
+
+@pytest.mark.parametrize("path", ["probed", "bulk", "merge-on-read"])
+def test_buckets_touched_is_exact_on_every_path(spark, tmp_path, path):
+    """buckets_touched is the number of distinct buckets of the batch on
+    the probed and bulk copy-on-write paths and on merge-on-read."""
+    strategy = "merge-on-read" if path == "merge-on-read" else "copy-on-write"
+    t = populated(spark, str(tmp_path / "t"), strategy)
+    batch = spark.createDataFrame(updates(12))
+    r = t.merge(batch, "s", 1, upper_rows_hint=10**9 if path == "bulk" else None)
+    assert r["buckets_touched"] == batch.select(_bucket_expr(t.manifest())).distinct().count()
 
 
 @pytest.mark.parametrize("strategy", ["copy-on-write", "merge-on-read"])

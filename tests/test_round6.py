@@ -21,7 +21,7 @@ import pyarrow.parquet as pq
 from nifi_processors_spark.config import EngineConfig
 from nifi_processors_spark.schema import KEY_COLS, LWW_COLS, TRANSCRIPTS_SCHEMA
 from nifi_processors_spark.streaming.pipeline import CdcPipeline
-from nifi_processors_spark.table import TransactionalTable
+from nifi_processors_spark.table import TransactionalTable, _span
 
 
 def _ev(conv, turn, op, text, ts, seq):
@@ -62,10 +62,10 @@ def test_merge_records_tombstone_flags(spark, tmp_table_path):
     assert files, "merge wrote no files"
     # every entry carries the flag (footer stats exist for _deleted)
     assert all("tombstones" in f for f in files)
-    flagged = {f["bucket"] for f in files if f["tombstones"]}
+    flagged = [f for f in files if f["tombstones"]]
     assert len(flagged) >= 1
-    # the tombstone lives only in c0's bucket
-    assert len(flagged) < len({f["bucket"] for f in files})
+    # the tombstone lives only in the file holding c0's bucket
+    assert len(flagged) < len(files)
 
 
 def test_compact_drop_tombstones_skips_clean_buckets(spark, tmp_table_path):
@@ -87,8 +87,8 @@ def test_compact_drop_tombstones_skips_clean_buckets(spark, tmp_table_path):
 
     st = t.compact(drop_tombstones=True)
     assert not st.get("skipped")
-    # only tombstone-bearing buckets were rewritten
-    assert st["compacted_buckets"] == len({f["bucket"] for f in dirty})
+    # only the buckets of tombstone-bearing files were rewritten
+    assert st["compacted_buckets"] == len({b for f in dirty for b in _span(f)})
     after = t.manifest()["files"]
     surviving = {f["path"] for f in after}
     # clean base files survive with identical bytes (not rewritten)

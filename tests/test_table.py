@@ -15,7 +15,7 @@ import pytest
 
 from nifi_processors_spark.schema import KEY_COLS, LWW_COLS, TRANSCRIPTS_SCHEMA
 from nifi_processors_spark.synth import SynthSpec, generate_events, oracle_apply
-from nifi_processors_spark.table import TransactionalTable
+from nifi_processors_spark.table import TransactionalTable, _span
 
 SPEC = SynthSpec(n_conversations=60, turns_per_conv=6, n_shards=4, seed=11)
 
@@ -186,7 +186,7 @@ def test_bucket_pruning_only_touches_affected_files(spark, tmp_table_path):
 def test_append_of_a_held_key_keeps_one_live_row(spark, tmp_table_path):
     """``append`` is an insert-only merge: appending a key the
     copy-on-write table already holds replaces its row by LWW (one live
-    row, the later value) and places the file in the key's bucket."""
+    row, the later value) and places the file in the table's buckets."""
     ev = generate_events(SPEC)
     t = make_table(spark, tmp_table_path, n_buckets=4)
     t.merge(events_df(spark, ev), "s", 0)
@@ -200,7 +200,7 @@ def test_append_of_a_held_key_keeps_one_live_row(spark, tmp_table_path):
     ).collect()
     assert [row["text"] for row in live] == ["appended"]
     assert r["merge_path"] == "union-agg" and r["n_upserts"] == 1
-    assert all(0 <= f["bucket"] < 4 for f in t.manifest()["files"])
+    assert all(0 <= b < 4 for f in t.manifest()["files"] for b in _span(f))
     assert t.append(spark.createDataFrame(held), "quarantine", 0)["skipped"]
 
 
