@@ -49,7 +49,6 @@ import shutil
 import threading
 import time
 import uuid
-from collections import Counter
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -68,6 +67,11 @@ from nifi_processors_spark.schema import (
 )
 
 INTERNAL_COLS = ["_seq", "_deleted"]
+# never payload: the stream envelope (stripped from a batch before its
+# payload joins the schema) and the columns every data file stores
+_NON_PAYLOAD = frozenset(
+    {"op", "seq", "shard", "arrival_ts", "arrival_idx", "_bucket", *INTERNAL_COLS}
+)
 _TMP_MANIFEST = ".tmp-"  # prefix of a manifest staged in _log/ before its link
 # manifest lists of side files: small parquet files outside the bucketed
 # layout, staged under lineage/ and folded by compact()
@@ -165,6 +169,35 @@ def _aligned(df: DataFrame, schema: T.StructType) -> list:
         else (F.col(f.name) if f.name in have else F.lit(None)).cast(f.dataType).alias(f.name)
         for f in schema.fields
     ]
+
+
+def _column_stats(md, name: str) -> tuple | None:
+    """(min, max, null_count) of column ``name`` over every row group
+    of a written file's parquet footer (``md``: its FileMetaData) —
+    driver-side, a few ms, no Spark job. None when the column is absent
+    or a row group has no min/max (an all-null one has none); the null
+    count is None when a row group does not record it. At cluster scale
+    these stats would be collected executor-side during the write (as
+    Iceberg does); the manifest format is the same either way."""
+    try:  # an absent column (index) or no row group (min) raises: None
+        idx = [md.schema.column(i).path for i in range(md.num_columns)].index(name)
+        mins, maxs, nulls = [], [], 0
+        for rg in range(md.num_row_groups):
+            st = md.row_group(rg).column(idx).statistics
+            if st is None or not st.has_min_max:
+                return None
+            # parquet writers may TRUNCATE long string stats (the stored
+            # max can be a prefix that compares LOWER than real values —
+            # unsound for pruning). Keys here are short ids; refuse
+            # stats that could be truncated.
+            if isinstance(st.max, (str, bytes)) and (len(st.max) >= 60 or len(st.min) >= 60):
+                return None
+            mins.append(st.min)
+            maxs.append(st.max)
+            nulls = None if nulls is None or st.null_count is None else nulls + st.null_count
+        return min(mins), max(maxs), nulls
+    except Exception:
+        return None
 
 
 def _obs_values(obs, names: list[str]) -> dict | None:
@@ -444,80 +477,6 @@ class TransactionalTable:
 
     # ---------------------------------------------------------- merge
 
-    @staticmethod
-    def _file_key_stats(md, key_col: str):
-        """(min, max) of ``key_col`` from a written file's parquet footer
-        (``md``: its FileMetaData) statistics — driver-side, a few ms,
-        no Spark job. Returns (None, None) when stats are unavailable
-        (never prune then). At cluster scale these stats would be
-        collected executor-side during the write (as Iceberg does); the
-        manifest format is the same either way."""
-        try:
-            idx = {
-                md.schema.column(i).name: i for i in range(md.num_columns)
-            }.get(key_col)
-            if idx is None:
-                return None, None
-            mins, maxs = [], []
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx).statistics
-                if st is None or not st.has_min_max:
-                    return None, None
-                # min/max stats EXCLUDE nulls, but the merge's LWW
-                # aggregation groups null keys: a file holding a
-                # null-key row must never be pruned on its non-null
-                # range, or a null-key upsert would insert a second
-                # live row for the same key and break LWW convergence.
-                if st.null_count is None or st.null_count > 0:
-                    return None, None
-                # parquet writers may TRUNCATE long string stats (the
-                # stored max can be a prefix that compares LOWER than
-                # real values — unsound for pruning). Keys here are
-                # short ids; refuse stats that could be truncated.
-                if isinstance(st.max, (str, bytes)) and (
-                    len(st.max) >= 60 or len(st.min) >= 60
-                ):
-                    return None, None
-                mins.append(st.min)
-                maxs.append(st.max)
-            return (min(mins), max(maxs)) if mins else (None, None)
-        except Exception:
-            return None, None
-
-    @staticmethod
-    def _file_tombstone_flag(md) -> bool | None:
-        """Whether the file holds any delete tombstone, from the
-        parquet footer's ``_deleted`` column statistics (driver-side,
-        no job — same pattern as ``_file_key_stats``). False only when
-        every row group's max is provably false with zero nulls; None
-        (unknown) when stats are missing, which callers must treat as
-        "may contain tombstones". Recorded per file at write time so a
-        ``compact(drop_tombstones=True)`` major compaction can skip
-        buckets that provably have nothing to expire (round-6 fix for
-        the round-5 write-amplification finding: the drop_tombstones
-        arm rewrote 100%% of the table when 2%% of buckets held
-        tombstones)."""
-        try:
-            idx = {
-                md.schema.column(i).name: i for i in range(md.num_columns)
-            }.get("_deleted")
-            if idx is None:
-                return None
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx).statistics
-                if st is None or not st.has_min_max:
-                    return None
-                # a null _deleted is not a live row under read()'s
-                # `~_deleted` filter — treat files holding one as
-                # tombstone-bearing so expiry always rewrites them
-                if st.null_count is None or st.null_count > 0:
-                    return True
-                if bool(st.max):
-                    return True
-            return False
-        except Exception:
-            return None
-
     def _write_bucketed(
         self, df: DataFrame, version: int, key_col: str, delta: bool = False
     ) -> tuple[str, list[dict]]:
@@ -542,16 +501,26 @@ class TransactionalTable:
             if md.num_rows == 0:
                 os.remove(abs_p)
                 continue
-            lo, hi = self._file_key_stats(md, "_bucket")
+            lo, hi, _ = _column_stats(md, "_bucket") or (None, None, None)
             entry = {"path": rel, "min_bucket": lo, "max_bucket": hi, "rows": md.num_rows}
-            kmin, kmax = self._file_key_stats(md, key_col)
-            if kmin is not None:
-                entry["min_key"], entry["max_key"] = kmin, kmax
+            key = _column_stats(md, key_col)
+            # min/max stats EXCLUDE nulls, but the merge's LWW
+            # aggregation groups null keys: a file holding a null-key
+            # row must never be pruned on its non-null range, or a
+            # null-key upsert would insert a second live row for the
+            # same key and break LWW convergence
+            if key is not None and key[2] == 0:
+                entry["min_key"], entry["max_key"] = key[:2]
             if delta:
                 entry["delta"] = True
-            tflag = self._file_tombstone_flag(md)
-            if tflag is not None:
-                entry["tombstones"] = tflag
+            # whether the file may hold a delete tombstone, so a
+            # compact(drop_tombstones=True) skips files that provably
+            # hold none; no stats = flag absent = "may hold one". A
+            # null _deleted is not a live row under read()'s
+            # `~_deleted` filter, so a file holding one is flagged too
+            dead = _column_stats(md, "_deleted")
+            if dead is not None:
+                entry["tombstones"] = dead[2] != 0 or bool(dead[1])
             entries.append(entry)
         return commit_rel, entries
 
@@ -563,6 +532,44 @@ class TransactionalTable:
         buckets (a task holds at least one bucket)."""
         cores = self.spark.sparkContext.defaultParallelism
         return max(1, min(buckets, max(cores, -(-rows // _ROWS_PER_PART))))
+
+    def _resolved(
+        self, m: dict, files: list[dict], schema: T.StructType,
+        batch: DataFrame | None = None, batch_rows: int = 0, buckets=(),
+    ) -> tuple[DataFrame, int]:
+        """The one resolve-and-rewrite step of merge, compact and
+        migrate: ``files`` of ``m`` scanned and aligned to ``schema``
+        (tombstones and internal columns kept), ``_bucket`` stamped from
+        ``m``, and unioned with ``batch`` (upsert rows carrying
+        ``_bucket``; ``batch_rows`` estimates them, ``buckets`` are the
+        buckets it can write); then clustered into ``parts`` write tasks
+        — sized by the rows the manifest records (an entry without
+        ``rows`` counts as one task's worth) and capped by the buckets
+        in play, the batch's and the files' spans — and reduced to the
+        LWW winner per key. Clustering by ``_part`` (a contiguous bucket
+        range) satisfies the aggregate's clustered-distribution
+        requirement (``_part`` and ``_bucket`` lead the group keys, and
+        keys never span buckets), so the whole rewrite moves the
+        payload over ONE exchange and each task writes one file. AQE
+        keeps the explicit partition count (it coalesces only exchanges
+        without one). With no batch and no delta file every key is
+        already resolved, and the aggregate is skipped.
+        Returns (rows to write, parts)."""
+        df = batch
+        if files or batch is None:
+            paths = [os.path.join(self.path, f["path"]) for f in files]
+            existing = _scan(self.spark, paths, _schema(m, internal=True))
+            existing = existing.select(
+                *_aligned(existing, schema), *INTERNAL_COLS
+            ).withColumn("_bucket", _bucket_expr(m))
+            df = existing if batch is None else batch.unionByName(existing)
+        in_play = set(buckets).union(*(_span(f) for f in files))
+        rows = batch_rows + sum(f.get("rows", _ROWS_PER_PART) for f in files)
+        parts = self._write_parts(rows, len(in_play))
+        df = _clustered(df, m["n_buckets"], parts)
+        if batch is not None or any(f.get("delta") for f in files):
+            df = lww_winners(df, ["_part", "_bucket", *m["key_cols"]], _lww_order(m))
+        return df, parts
 
     @staticmethod
     def footer_row_estimate(df: DataFrame) -> int | None:
@@ -691,14 +698,10 @@ class TransactionalTable:
         if wm is not None and batch_id <= int(wm):
             return {"skipped": True, "reason": "watermark", "batch_id": batch_id}
 
-        key_cols = m["key_cols"]
         n_buckets = m["n_buckets"]
-        lww_order = _lww_order(m)
         # --- schema evolution: union-by-name with the batch's payload
-        _non_payload = {"op", "seq", "shard", "arrival_ts", "arrival_idx",
-                        "_seq", "_deleted", "_bucket"}
         batch_payload = T.StructType(
-            [f for f in batch_df.schema.fields if f.name not in _non_payload]
+            [f for f in batch_df.schema.fields if f.name not in _NON_PAYLOAD]
         )
         # LOUD reject of retired names (round-5 VERDICT #6): after a
         # rename/drop migration, a producer still emitting the old
@@ -741,20 +744,21 @@ class TransactionalTable:
                 vals = up.agg(*upsert_stats).first().asDict()
             return int(vals["n"]), int(vals["buckets"])
 
-        # --- size the batch WITHOUT a job when possible: parquet
+        # --- size the batch WITHOUT a job when possible: the caller's
+        # upper_rows_hint (e.g. footer rows of the raw pre-validation
+        # stream batch) bounds it from above; without one, parquet
         # footers count a bare-scan, file-backed batch exactly (a
         # filtered view of a big file would overcount, so it gets no
-        # estimate); else the caller's upper_rows_hint (e.g. footer
-        # rows of the raw pre-validation stream batch) bounds it from
-        # above. Either picks the bulk path and sizes partitions; no
-        # estimate is reported as n_upserts.
-        est_rows = self.footer_row_estimate(batch_df)
+        # estimate; building that answer costs an optimized plan, so
+        # a hinted merge never asks). Either picks the bulk path and
+        # sizes partitions; no estimate is reported as n_upserts.
+        est_rows = upper_rows_hint
         if est_rows is None:
-            est_rows = upper_rows_hint
+            est_rows = self.footer_row_estimate(batch_df)
         bulk = est_rows is not None and est_rows > 8 * n_buckets * 1000
 
         strategy = m.get("merge_strategy", "copy-on-write")
-        key0 = key_cols[0]
+        key0 = m["key_cols"][0]
         # the buckets the batch can write → the batch's key range in
         # each (None: prune no file of that bucket). Merge-on-read
         # touches NO file (every existing file is kept, the batch lands
@@ -799,45 +803,19 @@ class TransactionalTable:
             else:
                 touched.append(f)
 
-        version = m["version"] + 1
-        out_cols = ["_bucket", *new_schema.names, *INTERNAL_COLS]
-        src = up.select(*out_cols)
-        if touched:
-            paths = [os.path.join(self.path, f["path"]) for f in touched]
-            existing = _scan(self.spark, paths, _schema(m, internal=True))
-            src = src.unionByName(
-                existing.select(*_aligned(existing, new_schema), "_seq", "_deleted")
-                .withColumn("_bucket", _bucket_expr(m))
-            )
-
-        # partitions: sized by the rows aggregated (the batch PLUS the
-        # touched rows the manifest records; an entry written before
-        # per-file `rows` existed counts as one partition) and capped by
-        # the buckets in play: those the batch can write and those of
-        # the touched files' spans.
-        in_play = set(ranges).union(*(_span(f) for f in touched))
-        agg_rows = (est_rows or 0) + sum(f.get("rows", _ROWS_PER_PART) for f in touched)
-        parts = self._write_parts(agg_rows, len(in_play))
-
         # --- one formulation: the LWW winner per key over the batch
-        # unioned with the touched files. Batch dedup and merge-vs-
-        # existing fuse into ONE aggregation, and the whole merge moves
-        # the payload over ONE exchange: clustering by `_part` (a
-        # contiguous bucket range) satisfies the aggregate's clustered-
-        # distribution requirement (`_part` and `_bucket` lead the group
-        # keys, and keys never span buckets) and leaves each task
-        # holding one bucket range — written as one file, no second
-        # shuffle. AQE keeps the explicit partition count (it coalesces
-        # only exchanges without one).
+        # unioned with the touched files (_resolved): batch dedup and
+        # merge-vs-existing fuse into ONE aggregation over ONE exchange.
         # Copy-on-write (union-agg) rewrites the touched files;
         # merge-on-read touches none, so it is delta-append
         # (write-optimized): the write alone (2 jobs: its shuffle-map
         # stage and the write) over O(batch) rows, appended as delta
         # files. Readers resolve winners (read()); compact() folds
         # deltas into base.
+        version = m["version"] + 1
         merge_path = "delta-append" if strategy == "merge-on-read" else "union-agg"
-        out = lww_winners(
-            _clustered(src, n_buckets, parts), ["_part", "_bucket", *key_cols], lww_order
+        out, parts = self._resolved(
+            m, touched, new_schema, batch=up, batch_rows=est_rows or 0, buckets=ranges
         )
         commit_rel, new_files = self._write_bucketed(
             out, version, key0, delta=strategy == "merge-on-read"
@@ -933,11 +911,11 @@ class TransactionalTable:
 
     # ----------------------------------------------------- maintenance
 
-    def compact(self, drop_tombstones: bool = False, max_files_per_bucket: int = 1) -> dict:
-        """Rewrite fragmented buckets so each holds at most
-        ``max_files_per_bucket`` files; optionally expire delete
-        tombstones (safe once no replay older than the deletes can
-        arrive). The analogue of Iceberg's rewrite_data_files.
+    def compact(self, drop_tombstones: bool = False) -> dict:
+        """Rewrite fragmented buckets so each is held by one base file;
+        optionally expire delete tombstones (safe once no replay older
+        than the deletes can arrive). The analogue of Iceberg's
+        rewrite_data_files.
 
         The selection is closed: files whose bucket spans overlap,
         directly or through other files, form one group, and a group is
@@ -956,7 +934,10 @@ class TransactionalTable:
 
         def fragmented(fs: list[dict]) -> bool:
             return (
-                max(Counter(b for f in fs for b in _span(f)).values()) > max_files_per_bucket
+                # some bucket is held by more than one file: a group's
+                # spans cover one contiguous range, so a second file
+                # shares a bucket with an earlier one
+                len(fs) > 1
                 # delta files qualify regardless of count: folding them
                 # into base restores scan-only reads
                 or any(f.get("delta") for f in fs)
@@ -972,25 +953,14 @@ class TransactionalTable:
         frag = [f for fs in groups if fragmented(fs) for f in fs]
         version = m["version"] + 1
         files, staged = m["files"], []
-        in_play = set().union(*(_span(f) for f in frag))
-        stats = {"compacted_buckets": len(in_play)}
+        stats = {"compacted_buckets": len(set().union(*(_span(f) for f in frag)))}
         if frag:
-            paths = [os.path.join(self.path, f["path"]) for f in frag]
-            parts = self._write_parts(sum(f.get("rows", _ROWS_PER_PART) for f in frag), len(in_play))
-            # one exchange, as in merge: clustering by bucket range
-            # co-locates every version of a key (keys never span buckets)
-            df = _clustered(
-                _scan(self.spark, paths, _schema(m, internal=True))
-                .withColumn("_bucket", _bucket_expr(m)),
-                m["n_buckets"], parts,
-            )
-            if any(f.get("delta") for f in frag):
-                # major compaction of merge-on-read deltas: resolve LWW
-                # winners so the rewritten base files hold exactly one
-                # row per key. MUST happen BEFORE tombstone expiry —
-                # dropping tombstones first would resurrect the older
-                # rows they shadow.
-                df = lww_winners(df, ["_part", "_bucket", *m["key_cols"]], _lww_order(m))
+            # a major compaction of merge-on-read deltas resolves LWW
+            # winners (_resolved) so the rewritten base files hold
+            # exactly one row per key. That MUST happen BEFORE tombstone
+            # expiry — dropping tombstones first would resurrect the
+            # older rows they shadow.
+            df, _ = self._resolved(m, frag, _schema(m))
             if drop_tombstones:
                 df = df.filter(~F.col("_deleted"))
             # the footer-derived tombstone flag of each rewritten file
@@ -1099,9 +1069,7 @@ class TransactionalTable:
         # column renamed onto one of those names would silently absorb
         # the envelope value instead of producer data; _bucket is the
         # bucket id every data file stores as a column
-        reserved = {"op", "seq", "shard", "arrival_ts", "arrival_idx",
-                    "_bucket", *INTERNAL_COLS}
-        if new is not None and (new in names or new in reserved):
+        if new is not None and (new in names or new in _NON_PAYLOAD):
             raise SchemaEvolutionError(
                 f"column {new!r} already exists or is a reserved name"
             )
@@ -1117,29 +1085,15 @@ class TransactionalTable:
 
         # read EVERYTHING (tombstones + internal cols — a migration
         # must not change merge semantics), stamp buckets from the OLD
-        # schema, then apply the rename/drop
-        paths = [os.path.join(self.path, f["path"]) for f in m["files"]]
-        n_buckets = m["n_buckets"]
-        parts = self._write_parts(
-            sum(f.get("rows", _ROWS_PER_PART) for f in m["files"]), n_buckets
-        )
-        df = _clustered(
-            _scan(self.spark, paths, _schema(m, internal=True))
-            .withColumn("_bucket", _bucket_expr(m)),
-            n_buckets, parts,
-        )
-        if any(f.get("delta") for f in m["files"]):
-            # merge-on-read with un-compacted deltas: the rewrite must
-            # LWW-resolve winners (keeping tombstones — expiry is
-            # compact()'s job, not migration's) exactly like compact()
-            # does, or the rewritten files would hold every key
-            # version WITHOUT the delta flag and read()'s
-            # LWW-resolution gate (`any(f.get("delta"))`) would stop
-            # firing — duplicate key versions and resurrected
-            # tombstones on every subsequent read (round-5 ADVICE
-            # high). Resolution runs on the OLD names, before the
-            # rename touches any column.
-            df = lww_winners(df, ["_part", "_bucket", *m["key_cols"]], _lww_order(m))
+        # schema, then apply the rename/drop. Un-compacted
+        # merge-on-read deltas are LWW-resolved (_resolved; tombstones
+        # kept — expiry is compact()'s job), or the rewritten files
+        # would hold every key version WITHOUT the delta flag and
+        # read()'s LWW-resolution gate (`any(f.get("delta"))`) would
+        # stop firing — duplicate key versions and resurrected
+        # tombstones on every later read. Resolution runs on the OLD
+        # names, before the rename touches any column.
+        df, _ = self._resolved(m, m["files"], schema)
         df = df.drop(old) if new is None else df.withColumnRenamed(old, new)
 
         def _ren(c: str) -> str:
@@ -1181,7 +1135,7 @@ class TransactionalTable:
                 "migration": "rename" if new is not None else "drop",
                 "column": old,
                 **({"renamed_to": new} if new is not None else {}),
-                "files_rewritten": len(paths),
+                "files_rewritten": len(m["files"]),
             },
         }
         return self._commit(manifest, [commit_rel])

@@ -4,6 +4,7 @@ contiguous bucket range recorded as ``min_bucket``/``max_bucket``
 entries of the older one-file-per-bucket form (``{"bucket": b}``) keep
 working beside span entries."""
 
+import ast
 import json
 import os
 
@@ -12,10 +13,12 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from nifi_processors_spark.plans.explain import count_exchanges
 from nifi_processors_spark.schema import KEY_COLS, LWW_COLS, TRANSCRIPTS_SCHEMA
 from nifi_processors_spark.synth import SynthSpec, generate_events, oracle_apply
 from nifi_processors_spark.table import TransactionalTable, _bucket_expr, _span
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 EVENTS = generate_events(SynthSpec(n_conversations=40, turns_per_conv=4, seed=5)).drop(
     columns=["arrival_idx"]
 )
@@ -132,3 +135,53 @@ def test_legacy_one_bucket_entries_keep_working(spark, tmp_path, monkeypatch, st
     assert_state(t, events)
     assert t.expire_snapshots(keep_last=1, grace_secs=0)["removed_files"] > 0
     assert_state(t, events)
+
+
+@pytest.mark.parametrize("strategy", ["copy-on-write", "merge-on-read"])
+def test_every_rewrite_moves_rows_over_one_exchange(spark, tmp_path, monkeypatch, strategy):
+    """The frame each write receives — a merge's over touched files (or
+    its delta-append), a compaction's and a migration's — plans one
+    shuffle exchange, and the table still equals the oracle."""
+    exchanges = {}  # version -> shuffle exchanges of its write
+    write = TransactionalTable._write_bucketed
+
+    def counted(self, df, version, *args, **kwargs):
+        exchanges[version] = count_exchanges(df)
+        return write(self, df, version, *args, **kwargs)
+
+    monkeypatch.setattr(TransactionalTable, "_write_bucketed", counted)
+    t = TransactionalTable.create(
+        spark, str(tmp_path / "t"), TRANSCRIPTS_SCHEMA, KEY_COLS, LWW_COLS,
+        n_buckets=8, merge_strategy=strategy,
+    )
+    t.merge(spark.createDataFrame(EVENTS), "s", 0)
+    upd = updates_in(spark, t, [1, 2])
+    rewritten = t.merge(spark.createDataFrame(upd), "s", 1)["files_rewritten"]
+    assert (rewritten > 0) == (strategy == "copy-on-write")
+    assert t.compact(drop_tombstones=True)["files_after"] > 0
+    t.migrate_rename_column("text", "body")
+    assert exchanges == {1: 1, 2: 1, 3: 1, 4: 1}
+    got = t.read().withColumnRenamed("body", "text")
+    pd.testing.assert_frame_equal(
+        got.orderBy(*KEY_COLS).toPandas()[["conv_id", "turn_idx", "role", "text", "tool", "ts"]],
+        oracle_apply(pd.concat([EVENTS, upd], ignore_index=True)).reset_index(drop=True),
+        check_dtype=False,
+    )
+
+
+def test_one_rewrite_path_and_one_footer_reader():
+    """Merge, compact and migrate resolve through ``_resolved``: it
+    alone clusters rows into write tasks and picks ``_part``-keyed LWW
+    winners. Only ``_write_bucketed`` reads footer statistics."""
+    tree = ast.parse(open(os.path.join(REPO, "nifi_processors_spark/table.py")).read())
+    calls = {}  # callee -> names of the functions holding its calls
+    for fn in ast.walk(tree):
+        if isinstance(fn, ast.FunctionDef):
+            for node in ast.walk(fn):
+                if isinstance(node, ast.Call) and isinstance(node.func, ast.Name):
+                    name = node.func.id
+                    if name != "lww_winners" or "'_part'" in ast.unparse(node):
+                        calls.setdefault(name, set()).add(fn.name)
+    assert calls["_clustered"] == {"_resolved"}
+    assert calls["lww_winners"] == {"_resolved"}
+    assert calls["_column_stats"] == {"_write_bucketed"}
