@@ -11,7 +11,7 @@ the stream touches stayed BOUNDED:
 * driver RSS (sampled throughout — flat, not linear in batches),
 * per-batch wall (median of a warmed window vs of the last K — flat,
   not growing),
-* metrics queue/drop counters.
+* metrics record/drop counters.
 
 Run directly (writes BENCH/endurance_r{N}.json) or through
 tests/test_round5.py::test_endurance_bounded_metadata (small N).
@@ -103,7 +103,6 @@ def run_endurance(
         maintenance_every_n_batches=maintenance_every,
         maintenance_keep_last=keep_last,
         metrics_path=os.path.join(work_dir, "metrics.jsonl"),
-        metrics_buffer_secs=2.0,
     )
     pipe = CdcPipeline(spark, cfg)
 

@@ -43,9 +43,8 @@ def parse_args(argv=None):
                     choices=["shard", "stream", "global"])
     ap.add_argument("--metrics-level", default="summary",
                     choices=["none", "summary", "detailed"],
-                    help="buffered telemetry detail (lineage rows are "
-                         "always committed regardless)")
-    ap.add_argument("--metrics-buffer-secs", type=float, default=10.0)
+                    help="telemetry detail (lineage rows are always "
+                         "committed regardless)")
     ap.add_argument("--metrics-path", default="",
                     help="JSONL telemetry sink; empty = log only")
     ap.add_argument("--initial-position", default="earliest",
@@ -95,7 +94,6 @@ def main(argv=None) -> None:
         trigger_interval_ms=args.trigger_interval_ms,
         metrics_granularity=args.metrics_granularity,
         metrics_level=args.metrics_level,
-        metrics_buffer_secs=args.metrics_buffer_secs,
         metrics_path=args.metrics_path,
         initial_position=args.initial_position,
         merge_strategy=args.merge_strategy,
@@ -104,15 +102,7 @@ def main(argv=None) -> None:
     transform = make_transform(redact=True) if args.redact else None
     pipe = CdcPipeline(spark, cfg, transform=transform)
     if args.continuous:
-        q = pipe.start(available_now=False)
-        try:
-            q.awaitTermination()
-        finally:
-            # drain buffered telemetry on ANY exit (Ctrl-C, stream
-            # error) — the background timer covers idle periods, this
-            # covers termination (≙ flushSync on shutdown)
-            if pipe.metrics is not None:
-                pipe.metrics.close()
+        pipe.start(available_now=False).awaitTermination()
     else:
         pipe.run_once(timeout_s=86_400)
         # compaction also folds the lineage and dead-letter files

@@ -75,14 +75,16 @@ class EngineConfig:
     checkpoint_dir: str = ""
     source_id: str = "binlog"
 
-    # --- metrics (≙ CloudWatch metrics props ACP:193-224) ---
+    # --- metrics (≙ CloudWatch metrics props ACP:193-205) ---
+    # metrics_enabled=False commits no lineage rows and emits nothing
     metrics_enabled: bool = True
     metrics_granularity: str = "shard"  # shard | stream | global APP:131-138
-    # buffered telemetry channel (decoupled from the atomically
-    # committed lineage rows — see streaming/metrics.py):
+    # telemetry channel, written once per committed micro-batch, after
+    # the commit, with no buffer (a local append; the reference's 10 s
+    # buffer and 10,000-record queue, ACP:207-224, exist for a remote
+    # rate-limited API — see streaming/metrics.py). It never fails a
+    # batch; the committed lineage rows are the correctness record.
     metrics_level: str = "summary"  # none | summary | detailed ACP:196-205
-    metrics_buffer_secs: float = 10.0  # ≙ metric buffering time ACP:207-214
-    metrics_queue_size: int = 10_000  # ≙ bounded publisher queue ACP:216-224
     metrics_path: str = ""  # JSONL sink; empty = log only
     metrics_namespace: str = "cdc"  # ≙ producer metric namespace APP:120-129
 
@@ -115,10 +117,6 @@ class EngineConfig:
             raise ConfigError("metrics_granularity: shard|stream|global")
         if self.metrics_level not in ("none", "summary", "detailed"):
             raise ConfigError("metrics_level: none|summary|detailed")
-        if not (0 <= self.metrics_buffer_secs <= 3600):
-            raise ConfigError("metrics_buffer_secs must be in [0, 3600]")
-        if not (1 <= self.metrics_queue_size <= 10_000_000):
-            raise ConfigError("metrics_queue_size must be in [1, 10000000]")
         # range validation ≙ KPD:49 createLongValidator(1, 500, false)
         for name, lo, hi in [
             ("max_files_per_trigger", 1, 100_000),

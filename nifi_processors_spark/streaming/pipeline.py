@@ -31,7 +31,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nifi_processors_spark.config import EngineConfig
-from nifi_processors_spark.functions.attributes import validate_events
 from nifi_processors_spark.schema import (
     CHANGE_EVENTS_SCHEMA,
     KEY_COLS,
@@ -39,7 +38,7 @@ from nifi_processors_spark.schema import (
     TRANSCRIPTS_SCHEMA,
 )
 from nifi_processors_spark.sources.binlog import read_binlog_stream
-from nifi_processors_spark.table import TransactionalTable, _obs_values, _scan
+from nifi_processors_spark.table import TransactionalTable, _aliased, _obs_values, _scan
 
 _log = logging.getLogger(__name__)
 
@@ -64,16 +63,14 @@ class CdcPipeline:
         # dead letters ride each batch's manifest: a read view, no table
         self.dead_letter = SimpleNamespace(read=self.table.read_dead_letters)
         self.last_batch_stats: dict = {}
-        # buffered telemetry channel (≙ CloudWatch metric buffering,
-        # ACP:193-224) — decoupled from the atomic lineage commit
+        # telemetry channel (≙ CloudWatch metrics, ACP:193-205) —
+        # written after each commit, apart from the atomic lineage rows
         self.metrics = None
         if config.metrics_enabled and config.metrics_level != "none":
             from nifi_processors_spark.streaming.metrics import MetricsEmitter
 
             self.metrics = MetricsEmitter(
                 level=config.metrics_level,
-                buffer_secs=config.metrics_buffer_secs,
-                queue_size=config.metrics_queue_size,
                 path=config.metrics_path,
                 namespace=config.metrics_namespace,
             )
@@ -185,27 +182,23 @@ class CdcPipeline:
         # all evaluated in the same pass.
         obs = Observation(f"cdc-b{batch_id}-{_uuid.uuid4().hex[:6]}")
         tags = list(range(cfg.n_shards)) if cfg.metrics_granularity == "shard" else [None]
-        expr_names = ["inv_total"]
-        exprs = [F.sum(is_err.cast("long")).alias("inv_total")]
+        exprs = {"inv_total": F.sum(is_err.cast("long"))}
         for s in tags:
             in_s = F.lit(True) if s is None else (F.col("shard") == s)
             ok, ko = in_s & ~is_err, in_s & is_err
             t = "all" if s is None else str(s)
-            exprs += [
-                F.sum(ko.cast("long")).alias(f"inv_{t}"),
-                F.sum(ok.cast("long")).alias(f"n_{t}"),
-                F.min(F.when(ok, F.col("seq"))).alias(f"fs_{t}"),
-                F.max(F.when(ok, F.col("seq"))).alias(f"ls_{t}"),
-                F.max(
-                    F.when(
-                        ok,
-                        F.unix_millis(F.current_timestamp())
-                        - F.unix_millis(F.col("arrival_ts")),
-                    )
-                ).alias(f"lag_{t}"),
-            ]
-            expr_names += [f"inv_{t}", f"n_{t}", f"fs_{t}", f"ls_{t}", f"lag_{t}"]
-        tagged = tagged.observe(obs, *exprs)
+            exprs[f"inv_{t}"] = F.sum(ko.cast("long"))
+            exprs[f"n_{t}"] = F.sum(ok.cast("long"))
+            exprs[f"fs_{t}"] = F.min(F.when(ok, F.col("seq")))
+            exprs[f"ls_{t}"] = F.max(F.when(ok, F.col("seq")))
+            exprs[f"lag_{t}"] = F.max(
+                F.when(
+                    ok,
+                    F.unix_millis(F.current_timestamp())
+                    - F.unix_millis(F.col("arrival_ts")),
+                )
+            )
+        tagged = tagged.observe(obs, *_aliased(exprs))
 
         valid = tagged.filter(F.col("error_reason").isNull()).drop("error_reason")
         if self.transform is not None:
@@ -221,14 +214,7 @@ class CdcPipeline:
             letters cost a job only when there are any. Raising here
             aborts the commit (batch failure ≙ route-all-to-failure +
             yield, PUT:329-333) with nothing made visible."""
-            vals = _obs_values(obs, expr_names)
-            if vals is None:
-                # the observation latched an empty row (all rows of
-                # this batch filtered out before the first action's
-                # output — e.g. an all-invalid micro-batch): compute
-                # the same aggregates with one direct job
-                row = tagged.agg(*exprs).collect()[0]
-                vals = {n: row[n] for n in expr_names}
+            vals = _obs_values(obs, tagged, exprs)
             n_inv = int(vals["inv_total"] or 0)
             holder["n_dlq"] = n_inv
             if n_inv and cfg.fail_on_dead_letter:
@@ -318,9 +304,8 @@ class CdcPipeline:
             "seconds": round(_time.monotonic() - batch_t0, 3),
         }
         if self.metrics is not None:
-            # post-commit, fire-and-forget: reuses the merge's latched
-            # Observation values (zero extra jobs); buffered + flushed
-            # on the emitter's own clock, never on the commit path
+            # post-commit and never raising: reuses the merge's latched
+            # Observation values (zero extra jobs)
             self.metrics.record_batch(
                 batch_id, stats, holder.get("lineage_rows")
             )
@@ -358,7 +343,3 @@ class CdcPipeline:
         finally:
             if q.isActive:
                 q.stop()
-            if self.metrics is not None:
-                # ≙ flushSync on shutdown (PUT:369-376) for telemetry:
-                # drain the buffer and park the background timer
-                self.metrics.close()

@@ -49,6 +49,7 @@ import shutil
 import threading
 import time
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -200,8 +201,15 @@ def _column_stats(md, name: str) -> tuple | None:
         return None
 
 
-def _obs_values(obs, names: list[str]) -> dict | None:
-    """Latched Observation metrics by POSITION. ``Observation.get``
+def _aliased(exprs: dict) -> list:
+    """The ``{name: aggregate}`` exprs of an Observation as columns."""
+    return [c.alias(n) for n, c in exprs.items()]
+
+
+def _obs_values(obs, df: DataFrame, exprs: dict) -> dict:
+    """The values of ``df.observe(obs, *_aliased(exprs))`` by name.
+
+    Reads the latched row by POSITION. ``Observation.get``
     round-trips the JVM row through ``PythonSQLUtils.toPyRow``, which
     asserts the row carries a schema — in foreachBatch the metrics row
     sometimes arrives as a schema-less GenericRow and that assertion
@@ -209,14 +217,14 @@ def _obs_values(obs, names: list[str]) -> dict | None:
     natively, so positional access on the JVM row is both safe and
     schema-independent. Blocks until the first action latches.
 
-    Returns None when the latched row is EMPTY — observed empirically
-    when the first action's result is empty (e.g. every row of the
-    batch was filtered out above the CollectMetrics node); callers
-    must fall back to a direct aggregation for that case."""
+    The latched row is EMPTY when the first action's result is empty
+    (e.g. every row of the batch was filtered out above the
+    CollectMetrics node, as in an all-invalid micro-batch); the same
+    aggregates are then computed over ``df`` with one direct job."""
     jrow = obs._jo.getRow()
     if jrow.size() == 0:
-        return None
-    return {name: jrow.get(i) for i, name in enumerate(names)}
+        return df.agg(*_aliased(exprs)).first().asDict()
+    return {name: jrow.get(i) for i, name in enumerate(exprs)}
 
 
 def _scan(
@@ -582,25 +590,13 @@ class TransactionalTable:
                 p[7:] if p.startswith("file://") else p for p in df.inputFiles()
             ]
             if paths and TransactionalTable._is_bare_scan(df):
-                if len(paths) > 8:
-                    # a bulk batch spans hundreds of segment files;
-                    # footer opens are independent ~ms IO — thread them
-                    # so the driver-side estimate stays O(ms), not
-                    # O(files) serial latency on the micro-batch path
-                    from concurrent.futures import ThreadPoolExecutor
-
-                    # read_metadata (not ParquetFile) closes each file
-                    # handle per call — 16 concurrent opens over
-                    # hundreds of files per bulk batch would otherwise
-                    # ride on GC for fd release
-                    with ThreadPoolExecutor(max_workers=16) as ex:
-                        return sum(
-                            ex.map(
-                                lambda p: pq.read_metadata(p).num_rows,
-                                paths,
-                            )
-                        )
-                return sum(pq.read_metadata(p).num_rows for p in paths)
+                # a bulk batch spans hundreds of segment files; footer
+                # opens are independent ~ms IO — threaded, the driver-
+                # side estimate stays O(ms), not O(files) serial latency.
+                # read_metadata (not ParquetFile) closes each file handle
+                # per call instead of leaving fd release to GC
+                with ThreadPoolExecutor(max_workers=min(16, len(paths))) as ex:
+                    return sum(ex.map(lambda p: pq.read_metadata(p).num_rows, paths))
         except Exception:
             pass
         return None
@@ -725,23 +721,20 @@ class TransactionalTable:
         # buckets_touched of every path cost no job of their own (the
         # bucket set is bounded by n_buckets)
         counted = Observation()
-        upsert_stats = [
-            F.count(F.lit(1)).alias("n"),
-            F.size(F.collect_set("_bucket")).alias("buckets"),
-        ]
+        upsert_stats = {
+            "n": F.count(F.lit(1)),
+            "buckets": F.size(F.collect_set("_bucket")),
+        }
         up = batch_df.select(
             *_aligned(batch_df, new_schema),
             F.col("seq").cast("long").alias("_seq"),
             (F.col("op") == F.lit("D")).alias("_deleted"),
-        ).withColumn("_bucket", _bucket_expr(m)).observe(counted, *upsert_stats)
+        ).withColumn("_bucket", _bucket_expr(m))
+        up = up.observe(counted, *_aliased(upsert_stats))
 
         def observed() -> tuple[int, int]:
             """(n_upserts, buckets_touched)"""
-            vals = _obs_values(counted, ["n", "buckets"])
-            # empty latched row (the action's result was empty): count
-            # directly, as _obs_values documents
-            if vals is None:
-                vals = up.agg(*upsert_stats).first().asDict()
+            vals = _obs_values(counted, up, upsert_stats)
             return int(vals["n"]), int(vals["buckets"])
 
         # --- size the batch WITHOUT a job when possible: the caller's

@@ -23,8 +23,9 @@ def test_property_surface_exact():
     # (round 5 adds maintenance_every_n_batches / maintenance_keep_last;
     # knobs no engine code read were removed, 34 → 28; the merge has
     # one copy-on-write formulation, so merge_broadcast_threshold went,
-    # 28 → 27)
-    assert len(EngineConfig.property_names()) == 27
+    # 28 → 27; telemetry is written unbuffered, so metrics_buffer_secs
+    # and metrics_queue_size went, 27 → 25)
+    assert len(EngineConfig.property_names()) == 25
     for must in [
         "binlog_dir", "initial_position", "max_files_per_trigger",
         "n_shards", "table_path", "n_buckets",
@@ -50,8 +51,8 @@ def test_valid_config_passes():
         dict(metrics_granularity="nope"),
         dict(merge_strategy="copy-on-read"),  # not a real strategy
         dict(metrics_level="DETAILED"),  # lower-case names only
-        dict(metrics_buffer_secs=-1),
-        dict(metrics_queue_size=0),
+        dict(n_shards=0),
+        dict(binlog_format="avro"),
     ],
 )
 def test_invalid_configs_raise(over):

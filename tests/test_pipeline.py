@@ -71,6 +71,66 @@ def test_streaming_full_replay_matches_oracle(spark, tmp_path):
     assert (lineage["first_seq"] <= lineage["last_seq"]).all()
 
 
+GRANULARITY_SPEC = SynthSpec(n_conversations=20, turns_per_conv=3, n_shards=3,
+                             seed=5, segments_per_shard=2)
+
+
+def lineage_totals(pipeline):
+    """The committed lineage rows, and per batch their event and
+    dead-letter sums and seq range over every shard."""
+    lin = pipeline.table.read_lineage().toPandas()
+    totals = lin.groupby("batch_id").agg(
+        n_events=("n_events", "sum"),
+        n_dead_letter=("n_dead_letter", "sum"),
+        first_seq=("first_seq", "min"),
+        last_seq=("last_seq", "max"),
+    )
+    return lin, totals.to_dict("index")
+
+
+@pytest.fixture(scope="module")
+def shard_run(spark, tmp_path_factory):
+    """One replay at the default ``shard`` granularity: its binlog, its
+    row count and its per-batch lineage totals."""
+    root = tmp_path_factory.mktemp("granularity")
+    _, expected, _ = make_fixture(str(root / "binlog"), GRANULARITY_SPEC)
+    p = CdcPipeline(spark, cfg_for(root, max_files_per_trigger=2))
+    p.run_once()
+    lin, totals = lineage_totals(p)
+    assert lin["shard"].notna().all() and len(totals) >= 2
+    return str(root / "binlog"), len(expected), totals
+
+
+@pytest.mark.parametrize(
+    "over",
+    [
+        dict(metrics_granularity="stream"),
+        dict(metrics_granularity="global"),
+        dict(metrics_enabled=False),
+    ],
+    ids=["stream", "global", "disabled"],
+)
+def test_metrics_granularity_and_disabled(spark, tmp_path, shard_run, over):
+    """``stream`` and ``global`` commit one lineage row per batch with a
+    null shard and the ``shard`` run's totals; ``metrics_enabled=False``
+    commits no lineage file and builds no emitter."""
+    binlog, n_rows, shard_totals = shard_run
+    p = CdcPipeline(
+        spark, cfg_for(tmp_path, binlog_dir=binlog, max_files_per_trigger=2, **over)
+    )
+    p.run_once()
+    assert p.table.read().count() == n_rows
+    if not p.config.metrics_enabled:
+        assert p.metrics is None
+        assert not p.table.manifest().get("lineage_files")
+        return
+    assert p.metrics is not None
+    lin, totals = lineage_totals(p)
+    assert lin["shard"].isna().all()
+    assert lin["batch_id"].is_unique
+    assert totals == shard_totals
+
+
 def test_crash_and_resume_from_checkpoint(spark, tmp_path):
     _, expected, paths = make_fixture(str(tmp_path / "binlog"), SPEC)
     cfg = cfg_for(tmp_path, max_files_per_trigger=2)

@@ -474,14 +474,16 @@ def test_zero_row_oracles_now_discriminate(spark):
         assert fn(spark, SF_DIR).count() > 0, name
 
 
-# ----------------------------------------------------- buffered metrics
+# ----------------------------------------------------- telemetry metrics
 
 
 def test_metrics_emitter_levels(tmp_path):
     """≙ ReportCloudWatchMetricsLevel NONE/SUMMARY/DETAILED
     (ACP:196-205): none emits nothing, summary one record per batch,
-    detailed adds one per shard slice."""
+    detailed adds one per shard slice — on disk as soon as
+    record_batch returns."""
     import json
+    import os
 
     from nifi_processors_spark.streaming.metrics import MetricsEmitter
 
@@ -493,12 +495,8 @@ def test_metrics_emitter_levels(tmp_path):
     out = {}
     for level in ("none", "summary", "detailed"):
         path = str(tmp_path / f"{level}.jsonl")
-        em = MetricsEmitter(level=level, buffer_secs=0, path=path)
-        em.record_batch(7, stats, shard_rows)
-        em.flush()
+        MetricsEmitter(level=level, path=path).record_batch(7, stats, shard_rows)
         recs = []
-        import os
-
         if os.path.exists(path):
             recs = [json.loads(l) for l in open(path)]
         out[level] = recs
@@ -509,56 +507,41 @@ def test_metrics_emitter_levels(tmp_path):
     assert out["detailed"][2]["max_lag_ms"] == 20
 
 
-def test_metrics_emitter_buffers_by_time_and_bounds_queue(tmp_path):
-    """≙ metric buffering time + bounded publisher queue
-    (ACP:207-224): records buffer until buffer_secs elapses on the
-    injected clock; queue pressure flushes a HEALTHY sink instead of
-    losing records; only a failing sink drops (oldest first, counted)."""
+def test_metrics_failing_sink_counts_drops_then_recovers_in_order(tmp_path):
+    """A failing sink never raises and keeps no record in memory: each
+    failed write adds its batch's records to one drop count. The first
+    good write leads with that count, then the records in call order."""
     import json
 
     from nifi_processors_spark.streaming.metrics import MetricsEmitter
 
-    now = [0.0]
-    path = str(tmp_path / "m.jsonl")
-    em = MetricsEmitter(
-        level="summary", buffer_secs=10, queue_size=3,
-        path=path, clock=lambda: now[0],
-    )
-    for b in range(5):  # healthy sink: overflow flushes, drops nothing
-        em.record_batch(b, {"n_upserts": b})
+    blocker = tmp_path / "blocker"
+    blocker.write_text("")  # a file where the sink's directory should be
+    em = MetricsEmitter(level="detailed", path=str(blocker / "m.jsonl"))
+    shard_rows = [{"shard": 0, "n_events": 1}, {"shard": 1, "n_events": 2}]
+    for b in range(3):
+        em.record_batch(b, {"n_upserts": b}, shard_rows)
+    assert vars(em) == {
+        "level": "detailed", "path": em.path, "namespace": "cdc", "_dropped": 9,
+    }
+
+    good = tmp_path / "m.jsonl"
+    em.path = str(good)  # the sink recovers
+    for b in (3, 4):
+        em.record_batch(b, {"n_upserts": b}, shard_rows)
+    recs = [json.loads(l) for l in open(good)]
+    assert recs[0] == {"ns": "cdc", "kind": "dropped", "count": 9}
+    assert [(r["kind"], r["batch_id"]) for r in recs[1:]] == [
+        (k, b) for b in (3, 4) for k in ("batch", "shard", "shard")
+    ]
     assert em._dropped == 0
-    em.flush()
-    recs = [json.loads(l) for l in open(path)]
-    assert [r["batch_id"] for r in recs] == [0, 1, 2, 3, 4]
-    assert em.flushes >= 2, "queue pressure flushed before buffer_secs"
-
-    # failing sink (unwritable path): overflow must drop OLDEST and
-    # count the loss instead of blocking or raising
-    em2 = MetricsEmitter(
-        level="summary", buffer_secs=10, queue_size=3,
-        path="/proc/nonexistent/m.jsonl", clock=lambda: now[0],
-    )
-    for b in range(5):
-        em2.record_batch(b, {"n_upserts": b})
-    assert em2._dropped == 2
-    assert em2._queue[0]["batch_id"] == 2, "drops oldest first"
-
-    # elapsed buffer_secs triggers the flush on the record path
-    em3 = MetricsEmitter(
-        level="summary", buffer_secs=10, queue_size=100,
-        path=path, clock=lambda: now[0],
-    )
-    em3.record_batch(0, {"n_upserts": 0})
-    assert em3.flushes == 0, "nothing flushes before buffer_secs"
-    now[0] = 10.0
-    em3.record_batch(1, {"n_upserts": 1})
-    assert em3.flushes == 1, "elapsed buffer_secs triggers the flush"
 
 
 def test_pipeline_emits_buffered_metrics(spark, tmp_path):
     """End-to-end: a replayed binlog produces detailed shard records
-    whose totals equal the committed batch stats, and run_once flushes
-    the buffer on shutdown (≙ flushSync PUT:369-376)."""
+    whose totals equal the committed batch stats, on disk when run_once
+    returns — each batch writes its records after its commit, with no
+    shutdown flush."""
     import json
 
     from nifi_processors_spark.config import EngineConfig
@@ -578,7 +561,6 @@ def test_pipeline_emits_buffered_metrics(spark, tmp_path):
         source_id="em",
         max_files_per_trigger=64,
         metrics_level="detailed",
-        metrics_buffer_secs=3600,  # only the shutdown flush drains it
         metrics_path=mpath,
     )
     p = CdcPipeline(spark, cfg)
@@ -671,24 +653,3 @@ def test_cli_entrypoint_drains_compacts_and_expires(spark, tmp_path, capsys):
     assert {"compact", "expire", "last_batch"} <= keys
     t = TransactionalTable(spark, str(tmp_path / "t"))
     assert t.read().count() == len(expected)
-
-
-def test_metrics_background_timer_drains_idle_stream(tmp_path):
-    """An idle or continuous stream must still drain the buffer: the
-    daemon timer flushes without further record_batch calls (≙ the
-    reference's background CloudWatch publisher)."""
-    import json
-    import time
-
-    from nifi_processors_spark.streaming.metrics import MetricsEmitter
-
-    path = str(tmp_path / "m.jsonl")
-    em = MetricsEmitter(level="summary", buffer_secs=0.2, queue_size=100,
-                        path=path)
-    em.record_batch(0, {"n_upserts": 1})
-    deadline = time.monotonic() + 5
-    while time.monotonic() < deadline and not os.path.exists(path):
-        time.sleep(0.05)
-    recs = [json.loads(l) for l in open(path)]
-    assert recs and recs[0]["batch_id"] == 0
-    em.close()

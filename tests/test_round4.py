@@ -1,10 +1,7 @@
 """Round-4 regression tests: PNG + y4m real codecs, vectorized BMP,
-metrics emitter lock/flush hardening (round-3 ADVICE), staged-pin
-drain via the driver registry, and maintenance-op safety."""
+staged-pin drain via the driver registry, and maintenance-op safety."""
 
 from __future__ import annotations
-
-import json
 
 import numpy as np
 import pytest
@@ -130,69 +127,6 @@ def test_synth_media_covers_four_kinds_and_real_decode(spark):
     assert vids and all(r["n_units"] == r["width"] * r["height"] * (
         2 + r["media_id"] % 3
     ) for r in vids)
-
-
-# --------------------------------------------------------------------------
-# metrics emitter hardening (round-3 ADVICE, all four items)
-# --------------------------------------------------------------------------
-
-def test_metrics_flush_failure_paces_retries_and_requeues():
-    """ADVICE #4: a failing sink advances _last_flush so the record
-    path doesn't pay a filesystem error per micro-batch; the snapshot
-    is re-queued at the FRONT so a recovered sink gets everything in
-    order."""
-    from nifi_processors_spark.streaming.metrics import MetricsEmitter
-
-    now = [0.0]
-    em = MetricsEmitter(
-        level="summary", buffer_secs=10, queue_size=100,
-        path="/proc/nonexistent/m.jsonl", clock=lambda: now[0],
-    )
-    em.record_batch(0, {"n_upserts": 0})
-    now[0] = 10.0
-    em.record_batch(1, {"n_upserts": 1})  # due → flush fails → requeue
-    assert [r["batch_id"] for r in em._queue] == [0, 1]
-    assert em._last_flush == 10.0, "failed flush still paces retries"
-    now[0] = 15.0
-    em.record_batch(2, {"n_upserts": 2})
-    # not due again until 20.0 — the broken sink was NOT retried
-    assert [r["batch_id"] for r in em._queue] == [0, 1, 2]
-
-
-def test_metrics_flush_recovers_in_order(tmp_path):
-    """Records buffered across a sink outage flush in original order
-    once the sink recovers."""
-    from nifi_processors_spark.streaming.metrics import MetricsEmitter
-
-    now = [0.0]
-    path = str(tmp_path / "sub" / "m.jsonl")
-    em = MetricsEmitter(
-        level="summary", buffer_secs=0, queue_size=100,
-        path="/proc/nonexistent/m.jsonl", clock=lambda: now[0],
-    )
-    for b in range(3):
-        em.record_batch(b, {"n_upserts": b})
-    assert len(em._queue) == 3
-    em.path = path  # sink recovers
-    em.record_batch(3, {"n_upserts": 3})
-    recs = [json.loads(line) for line in open(path)]
-    assert [r["batch_id"] for r in recs] == [0, 1, 2, 3]
-
-
-def test_metrics_close_then_record_rearms_under_lock():
-    """ADVICE #1: the closed-flag reset lives under the same lock
-    close() takes; a record after close re-arms cleanly and close is
-    idempotent."""
-    from nifi_processors_spark.streaming.metrics import MetricsEmitter
-
-    em = MetricsEmitter(level="summary", buffer_secs=0.05, path="")
-    em.record_batch(0, {"n_upserts": 0})
-    em.close()
-    assert em._closed and em._timer is None
-    em.record_batch(1, {"n_upserts": 1})
-    assert not em._closed
-    em.close()
-    assert em._closed
 
 
 # --------------------------------------------------------------------------
@@ -339,48 +273,6 @@ def test_bmp_tolerates_missing_final_row_padding():
     assert np.array_equal(decode_bmp(clipped), img)
     with pytest.raises(ValueError):
         decode_bmp(payload[:-5])  # cuts into the last row's pixels
-
-
-def test_metrics_failing_sink_is_paced_and_bounded():
-    """With the sink down and the queue pinned at cap, record_batch
-    must NOT retry the broken sink per batch (pacing by buffer_secs)
-    and must still enforce the bound by shedding oldest, counted."""
-    from nifi_processors_spark.streaming.metrics import MetricsEmitter
-
-    now = [0.0]
-    em = MetricsEmitter(
-        level="summary", buffer_secs=10, queue_size=3,
-        path="/proc/nonexistent/m.jsonl", clock=lambda: now[0],
-    )
-    for b in range(3):
-        em.record_batch(b, {"n_upserts": b})  # pressure → 1 failed flush
-    assert em._sink_failing
-    failed_at = em._last_flush
-    for b in range(3, 8):
-        em.record_batch(b, {"n_upserts": b})
-    # no further flush attempts inside the pacing window
-    assert em._last_flush == failed_at
-    # bound enforced at enqueue: oldest shed, counted
-    assert len(em._queue) == 3
-    assert [r["batch_id"] for r in em._queue] == [5, 6, 7]
-    assert em._dropped == 5
-
-
-def test_metrics_flush_is_single_flight():
-    """A flush racing an in-progress flush returns 0 and leaves its
-    records queued — two threads never interleave sink writes."""
-    from nifi_processors_spark.streaming.metrics import MetricsEmitter
-
-    em = MetricsEmitter(level="summary", buffer_secs=1000, path="")
-    em.record_batch(0, {"n_upserts": 0})
-    with em._lock:
-        em._flushing = True  # simulate an in-flight writer
-    assert em.flush() == 0
-    assert len(em._queue) == 1
-    with em._lock:
-        em._flushing = False
-    assert em.flush() == 1
-    assert not em._queue
 
 
 def test_y4m_c420_roundtrip_and_default_colorspace():
