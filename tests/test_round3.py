@@ -507,34 +507,33 @@ def test_metrics_emitter_levels(tmp_path):
     assert out["detailed"][2]["max_lag_ms"] == 20
 
 
-def test_metrics_failing_sink_counts_drops_then_recovers_in_order(tmp_path):
-    """A failing sink never raises and keeps no record in memory: each
-    failed write adds its batch's records to one drop count. The first
-    good write leads with that count, then the records in call order."""
+def test_metrics_emitter_buffers_by_time_and_bounds_queue(tmp_path):
+    """≙ metric buffering time + bounded publisher queue
+    (ACP:207-224), with a zero buffer time and a queue bound of no
+    records: a healthy sink has every record on disk, in call order,
+    when record_batch returns; a failing sink never raises and keeps
+    no record in memory, only one count of the records it dropped."""
     import json
 
     from nifi_processors_spark.streaming.metrics import MetricsEmitter
 
+    path = tmp_path / "m.jsonl"
+    em = MetricsEmitter(level="summary", path=str(path))
+    for b in range(5):
+        em.record_batch(b, {"n_upserts": b})
+        recs = [json.loads(l) for l in open(path)]
+        assert [r["batch_id"] for r in recs] == list(range(b + 1))
+    assert em._dropped == 0
+
     blocker = tmp_path / "blocker"
     blocker.write_text("")  # a file where the sink's directory should be
-    em = MetricsEmitter(level="detailed", path=str(blocker / "m.jsonl"))
+    em2 = MetricsEmitter(level="detailed", path=str(blocker / "m.jsonl"))
     shard_rows = [{"shard": 0, "n_events": 1}, {"shard": 1, "n_events": 2}]
     for b in range(3):
-        em.record_batch(b, {"n_upserts": b}, shard_rows)
-    assert vars(em) == {
-        "level": "detailed", "path": em.path, "namespace": "cdc", "_dropped": 9,
+        em2.record_batch(b, {"n_upserts": b}, shard_rows)
+    assert vars(em2) == {
+        "level": "detailed", "path": em2.path, "namespace": "cdc", "_dropped": 9,
     }
-
-    good = tmp_path / "m.jsonl"
-    em.path = str(good)  # the sink recovers
-    for b in (3, 4):
-        em.record_batch(b, {"n_upserts": b}, shard_rows)
-    recs = [json.loads(l) for l in open(good)]
-    assert recs[0] == {"ns": "cdc", "kind": "dropped", "count": 9}
-    assert [(r["kind"], r["batch_id"]) for r in recs[1:]] == [
-        (k, b) for b in (3, 4) for k in ("batch", "shard", "shard")
-    ]
-    assert em._dropped == 0
 
 
 def test_pipeline_emits_buffered_metrics(spark, tmp_path):

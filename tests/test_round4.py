@@ -1,7 +1,9 @@
 """Round-4 regression tests: PNG + y4m real codecs, vectorized BMP,
-staged-pin drain via the driver registry, and maintenance-op safety."""
+metrics recovery after a sink outage, staged-pin drain via the driver registry, and maintenance-op safety."""
 
 from __future__ import annotations
+
+import json
 
 import numpy as np
 import pytest
@@ -127,6 +129,36 @@ def test_synth_media_covers_four_kinds_and_real_decode(spark):
     assert vids and all(r["n_units"] == r["width"] * r["height"] * (
         2 + r["media_id"] % 3
     ) for r in vids)
+
+
+# --------------------------------------------------------------------------
+# metrics emitter
+# --------------------------------------------------------------------------
+
+def test_metrics_flush_recovers_in_order(tmp_path):
+    """Records written across a sink outage: the first good write
+    leads with the count of the records the outage dropped, then the
+    new records in call order."""
+    from nifi_processors_spark.streaming.metrics import MetricsEmitter
+
+    blocker = tmp_path / "blocker"
+    blocker.write_text("")  # a file where the sink's directory should be
+    em = MetricsEmitter(level="detailed", path=str(blocker / "m.jsonl"))
+    shard_rows = [{"shard": 0, "n_events": 1}, {"shard": 1, "n_events": 2}]
+    for b in range(3):
+        em.record_batch(b, {"n_upserts": b}, shard_rows)
+    assert em._dropped == 9
+
+    good = tmp_path / "sub" / "m.jsonl"
+    em.path = str(good)  # the sink recovers
+    for b in (3, 4):
+        em.record_batch(b, {"n_upserts": b}, shard_rows)
+    recs = [json.loads(line) for line in open(good)]
+    assert recs[0] == {"ns": "cdc", "kind": "dropped", "count": 9}
+    assert [(r["kind"], r["batch_id"]) for r in recs[1:]] == [
+        (k, b) for b in (3, 4) for k in ("batch", "shard", "shard")
+    ]
+    assert em._dropped == 0
 
 
 # --------------------------------------------------------------------------
